@@ -91,12 +91,13 @@ def triangles(edges: DataFrame, degree_oriented: bool = True) -> DataFrame:
         tri = _oriented_common_neighbors(edges).select(
             "x", "y", F.explode("_common").alias("z")
         )
-        lo = F.least("x", "y", "z")
-        hi = F.greatest("x", "y", "z")
+        # median of three from pairwise least/greatest: no arithmetic, so
+        # ids near the int64 limit cannot overflow
+        xy_lo, xy_hi = F.least("x", "y"), F.greatest("x", "y")
         return tri.select(
-            lo.alias("a"),
-            (F.col("x") + F.col("y") + F.col("z") - lo - hi).alias("b"),
-            hi.alias("c"),
+            F.least(xy_lo, "z").alias("a"),
+            F.greatest(xy_lo, F.least(xy_hi, "z")).alias("b"),
+            F.greatest(xy_hi, "z").alias("c"),
         )
     # plain a<b<c join chain
     und = canonical_undirected(edges).persist(StorageLevel.MEMORY_AND_DISK)

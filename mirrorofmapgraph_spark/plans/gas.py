@@ -50,6 +50,7 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -140,11 +141,19 @@ class GASProgram:
     gather_dir: str = "in"
     #: pull mode, optional: predicate over the applied frame marking
     #: vertices that HAVE outgoing edges along the gather direction (e.g.
-    #: PageRank's out_deg > 0). When set, the all-changed regime test is
-    #: "every sender changed" instead of "every vertex changed" — exact
-    #: (next frontier = all receivers iff all senders changed) and robust
-    #: on real link graphs where dangling vertices stop changing after
-    #: step 1 and would otherwise disable the fast path + fusion forever.
+    #: PageRank's out_deg > 0). When set, the all-changed regime test (the
+    #: next frontier is provably the constant all-receivers set R, so the
+    #: expand + distinct shuffle is skipped) accepts a step when either
+    #: - every sender changed (out(changed) ⊇ out(senders) = R), or
+    #: - every vertex of K changed, where K = senders that are also
+    #:   receivers, provided out(K) == R (a static fact, checked once per
+    #:   graph). The step counts changed vertices that satisfy this
+    #:   predicate AND received a message — a subset of K — so a count
+    #:   >= |K| means K ⊆ changed and out(changed) ⊇ out(K) = R.
+    #: Both forms are exact (every frontier ⊆ R). The second one keeps the
+    #: fast path on real link graphs whose pure sources (out-edges, no
+    #: in-edges) stop changing after step 1; without either, every vertex
+    #: would have to change, and dangling vertices never do.
     has_out_edges: Callable[[DataFrame], Column] | None = None
     #: push mode: which edges frontier vertices expand over — "out"
     #: (default), "in" (reversed), or "all" (BOTH directions of the one
@@ -176,6 +185,11 @@ class SuperstepMetrics:
     edges_traversed: int
     changed: int
     wall_ms: float
+    #: loop branch the step ran in: "all" (gathered over all vertices or
+    #: the constant all-receivers set, no per-step expand unless the test
+    #: fails) or "partial" (exact expand + distinct). "" in manifests
+    #: written before the field existed.
+    regime: str = ""
 
     def as_dict(self) -> dict:
         return self.__dict__.copy()
@@ -494,6 +508,7 @@ class GASEngine:
         self._all_recv = {}
         self._all_recv_count = {}
         self._endpoint_counts_cache = {}
+        self._relays_cover_cache = {}
 
     #: constant all-receivers frontiers per aggregation key ("dst" for
     #: GATHER_IN_EDGES, "src" for GATHER_OUT_EDGES), computed once each
@@ -558,14 +573,21 @@ class GASEngine:
     #: program.has_out_edges (see GASProgram)
     _sender_pred = None
     _n_senders: int | None = None
-    #: (senders, receivers) scalar readbacks per direction key, ONE job
+    #: |K| (senders that are also receivers) when out(K) == R holds for
+    #: the run's direction, else None — set per run() (see _all_changed)
+    _n_relays: int | None = None
+    #: (senders, receivers, relays) scalar readbacks per direction key,
+    #: ONE job
     _endpoint_counts_cache: dict = None
+    #: out(K) == R per direction key, computed once each
+    _relays_cover_cache: dict = None
 
-    def _endpoint_counts(self, dkey: str) -> tuple[int, int]:
-        """(n_senders, n_receivers) of the oriented direction — one
-        aggregation job over the materialized vertex_stats instead of two
+    def _endpoint_counts(self, dkey: str) -> tuple[int, int, int]:
+        """(n_senders, n_receivers, n_relays) of the oriented direction —
+        one aggregation job over the materialized vertex_stats instead of
         separate filtered counts (each scalar readback is a full job; the
-        loop setup pays them serially)."""
+        loop setup pays them serially). Relays are the vertices that both
+        send and receive (the set K of _all_changed)."""
         if self._endpoint_counts_cache is None:
             self._endpoint_counts_cache = {}
         if dkey not in self._endpoint_counts_cache:
@@ -574,35 +596,83 @@ class GASEngine:
                 .agg(
                     F.count_if(F.col("n_src") > 0).alias("s"),
                     F.count_if(F.col("n_dst") > 0).alias("r"),
+                    F.count_if(
+                        (F.col("n_src") > 0) & (F.col("n_dst") > 0)
+                    ).alias("k"),
                 )
                 .first()
             )
-            self._endpoint_counts_cache[dkey] = (int(r["s"]), int(r["r"]))
+            self._endpoint_counts_cache[dkey] = (
+                int(r["s"]), int(r["r"]), int(r["k"])
+            )
         return self._endpoint_counts_cache[dkey]
 
-    def _observe_applied(self, applied: DataFrame):
-        """Attach the per-superstep metric observation (changed count,
-        messages, and — when the program declares has_out_edges — the
-        changed-sender count driving the all-changed regime test)."""
-        obs = Observation()
+    def _relays_cover(self, dkey: str) -> bool:
+        """Whether out(K) == R on the oriented frames of ``dkey``: the
+        distinct destinations of the relays' edges are every receiver
+        (out(K) ⊆ R always, so comparing counts suffices). A static fact
+        about the graph — one join + distinct job per direction key."""
+        if self._relays_cover_cache is None:
+            self._relays_cover_cache = {}
+        if dkey not in self._relays_cover_cache:
+            _, n_receivers, n_relays = self._endpoint_counts(dkey)
+            relays = self._hint(
+                self.vertex_stats(dkey)
+                .filter((F.col("n_src") > 0) & (F.col("n_dst") > 0))
+                .select(F.col("id").alias("src")),
+                n_relays,
+            )
+            parts = [
+                e.join(relays, on="src", how="left_semi").select("dst")
+                for e in self._oriented(dkey)
+            ]
+            out = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+            self._relays_cover_cache[dkey] = out.distinct().count() == n_receivers
+        return self._relays_cover_cache[dkey]
+
+    def _obs_exprs(self, applied: DataFrame) -> list[Column]:
+        """Per-superstep metric aggregates over an applied frame: changed
+        count ``ch``, messages ``tr`` and, for the regime test, changed
+        senders ``chs`` (when the program declares has_out_edges) and
+        changed relays ``chk`` (when out(K) == R; see _all_changed)."""
         exprs = [
             F.sum(F.col("_changed").cast("long")).alias("ch"),
             F.sum("_msg_cnt").alias("tr"),
         ]
         if self._sender_pred is not None:
-            exprs.append(
-                F.sum(
-                    (F.col("_changed") & self._sender_pred(applied)).cast("long")
-                ).alias("chs")
-            )
-        return applied.observe(obs, *exprs), obs
+            changed_sender = F.col("_changed") & self._sender_pred(applied)
+            exprs.append(F.sum(changed_sender.cast("long")).alias("chs"))
+            if self._n_relays is not None:
+                exprs.append(
+                    F.sum(
+                        (changed_sender & (F.col("_msg_cnt") > 0)).cast("long")
+                    ).alias("chk")
+                )
+        return exprs
+
+    def _observe_applied(self, applied: DataFrame):
+        """Attach the per-superstep metric observation (see _obs_exprs)."""
+        obs = Observation()
+        return applied.observe(obs, *self._obs_exprs(applied)), obs
 
     def _all_changed(self, row: dict) -> bool:
-        """All-changed regime: next frontier provably equals the constant
-        all-receivers set. Exact form: every sender changed (needs the
-        program's has_out_edges predicate); fallback: every vertex changed."""
-        if self._n_senders is not None and "chs" in row:
-            return int(row["chs"] or 0) >= self._n_senders
+        """All-changed regime: the next frontier provably equals the
+        constant all-receivers set R, so the expand + distinct is skipped.
+
+        With the program's has_out_edges predicate the test is
+        ``chs >= n_senders or (covers and chk >= k)``:
+        - chs counts changed senders; all of them changing gives
+          out(changed) ⊇ out(senders) = R;
+        - K = senders that are also receivers, k = |K|, covers = out(K)
+          == R. chk counts changed vertices with out-edges that received
+          a message this step — a subset of K — so chk >= k means K ⊆
+          changed and out(changed) ⊇ out(K) = R.
+        Every frontier ⊆ R, so either way the next frontier is exactly R.
+        Without the predicate: every vertex changed."""
+        if self._n_senders is not None:
+            if int(row["chs"] or 0) >= self._n_senders:
+                return True
+            return self._n_relays is not None and int(row["chk"] or 0) >= self._n_relays
         return int(row["ch"] or 0) >= self._n_vertices
 
     def _all_receivers(self, dkey: str) -> DataFrame:
@@ -793,9 +863,16 @@ class GASEngine:
         self._sender_pred = (
             program.has_out_edges if program.mode == "pull" else None
         )
-        self._n_senders = None
+        self._n_senders = self._n_relays = None
         if self._sender_pred is not None:
-            self._n_senders = self._endpoint_counts(self._dir_key(program))[0]
+            dkey = self._dir_key(program)
+            n_senders, _, n_relays = self._endpoint_counts(dkey)
+            self._n_senders = n_senders
+            # pure sources exist (k < n_senders), so "every sender changed"
+            # may never hold; the relay form needs out(K) == R, checked
+            # once per graph and direction
+            if 0 < n_relays < n_senders and self._relays_cover(dkey):
+                self._n_relays = n_relays
 
         step = start_step
         stale: list[DataFrame] = []  # persisted frames to release (t-2)
@@ -911,7 +988,10 @@ class GASEngine:
             # else it is discarded unexecuted. Two job shapes by regime:
             vertices = applied.drop("_changed", "_msg_cnt")
             mat_err: list[BaseException] = []
-            if program.mode == "pull" and prev_changed_all:
+            regime = (
+                "all" if program.mode == "pull" and prev_changed_all else "partial"
+            )
+            if regime == "all":
                 # ALL-CHANGED regime: the metrics ride the checkpoint
                 # materialization (one count job over the observed
                 # checkpoint scan — the same observation trigger the
@@ -928,16 +1008,21 @@ class GASEngine:
 
                 mat = InheritableThread(target=_materialize, daemon=True)
                 mat.start()
-                dkey = self._dir_key(program)
-                all_recv = self._all_receivers(dkey)
-                cand = None
-                if step + 1 < max_iter:
-                    cand = _cut_observe(
-                        superstep_fn(
-                            program, vertices, all_recv, self._all_recv_count[dkey]
+                # join in a finally: a raising speculative build must not
+                # leave the materializing job running behind the caller
+                try:
+                    dkey = self._dir_key(program)
+                    all_recv = self._all_receivers(dkey)
+                    cand = None
+                    if step + 1 < max_iter:
+                        cand = _cut_observe(
+                            superstep_fn(
+                                program, vertices, all_recv,
+                                self._all_recv_count[dkey],
+                            )
                         )
-                    )
-                mat.join()
+                finally:
+                    mat.join()
                 if mat_err:
                     raise mat_err[0]
                 row = self._read_observation(obs, applied)
@@ -978,10 +1063,12 @@ class GASEngine:
 
                 mat = InheritableThread(target=_count_frontier, daemon=True)
                 mat.start()
-                cand = None
-                if step + 1 < max_iter:
-                    cand = superstep_fn(program, vertices, frontier, est_fs)
-                mat.join()
+                try:
+                    cand = None
+                    if step + 1 < max_iter:
+                        cand = superstep_fn(program, vertices, frontier, est_fs)
+                finally:
+                    mat.join()
                 if mat_err:
                     raise mat_err[0]
                 frontier_size = cnt_out[0]  # one job: state+frontier
@@ -996,12 +1083,15 @@ class GASEngine:
             step += 1
             wall_ms = (time.monotonic() - t0) * 1000.0
             metrics.append(
-                SuperstepMetrics(step, frontier_size, traversed, changed_n, wall_ms)
+                SuperstepMetrics(
+                    step, frontier_size, traversed, changed_n, wall_ms, regime
+                )
             )
             if os.environ.get("MOMG_GAS_DEBUG"):
                 print(
-                    f"[gas:{program.name}] step={step} frontier={frontier_size} "
-                    f"traversed={traversed} changed={changed_n} ms={wall_ms:.0f}",
+                    f"[gas:{program.name}] step={step} regime={regime} "
+                    f"frontier={frontier_size} traversed={traversed} "
+                    f"changed={changed_n} ms={wall_ms:.0f}",
                     flush=True,
                 )
             # release frontier frames two generations back
@@ -1098,13 +1188,13 @@ class GASEngine:
             metrics.append(
                 SuperstepMetrics(
                     step0 + i + 1, fsz, int(rows[i]["tr"] or 0), changed[i],
-                    wall_ms / k,
+                    wall_ms / k, "all",
                 )
             )
         if os.environ.get("MOMG_GAS_DEBUG"):
             print(
                 f"[gas:{program.name}] fused block steps={step0 + 1}..{step0 + k} "
-                f"changed={changed} ms={wall_ms:.0f}",
+                f"regime=all changed={changed} ms={wall_ms:.0f}",
                 flush=True,
             )
         return new_vertices, next_frontier, next_size, k, last_all
@@ -1114,31 +1204,31 @@ class GASEngine:
     ) -> dict | None:
         """Read the per-superstep metrics with a bounded wait.
 
-        The observation normally fires with the eager ``localCheckpoint``
-        that just materialized the superstep (verified on the pinned Spark
-        4.1.2, where localCheckpoint posts a query-execution event), so
-        ``obs.get`` returns immediately. But ``obs.get`` blocks with no
-        timeout — if a future Spark stopped surfacing localCheckpoint to
-        listeners, every superstep would hang silently. Defensive contract:
-        wait up to 30 s on a daemon thread, then fall back to one explicit
-        aggregate over the already-checkpointed frame (cheap: the RDD is
-        materialized; same values)."""
-        import threading
-
-        holder: dict = {}
-        t = threading.Thread(target=lambda: holder.update(obs.get), daemon=True)
-        t.start()
-        t.join(timeout=30.0)
-        if holder:
-            return holder
+        The observation has normally fired by the time the materializing
+        job returns, so the completed-future check below passes at once
+        and ``obs.get`` returns without blocking; about one step in eight
+        waits a few ms more for the asynchronous listener bus (measured
+        on the pinned Spark 4.1.2). ``obs.get`` itself blocks with no
+        timeout — if a future Spark stopped surfacing the job to
+        listeners, every superstep would hang silently. Defensive
+        contract: wait on the JVM future for up to 30 s on this thread,
+        then fall back to one explicit aggregate over the
+        already-checkpointed frame (cheap: the RDD is materialized; same
+        values)."""
+        fut = obs._jo.future()  # noqa: SLF001
+        if not fut.isCompleted():
+            jvm = self.spark._jvm
+            try:
+                jvm.scala.concurrent.Await.ready(
+                    fut, jvm.scala.concurrent.duration.Duration.apply(30, "s")
+                )
+            except Py4JJavaError:  # TimeoutException: it never fired
+                pass
+        if fut.isCompleted():
+            return obs.get
         if applied_ck is None:
             return None  # fused-block caller treats missing metrics as invalid
-        # the daemon thread stays parked on obs.get (harmless); recompute
-        agg = applied_ck.agg(
-            F.sum(F.col("_changed").cast("long")).alias("ch"),
-            F.sum("_msg_cnt").alias("tr"),
-        ).collect()[0]
-        return {"ch": agg["ch"], "tr": agg["tr"]}
+        return applied_ck.agg(*self._obs_exprs(applied_ck)).collect()[0].asDict()
 
     # frontier-side hint: broadcast small frontiers (reference two-phase /
     # dynamic strategy switch, enactor_vertex_centric.cuh:2694-2702).

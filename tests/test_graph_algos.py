@@ -153,6 +153,15 @@ def test_triangles_random(spark, make_edges):
     check_triangles(spark, make_edges, random_graph(n=60, m=500, seed=13), 60)
 
 
+def test_triangles_ids_near_int64_limit(spark, make_edges):
+    """Ids near 2^62, whose three-way sum overflows int64, still come out
+    as one sorted (a, b, c) row."""
+    b = 2**62
+    edges = [(b, b + 1, 1.0), (b + 1, b + 2, 1.0), (b + 2, b, 1.0), (b + 2, b + 3, 1.0)]
+    tri = triangles(canonicalize(make_edges(edges))).collect()
+    assert {(r["a"], r["b"], r["c"]) for r in tri} == {(b, b + 1, b + 2)}
+
+
 # ---- multi-source + random-source harness (reference bfs.cu:340-397) -------
 
 def test_bfs_random_sources_harness(spark, make_edges, make_vertices):

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import math
 import random
+import threading
+from collections import defaultdict
 
 import pytest
 
@@ -203,3 +205,115 @@ def test_speculative_pack_equivalence_across_plan_regimes(spark, make_edges):
     assert set(out[0][2]) == set(out[1_000_000][2])
     for i, v in out[0][2].items():
         assert v == out[1_000_000][2][i], (i, v, out[1_000_000][2][i])
+
+
+def frontier_trace(n, edges, tol, damping, max_iter=100):
+    """Replay pagerank_ref's frontier rule one superstep at a time.
+
+    Returns one (next frontier size, in-edges of the frontier, changed
+    set) tuple per superstep: the size of the frontier the step produces
+    (the engine's ``frontier_size``) and the in-edges its frontier gathers
+    over (the engine's ``edges_traversed``)."""
+    out_nbrs, in_nbrs = defaultdict(list), defaultdict(list)
+    for s, d, _w in edges:
+        out_nbrs[s].append(d)
+        in_nbrs[d].append(s)
+    base = 1.0 - damping
+    rank = [base] * n
+    frontier = set(range(n))
+    steps = []
+    while frontier and len(steps) < max_iter:
+        new_rank = list(rank)
+        changed = set()
+        for v in frontier:
+            nv = base + damping * sum(rank[u] / len(out_nbrs[u]) for u in in_nbrs[v])
+            new_rank[v] = nv
+            if abs(nv - rank[v]) >= tol:
+                changed.add(v)
+        traversed = sum(len(in_nbrs[v]) for v in frontier)
+        rank = new_rank
+        frontier = {d for v in changed for d in out_nbrs[v]}
+        steps.append((len(frontier), traversed, changed))
+    return steps
+
+
+def assert_matches_trace(res, trace):
+    assert res.supersteps == len(trace)
+    assert [m.frontier_size for m in res.metrics] == [t[0] for t in trace]
+    assert [m.edges_traversed for m in res.metrics] == [t[1] for t in trace]
+
+
+def test_pure_sources_take_all_receivers_path(spark, make_edges, make_vertices):
+    """Pure sources (out-edges, no in-edges) never change, so "every
+    sender changed" never holds. Here K = senders that also receive =
+    {2, 3, 4, 5} and out(K) = {2..6} = all receivers, so a step that
+    changes all of K provably makes the next frontier every receiver:
+    the all-receivers branch must run until the tail, with per-step
+    frontiers and traversals identical to the oracle's rule."""
+    # pure sources 0, 1 feed the cycle 2->3->4->5->2; sink 6 hangs off 4
+    edges = [(0, 2, 1.0), (1, 3, 1.0), (2, 3, 1.0), (3, 4, 1.0), (4, 5, 1.0),
+             (5, 2, 1.0), (4, 6, 1.0)]
+    res, ref_iters = run_and_compare(
+        spark, make_edges, make_vertices, edges, 7, tol=1e-4, damping=0.5
+    )
+    trace = frontier_trace(7, edges, tol=1e-4, damping=0.5)
+    assert res.converged and res.supersteps == ref_iters
+    assert_matches_trace(res, trace)
+    relays = {2, 3, 4, 5}
+    want = ["all"] + [
+        "all" if relays <= changed else "partial" for _f, _t, changed in trace[:-1]
+    ]
+    assert [m.regime for m in res.metrics] == want
+    assert want[:4] == ["all"] * 4  # the fast path holds past step 1
+
+
+def test_relays_not_covering_receivers_stay_exact(spark, make_edges, make_vertices):
+    """Counter-example to dropping the out(K) == R check: p->x, x->a,
+    a->b, b->a. K = {x, a, b} all change on step 1, but x's only
+    in-neighbor is the pure source p, so the next frontier is {a, b},
+    not every receiver."""
+    edges = [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0), (3, 2, 1.0)]
+    res, ref_iters = run_and_compare(
+        spark, make_edges, make_vertices, edges, 4, tol=1e-4, damping=0.5
+    )
+    trace = frontier_trace(4, edges, tol=1e-4, damping=0.5)
+    assert res.converged and res.supersteps == ref_iters
+    assert trace[0][0] == 2
+    assert_matches_trace(res, trace)
+    assert res.metrics[1].regime == "partial"
+
+
+@pytest.mark.parametrize("algo", ["pagerank", "cc"])
+def test_failing_speculative_build_joins_materializer(spark, make_edges, algo):
+    """The next superstep is built on the driver while a background thread
+    materializes the current one. When that build raises, the thread is
+    joined before the error reaches the caller — in the all-changed
+    branch (pagerank) and the partial branch (push-mode cc) alike."""
+    from pyspark.util import InheritableThread
+
+    from mirrorofmapgraph_spark.operators.cc import connected_components
+    from mirrorofmapgraph_spark.plans.gas import GASEngine
+
+    e = make_edges(MULTI)
+    eng = GASEngine(spark, e)
+    name = "_superstep_pull" if algo == "pagerank" else "_superstep_push"
+    build = getattr(eng, name)
+    calls = []
+
+    def failing_second_build(*args):
+        calls.append(1)
+        if len(calls) == 2:  # step 1's speculative build of step 2
+            raise RuntimeError("speculative build failed")
+        return build(*args)
+
+    setattr(eng, name, failing_second_build)
+    with pytest.raises(RuntimeError, match="speculative build failed"):
+        if algo == "pagerank":
+            pagerank(spark, e, damping=0.5, engine=eng)
+        else:
+            connected_components(spark, e, engine=eng)
+    alive = [
+        t for t in threading.enumerate()
+        if isinstance(t, InheritableThread) and t.is_alive()
+    ]
+    assert not alive, alive

@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.gas import GASEngine, GASProgram, GASResult
-from ..sources.edges import vertex_frame
 
 
 def cc_program(expand_dir: str = "all") -> GASProgram:
@@ -75,16 +74,13 @@ def connected_components(
             # Pass dual_index=False to trade back at memory-bound scale.
             engine_kwargs.setdefault("dual_index", True)
         engine = GASEngine(spark, edges, **engine_kwargs)
-        # setup frames derive from the engine's one endpoint-stats
+    if vertices is None:
+        # the vertex set comes from the engine's one endpoint-stats
         # aggregation (see GASEngine.vertex_stats) instead of a separate
         # vertex_frame distinct over the raw lineage
-        edges = engine.edges_partitioned("src")
-        if vertices is None:
-            vertices = engine.vertex_stats(
-                "fwd" if pre_symmetrized else "both"
-            ).select("id")
-    if vertices is None:
-        vertices = vertex_frame(edges)
+        vertices = engine.vertex_stats(
+            "fwd" if pre_symmetrized else "both"
+        ).select("id")
     v0 = vertices.select("id", F.col("id").alias("label"))
     frontier0 = vertices.select("id")  # srcVertex() == ALL (cc.h:68-71)
     return engine.run(

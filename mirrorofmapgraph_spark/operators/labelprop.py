@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.gas import GASEngine, GASProgram, GASResult
-from ..sources.edges import canonical_undirected, vertex_frame
+from ..sources.edges import canonical_undirected
 
 
 def _mode_aggregate(msgs: DataFrame) -> DataFrame:
@@ -111,16 +111,13 @@ def label_propagation(
         engine = GASEngine(
             spark, und, num_partitions=num_partitions, **engine_kwargs
         )
-        # setup frames derive from the engine's one endpoint-stats
+    if vertices is None:
+        # the vertex set comes from the engine's one endpoint-stats
         # aggregation (see GASEngine.vertex_stats) instead of a separate
         # vertex_frame distinct re-running the canonical-undirected build
-        und = engine.edges_partitioned("src")
-        if vertices is None:
-            vertices = engine.vertex_stats(
-                "both" if prog_dir == "all" else "fwd"
-            ).select("id")
-    if vertices is None:
-        vertices = vertex_frame(und)
+        vertices = engine.vertex_stats(
+            "both" if prog_dir == "all" else "fwd"
+        ).select("id")
     prog = labelprop_program()
     prog.gather_dir = prog_dir
     v0 = vertices.select("id", F.col("id").alias("label"))

@@ -20,7 +20,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.gas import GASEngine, GASProgram, GASResult
-from ..sources.edges import out_degrees, vertex_frame
+
+
+def _seed_stats(engine: GASEngine, vertices: DataFrame | None) -> DataFrame:
+    """Setup frame for the PageRank family: (id, n_src, n_dst[, w_src])
+    from the engine's ONE materialized endpoint-stats aggregation over
+    the forward table (vertex set and out-degrees in a single shuffle,
+    shared with the engine's all-receivers/sender counts) instead of
+    separate vertex_frame/out_degrees shuffles over the raw lineage —
+    measured ~8 s of pre-loop jobs at sf0.1. A caller's ``vertices``
+    frame is left-joined onto the stats, so its vertices without edges
+    get zero counts."""
+    stats = engine.vertex_stats("fwd")
+    if vertices is None:
+        return stats
+    return vertices.select("id").join(stats, on="id", how="left").select(
+        "id",
+        *(F.coalesce(F.col(c), F.lit(0)).alias(c) for c in stats.columns[1:]),
+    )
 
 
 def pagerank_program(damping: float = 0.85, tol: float = 1e-6) -> GASProgram:
@@ -46,7 +63,7 @@ def pagerank_program(damping: float = 0.85, tol: float = 1e-6) -> GASProgram:
         & (F.abs(F.col("_new_rank") - F.col("rank")) >= F.lit(tol)),
         # all-changed regime test = "every vertex WITH out-edges changed"
         # (dangling vertices freeze after step 1 on real link graphs and
-        # must not disable the all-receivers fast path / superstep fusion)
+        # must not disable the all-receivers fast path)
         has_out_edges=lambda df: F.col("out_deg") > 0,
     )
 
@@ -101,35 +118,25 @@ def personalized_pagerank(
     The source set rides as a broadcast-joined indicator column, so the
     big vertex frame is touched once — no driver-side membership test.
     """
-    stats = None
     if engine is None:
         engine = GASEngine(spark, edges, **engine_kwargs)
-        edges = engine.edges_partitioned("src")  # see pagerank(): one scan
-        stats = engine.vertex_stats("fwd")
     if isinstance(sources, DataFrame):
         src_df = sources.select(F.col(sources.columns[0]).alias("id")).dropDuplicates()
     else:
         ids = [sources] if not isinstance(sources, (list, tuple)) else list(sources)
         src_df = spark.createDataFrame([(int(i),) for i in ids], "id long").dropDuplicates()
     base = 1.0 - damping
-    if vertices is None and stats is not None:
-        vd = stats.select("id", F.col("n_src").cast("long").alias("out_deg"))
-    else:
-        if vertices is None:
-            vertices = vertex_frame(edges)
-        vd = vertices.join(out_degrees(edges), on="id", how="left").select(
-            "id", F.coalesce(F.col("out_deg"), F.lit(0)).cast("long").alias("out_deg")
-        )
+    stats = _seed_stats(engine, vertices)
     v0 = (
-        vd.join(F.broadcast(src_df.withColumn("_is_src", F.lit(1.0))), "id", "left")
+        stats.join(F.broadcast(src_df.withColumn("_is_src", F.lit(1.0))), "id", "left")
         .select(
             "id",
             (F.lit(base) * F.coalesce("_is_src", F.lit(0.0))).alias("rank"),
-            "out_deg",
+            F.col("n_src").cast("long").alias("out_deg"),
             F.coalesce("_is_src", F.lit(0.0)).alias("src_w"),
         )
     )
-    frontier0 = vd.select("id")
+    frontier0 = stats.select("id")
     prog = personalized_pagerank_program(damping=damping, tol=tol)
     return engine.run(prog, v0, frontier0, max_iter=max_iter)
 
@@ -153,36 +160,15 @@ def pagerank(
     base 0.15, as in the reference where every allocated vertex holds
     rank even if degree 0).
     """
-    stats = None
     if engine is None:
         engine = GASEngine(spark, edges, **engine_kwargs)
-        # Setup frames derive from the engine's ONE materialized
-        # endpoint-stats aggregation (vertex set + out-degrees in a single
-        # shuffle, shared with the engine's all-receivers/sender counts)
-        # instead of separate vertex_frame/out_degrees shuffles over the
-        # raw lineage — measured ~8 s of pre-loop jobs at sf0.1.
-        edges = engine.edges_partitioned("src")
-        stats = engine.vertex_stats("fwd")
-    if vertices is None and stats is not None:
-        v0 = stats.select(
-            "id",
-            F.lit(1.0 - damping).alias("rank"),
-            F.col("n_src").cast("long").alias("out_deg"),
-        )
-        frontier0 = stats.select("id")  # srcVertex() == ALL (PageRank.h:192-195)
-    else:
-        if vertices is None:
-            vertices = vertex_frame(edges)
-        deg = out_degrees(edges)
-        v0 = (
-            vertices.join(deg, on="id", how="left")
-            .select(
-                "id",
-                F.lit(1.0 - damping).alias("rank"),
-                F.coalesce(F.col("out_deg"), F.lit(0)).cast("long").alias("out_deg"),
-            )
-        )
-        frontier0 = vertices.select("id")
+    stats = _seed_stats(engine, vertices)
+    v0 = stats.select(
+        "id",
+        F.lit(1.0 - damping).alias("rank"),
+        F.col("n_src").cast("long").alias("out_deg"),
+    )
+    frontier0 = stats.select("id")  # srcVertex() == ALL (PageRank.h:192-195)
     prog = pagerank_program(damping=damping, tol=tol)
     return engine.run(prog, v0, frontier0, max_iter=max_iter, resume=resume)
 
@@ -232,31 +218,14 @@ def weighted_pagerank(
     ``edges`` must carry a double ``w`` column (the repo link graph's
     edge multiplicity / affinity). Zero-total-weight vertices behave like
     dangling vertices (contribute nothing)."""
-    stats = None
     if engine is None:
         engine = GASEngine(spark, edges, **engine_kwargs)
-        edges = engine.edges_partitioned("src")  # see pagerank(): one scan
-        if "w" in edges.columns:
-            stats = engine.vertex_stats("fwd")
-    if vertices is None and stats is not None:
-        v0 = stats.select(
-            "id",
-            F.lit(1.0 - damping).alias("rank"),
-            F.col("w_src").cast("double").alias("wout"),
-        )
-        frontier0 = stats.select("id")
-    else:
-        if vertices is None:
-            vertices = vertex_frame(edges)
-        wdeg = edges.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("wout"))
-        v0 = (
-            vertices.join(wdeg, on="id", how="left")
-            .select(
-                "id",
-                F.lit(1.0 - damping).alias("rank"),
-                F.coalesce(F.col("wout"), F.lit(0.0)).cast("double").alias("wout"),
-            )
-        )
-        frontier0 = vertices.select("id")
+    stats = _seed_stats(engine, vertices)
+    v0 = stats.select(
+        "id",
+        F.lit(1.0 - damping).alias("rank"),
+        F.col("w_src").cast("double").alias("wout"),
+    )
+    frontier0 = stats.select("id")
     prog = weighted_pagerank_program(damping=damping, tol=tol)
     return engine.run(prog, v0, frontier0, max_iter=max_iter, resume=resume)

@@ -45,6 +45,7 @@ covers non-partial-friendly combiners and extreme reduce-side skew.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 from collections.abc import Callable
@@ -57,6 +58,10 @@ from pyspark.storagelevel import StorageLevel
 from pyspark.util import InheritableThread
 
 _RDD_WARN_QUIETED = False
+
+#: one DEBUG record per superstep; its ``gas_step`` attribute holds the
+#: program name and the step's SuperstepMetrics fields
+log = logging.getLogger(__name__)
 
 
 def release_local_checkpoint(spark: SparkSession, df: DataFrame) -> None:
@@ -203,6 +208,27 @@ class GASResult:
     converged: bool = True
 
 
+@dataclass(frozen=True)
+class RunState:
+    """What one ``GASEngine.run`` fixes before its first superstep. Built
+    once per run, after the entry cuts, and passed to the superstep
+    builders and the regime test, so the engine holds only per-graph
+    caches and one engine can run programs one after another."""
+
+    program: GASProgram
+    #: traversal direction key (see GASEngine._dir_key)
+    dkey: str
+    #: rows of the entry vertex frame
+    n_vertices: int
+    #: program.has_out_edges for pull programs, else None
+    sender_pred: Callable[[DataFrame], Column] | None = None
+    #: senders of the direction, set with sender_pred
+    n_senders: int | None = None
+    #: |K| (senders that are also receivers) when out(K) == R holds for
+    #: the direction, else None (see GASEngine._all_changed)
+    n_relays: int | None = None
+
+
 class GASEngine:
     """Superstep driver. One instance per (edges, config); run() per program.
 
@@ -235,7 +261,6 @@ class GASEngine:
         checkpoint_every: int = 0,
         collect_metrics: bool = True,
         num_partitions: int | None = None,
-        fuse_supersteps: int = 1,
         dual_index: bool = False,
     ) -> None:
         self.spark = spark
@@ -244,30 +269,10 @@ class GASEngine:
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = checkpoint_every
         self.collect_metrics = collect_metrics
-        #: explicit num_partitions pins the loop partitioning; None defers
-        #: to _ensure_partitions (edge-count-based auto-sizing).
+        #: explicit num_partitions pins the loop partitioning; None sizes
+        #: it from the edge count when the first edge copy is persisted
+        #: (see edges_partitioned).
         self.num_partitions = num_partitions
-        #: pull-mode all-changed regime: chain up to this many gather+apply
-        #: supersteps into ONE job (see _run_fused_block). 1 disables —
-        #: the measured default: each chained superstep references the
-        #: previous state subtree twice (gather join + apply join), so the
-        #: logical plan doubles per fused step, and in local mode the
-        #: planning + stage overhead of the 2^k-node plan exceeds the
-        #: per-job fixed cost it amortizes (sf0.1 PageRank: k=3 ran
-        #: ~100-109 s vs ~70-87 s sequential; the round-5 k=2 re-measure
-        #: after the shuffle-alignment + checkpoint-release fixes was a
-        #: wash — min-of-interleaved-reps 46.8 s fused vs 45.2 s
-        #: sequential, identical ranks — because the per-step floor is
-        #: Catalyst planning (~0.3 s toRdd + ~0.2 s plan build per step,
-        #: profiled), which chaining re-plans rather than amortizes). The
-        #: option remains for cluster deployments where driver/scheduler
-        #: round-trips per job dominate; results are exactly equivalent
-        #: either way (validated per-block via observations, tested).
-        #: What DID land from that experiment: the partial-frontier job
-        #: shape in _run_loop (state+frontier+metrics in ONE job) and the
-        #: marker-free pull apply — together -42% jobs per converged run
-        #: (584 -> 341 on the 82-step sf0.01 fixture).
-        self.fuse_supersteps = fuse_supersteps
         #: "both"-direction traversal: False (default) runs the reverse
         #: pass over the SAME src-partitioned copy (persisted once; the
         #: reverse join rides the frontier broadcast, or shuffles edges on
@@ -277,34 +282,17 @@ class GASEngine:
         #: 2x the persisted bytes.
         self.dual_index = dual_index
         self._edges_raw = edges
+        # Per-graph caches, each keyed by direction key and computed once
+        # (per-run facts live in RunState instead):
         self._edges_by: dict[str, DataFrame] = {}
-
-    def _ensure_partitions(self) -> int:
-        """Auto-size the loop's partition count on first use: ~500k edges
-        per partition, clamped to [4, spark.sql.shuffle.partitions]. A
-        76-superstep loop at 32 partitions on a 0.6M-edge graph spends
-        more wall on task scheduling than on data (measured 71.5s -> 55.6s
-        at 8 partitions, sf0.1; floor 8 -> 4 re-measured this round as a
-        further 13.99 -> 13.17 s interleaved min — the floor only binds
-        graphs under 2M edges, where per-step task count IS the wall; at
-        cluster scale the size-derived term and the configured
-        shuffle-partition ceiling govern). One extra edge-count scan,
-        amortized over the whole iterative run; pass ``num_partitions``
-        explicitly to skip it."""
-        if self.num_partitions is None:
-            cap = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-            # Prefer counting an already-persisted copy (columnar cache scan)
-            # over re-executing the raw lineage — callers normally reach
-            # this through edges_partitioned(), whose bootstrap both
-            # materializes and counts in one pass (see there).
-            src = (
-                next(iter(self._edges_by.values()))
-                if self._edges_by
-                else self._edges_raw
-            )
-            m = src.count()
-            self.num_partitions = max(4, min(cap, -(-m // 500_000)))
-        return self.num_partitions
+        #: endpoint statistics (see vertex_stats)
+        self._vstats: dict[str, DataFrame] = {}
+        #: constant all-receivers frontiers (see _all_receivers)
+        self._all_recv: dict[str, DataFrame] = {}
+        #: (senders, receivers, relays) scalar readbacks, ONE job each
+        self._endpoint_counts_cache: dict[str, tuple[int, int, int]] = {}
+        #: out(K) == R (see _relays_cover)
+        self._relays_cover_cache: dict[str, bool] = {}
 
     # -- lineage + statistics cut (the ping-pong buffer swap) ---------------
 
@@ -400,6 +388,16 @@ class GASEngine:
         superstep wall at sf0.1 (264 -> 333 ms). The columnar cache wins."""
         if key not in self._edges_by:
             if self.num_partitions is None:
+                # Auto-size the loop's partition count: ~500k edges per
+                # partition, clamped to [4, spark.sql.shuffle.partitions].
+                # A 76-superstep loop at 32 partitions on a 0.6M-edge graph
+                # spends more wall on task scheduling than on data
+                # (measured 71.5s -> 55.6s at 8 partitions, sf0.1; floor
+                # 8 -> 4 re-measured as a further 13.99 -> 13.17 s
+                # interleaved min — the floor only binds graphs under 2M
+                # edges, where per-step task count IS the wall; at cluster
+                # scale the size-derived term and the configured
+                # shuffle-partition ceiling govern).
                 # Bootstrap: the auto-sizer needs the edge count, but
                 # counting the RAW frame re-executes its whole lineage
                 # (entry edge tables are scan+distinct subtrees — measured
@@ -445,7 +443,7 @@ class GASEngine:
                     else self._edges_raw
                 )
                 df = src_df.repartition(
-                    self._ensure_partitions(), F.col(key)
+                    self.num_partitions, F.col(key)
                 ).persist(StorageLevel.MEMORY_AND_DISK)
             self._edges_by[key] = df
         return self._edges_by[key]
@@ -501,22 +499,12 @@ class GASEngine:
         for df in self._edges_by.values():
             df.unpersist()
         self._edges_by.clear()
-        if self._vstats:
-            for df in self._vstats.values():
-                self._release_cut(df)
-        self._vstats = {}
-        self._all_recv = {}
-        self._all_recv_count = {}
-        self._endpoint_counts_cache = {}
-        self._relays_cover_cache = {}
-
-    #: constant all-receivers frontiers per aggregation key ("dst" for
-    #: GATHER_IN_EDGES, "src" for GATHER_OUT_EDGES), computed once each
-    _all_recv: dict = None
-    _all_recv_count: dict = None
-    #: per-direction endpoint statistics, computed once each (see
-    #: vertex_stats)
-    _vstats: dict = None
+        for df in self._vstats.values():
+            self._release_cut(df)
+        self._vstats.clear()
+        self._all_recv.clear()
+        self._endpoint_counts_cache.clear()
+        self._relays_cover_cache.clear()
 
     def vertex_stats(self, dkey: str = "fwd") -> DataFrame:
         """(id, n_src, n_dst[, w_src]) over the oriented frames of ``dkey``,
@@ -530,8 +518,6 @@ class GASEngine:
         same table (measured ~8 s of pre-loop jobs on the sf0.1 converged
         PageRank). Derived views: vertex set = select(id); receivers =
         filter(n_dst > 0); senders count = filter(n_src > 0).count()."""
-        if self._vstats is None:
-            self._vstats = {}
         if dkey not in self._vstats:
             frames = self._oriented(dkey)
             has_w = "w" in frames[0].columns
@@ -569,18 +555,6 @@ class GASEngine:
             # (endpoint counts, v0) read the materialized blocks.
             self._vstats[dkey] = self._cut(df.groupBy("id").agg(*aggs), eager=False)
         return self._vstats[dkey]
-    #: "all senders changed" regime refinement, set per run() from
-    #: program.has_out_edges (see GASProgram)
-    _sender_pred = None
-    _n_senders: int | None = None
-    #: |K| (senders that are also receivers) when out(K) == R holds for
-    #: the run's direction, else None — set per run() (see _all_changed)
-    _n_relays: int | None = None
-    #: (senders, receivers, relays) scalar readbacks per direction key,
-    #: ONE job
-    _endpoint_counts_cache: dict = None
-    #: out(K) == R per direction key, computed once each
-    _relays_cover_cache: dict = None
 
     def _endpoint_counts(self, dkey: str) -> tuple[int, int, int]:
         """(n_senders, n_receivers, n_relays) of the oriented direction —
@@ -588,8 +562,6 @@ class GASEngine:
         separate filtered counts (each scalar readback is a full job; the
         loop setup pays them serially). Relays are the vertices that both
         send and receive (the set K of _all_changed)."""
-        if self._endpoint_counts_cache is None:
-            self._endpoint_counts_cache = {}
         if dkey not in self._endpoint_counts_cache:
             r = (
                 self.vertex_stats(dkey)
@@ -612,8 +584,6 @@ class GASEngine:
         distinct destinations of the relays' edges are every receiver
         (out(K) ⊆ R always, so comparing counts suffices). A static fact
         about the graph — one join + distinct job per direction key."""
-        if self._relays_cover_cache is None:
-            self._relays_cover_cache = {}
         if dkey not in self._relays_cover_cache:
             _, n_receivers, n_relays = self._endpoint_counts(dkey)
             relays = self._hint(
@@ -630,7 +600,23 @@ class GASEngine:
             self._relays_cover_cache[dkey] = out.distinct().count() == n_receivers
         return self._relays_cover_cache[dkey]
 
-    def _obs_exprs(self, applied: DataFrame) -> list[Column]:
+    def _run_state(self, program: GASProgram, n_vertices: int) -> RunState:
+        """The run's fixed facts. For pull programs with has_out_edges,
+        the regime test's sender count and, when pure sources exist (k <
+        n_senders, so "every sender changed" may never hold), the relay
+        count — only if out(K) == R, checked once per graph and
+        direction."""
+        dkey = self._dir_key(program)
+        if program.mode != "pull" or program.has_out_edges is None:
+            return RunState(program, dkey, n_vertices)
+        n_senders, _, n_relays = self._endpoint_counts(dkey)
+        covers = 0 < n_relays < n_senders and self._relays_cover(dkey)
+        return RunState(
+            program, dkey, n_vertices, program.has_out_edges, n_senders,
+            n_relays if covers else None,
+        )
+
+    def _obs_exprs(self, rs: RunState, applied: DataFrame) -> list[Column]:
         """Per-superstep metric aggregates over an applied frame: changed
         count ``ch``, messages ``tr`` and, for the regime test, changed
         senders ``chs`` (when the program declares has_out_edges) and
@@ -639,10 +625,10 @@ class GASEngine:
             F.sum(F.col("_changed").cast("long")).alias("ch"),
             F.sum("_msg_cnt").alias("tr"),
         ]
-        if self._sender_pred is not None:
-            changed_sender = F.col("_changed") & self._sender_pred(applied)
+        if rs.sender_pred is not None:
+            changed_sender = F.col("_changed") & rs.sender_pred(applied)
             exprs.append(F.sum(changed_sender.cast("long")).alias("chs"))
-            if self._n_relays is not None:
+            if rs.n_relays is not None:
                 exprs.append(
                     F.sum(
                         (changed_sender & (F.col("_msg_cnt") > 0)).cast("long")
@@ -650,12 +636,18 @@ class GASEngine:
                 )
         return exprs
 
-    def _observe_applied(self, applied: DataFrame):
-        """Attach the per-superstep metric observation (see _obs_exprs)."""
+    def _cut_observe(
+        self, rs: RunState, applied: DataFrame
+    ) -> tuple[DataFrame, DataFrame, Observation]:
+        """Lazy lineage cut of an applied plan with the per-superstep
+        metric observation attached (see _obs_exprs): (cut, observed cut,
+        observation). The observed frame's first action materializes the
+        cut and fires the observation."""
+        cut = self._cut(applied, eager=False)
         obs = Observation()
-        return applied.observe(obs, *self._obs_exprs(applied)), obs
+        return cut, cut.observe(obs, *self._obs_exprs(rs, cut)), obs
 
-    def _all_changed(self, row: dict) -> bool:
+    def _all_changed(self, rs: RunState, row: dict) -> bool:
         """All-changed regime: the next frontier provably equals the
         constant all-receivers set R, so the expand + distinct is skipped.
 
@@ -669,23 +661,22 @@ class GASEngine:
           changed and out(changed) ⊇ out(K) = R.
         Every frontier ⊆ R, so either way the next frontier is exactly R.
         Without the predicate: every vertex changed."""
-        if self._n_senders is not None:
-            if int(row["chs"] or 0) >= self._n_senders:
+        if rs.n_senders is not None:
+            if int(row["chs"] or 0) >= rs.n_senders:
                 return True
-            return self._n_relays is not None and int(row["chk"] or 0) >= self._n_relays
-        return int(row["ch"] or 0) >= self._n_vertices
+            return rs.n_relays is not None and int(row["chk"] or 0) >= rs.n_relays
+        return int(row["ch"] or 0) >= rs.n_vertices
 
     def _all_receivers(self, dkey: str) -> DataFrame:
         """Constant frontier 'every vertex that can receive a gather
         message' = ids with n_dst > 0 — a cheap filtered view of the one
-        materialized vertex_stats aggregation (no extra distinct shuffle).
-        Stored once so the regime test's identity check keeps working."""
-        if self._all_recv is None:
-            self._all_recv, self._all_recv_count = {}, {}
+        materialized vertex_stats aggregation (no extra distinct shuffle);
+        its size is ``_endpoint_counts(dkey)[1]``. Stored once so the
+        regime test's identity check keeps working."""
         if dkey not in self._all_recv:
-            df = self.vertex_stats(dkey).filter(F.col("n_dst") > 0).select("id")
-            self._all_recv[dkey] = df
-            self._all_recv_count[dkey] = self._endpoint_counts(dkey)[1]
+            self._all_recv[dkey] = (
+                self.vertex_stats(dkey).filter(F.col("n_dst") > 0).select("id")
+            )
         return self._all_recv[dkey]
 
     # -- checkpoint/resume -------------------------------------------------
@@ -779,15 +770,14 @@ class GASEngine:
         """
         start_step = 0
         metrics: list[SuperstepMetrics] = []
+        on_disk: int | None = None  # last step this run knows is published
         if resume and self.checkpoint_dir:
             ck = self.load_checkpoint(program.name)
             if ck is not None:
                 start_step, vertices, frontier, old_metrics = ck
                 metrics = [SuperstepMetrics(**m) for m in old_metrics]
+                on_disk = start_step
 
-        superstep_fn = (
-            self._superstep_pull if program.mode == "pull" else self._superstep_push
-        )
         # Pre-partition the big side once, before entering the loop (both
         # copies only when the direction needs them AND dual_index opts in).
         self._oriented(self._dir_key(program))
@@ -814,7 +804,7 @@ class GASEngine:
             # 8) — EnsureRequirements then re-shuffles the mismatched side
             # EVERY superstep and every stage schedules 4x the tasks the
             # data needs. Session value restored after the loop.
-            "spark.sql.shuffle.partitions": str(self._ensure_partitions()),
+            "spark.sql.shuffle.partitions": str(self.num_partitions),
             # Constraint propagation is pure per-step planning cost here
             # (SPARK-19846: quadratic in plan width, recomputed every
             # superstep because every superstep is a fresh plan); the loop
@@ -827,53 +817,68 @@ class GASEngine:
             self.spark.conf.set(k, v)
         try:
             return self._run_loop(
-                program, vertices, frontier, superstep_fn, metrics,
-                start_step=start_step, max_iter=max_iter,
+                program, vertices, frontier, metrics,
+                start_step=start_step, max_iter=max_iter, on_disk=on_disk,
             )
         finally:
             for k, v in prev.items():
                 if v is not None:
                     self.spark.conf.set(k, v)
 
+    @staticmethod
+    def _overlap(job: Callable[[], object], build: Callable[[], object]) -> tuple:
+        """Run ``job`` (a superstep's one materializing Spark job) on a
+        background thread while the driver runs ``build`` (the next
+        superstep's speculative plan); returns (job result, build result).
+        The thread is joined in a finally — a raising build must not
+        leave the job running behind the caller — and an error in the job
+        is re-raised after the join."""
+        out: list = []
+        err: list[BaseException] = []
+
+        def _job():
+            try:
+                out.append(job())
+            except BaseException as e:  # re-raised after join
+                err.append(e)
+
+        t = InheritableThread(target=_job, daemon=True)
+        t.start()
+        try:
+            built = build()
+        finally:
+            t.join()
+        if err:
+            raise err[0]
+        return out[0], built
+
     def _run_loop(
         self,
         program: GASProgram,
         vertices: DataFrame,
         frontier: DataFrame,
-        superstep_fn,
         metrics: list[SuperstepMetrics],
         *,
         start_step: int,
         max_iter: int,
+        on_disk: int | None,
     ) -> GASResult:
         # LAZY entry cuts: the two scalar readbacks right below double as
         # the materializing actions, so entry state+frontier cost two jobs
-        # instead of four (eager checkpoint + separate count each).
+        # instead of four (eager checkpoint + separate count each). They
+        # are made here, not in run(), so that nothing outside the loop
+        # holds them: the entry frontier's blocks are freed once the loop
+        # moves on.
         vertices = self._cut(
-            vertices.repartition(self._ensure_partitions(), F.col("id")),
+            vertices.repartition(self.num_partitions, F.col("id")),
             eager=False,
         )
         frontier = self._cut(frontier, eager=False)
         frontier_size = frontier.count()
-        self._n_vertices = vertices.count()
-        # "all senders changed" refinement of the all-changed regime test
-        # (see GASProgram.has_out_edges): count the distinct gather-side
-        # senders once per run (cheap: the edge copy is already partitioned
-        # by that key)
-        self._sender_pred = (
-            program.has_out_edges if program.mode == "pull" else None
+        rs = self._run_state(program, vertices.count())
+        superstep_fn = (
+            self._superstep_pull if program.mode == "pull" else self._superstep_push
         )
-        self._n_senders = self._n_relays = None
-        if self._sender_pred is not None:
-            dkey = self._dir_key(program)
-            n_senders, _, n_relays = self._endpoint_counts(dkey)
-            self._n_senders = n_senders
-            # pure sources exist (k < n_senders), so "every sender changed"
-            # may never hold; the relay form needs out(K) == R, checked
-            # once per graph and direction
-            if 0 < n_relays < n_senders and self._relays_cover(dkey):
-                self._n_relays = n_relays
-
         step = start_step
         stale: list[DataFrame] = []  # persisted frames to release (t-2)
         # superseded per-step state checkpoints to release (only frames the
@@ -882,94 +887,36 @@ class GASEngine:
         # localCheckpoint accumulates in the block manager for the whole
         # run — measured as a per-step wall creep from ~0.7 s to ~2-3 s by
         # step 70 of a 76-superstep converged PageRank.
-        prev_state: DataFrame | None = vertices
-        # Optional superstep fusion (pull mode, all-changed regime): once a
-        # sequential superstep reports all senders changed, chain the next
-        # k gather+apply supersteps into ONE job to amortize per-job fixed
-        # cost. Exactness: per-step Observations ride the single
-        # materialization; a block commits only while every internal step
-        # stayed all-changed (identical frontier semantics), otherwise it
-        # is discarded and the steps replay sequentially from the
-        # committed state. OFF by default — see the fuse_supersteps
-        # constructor note for the measured local-mode tradeoff.
-        fuse_on = self.fuse_supersteps > 1 and program.mode == "pull"
+        prev_state = vertices
         # regime predictor for the job shape below (correctness does not
         # depend on it — both shapes are exact): a full entry frontier
         # suggests an all-vertex program whose first steps stay all-changed
         prev_changed_all = (
-            program.mode == "pull" and frontier_size >= self._n_vertices
+            program.mode == "pull" and frontier_size >= rs.n_vertices
         )
-        # Speculative next-superstep PACK (plan -> lazy cut -> observe),
-        # fully prebuilt by both regime branches below while the current
-        # step materializes on a background thread. Consumed at the loop
-        # top iff the building branch confirmed — from the actual
-        # observation / frontier count — that sequential execution would
-        # have built the identical plan; discarded unexecuted otherwise.
-        # Prebuilding the cut+observe too hides the per-step Catalyst
-        # planning and localCheckpoint RDD creation behind executor work,
-        # not just the py4j DataFrame construction.
-        # The all-changed branch prebuilds the FULL pack (execution there
-        # is long enough to hide the extra Catalyst/localCheckpoint driver
-        # work); the partial branch prebuilds only the plain plan — its
-        # materializing job is short (small tail frontiers), and an A/B
-        # showed pack-building in that window LENGTHENS cheap steps
-        # (cc_converged 1.46 -> 1.68 s) while the plain spec does not.
-        spec_pack: tuple | None = None
-        spec_plan: DataFrame | None = None
-
-        def _cut_observe(a: DataFrame):
-            a = self._cut(a, eager=False)
-            a_obs, o = self._observe_applied(a)
-            return a, a_obs, o
+        # Speculative next superstep, prebuilt by both regime branches
+        # below while the current step materializes on a background thread
+        # (_overlap). Consumed at the loop top iff the building branch
+        # confirmed — from the actual observation / frontier count — that
+        # sequential execution would have built the identical plan;
+        # discarded unexecuted otherwise.
+        # The all-changed branch prebuilds the FULL (cut, observed,
+        # observation) pack: execution there is long enough to hide the
+        # per-step Catalyst planning and localCheckpoint RDD creation too,
+        # not just the py4j DataFrame construction. The partial branch
+        # prebuilds only the plain plan — its materializing job is short
+        # (small tail frontiers), and an A/B showed pack-building in that
+        # window LENGTHENS cheap steps (cc_converged 1.46 -> 1.68 s) while
+        # the plain spec does not.
+        spec: tuple | DataFrame | None = None
 
         while frontier_size > 0 and step < max_iter:
-            if fuse_on and prev_changed_all and max_iter - step >= 2:
-                spec_pack = None  # fused blocks build their own chain
-                spec_plan = None
-                k = min(self.fuse_supersteps, max_iter - step)
-                block = self._run_fused_block(
-                    program, vertices, frontier, frontier_size, k, metrics, step
-                )
-                if block is None:
-                    # left the all-changed regime mid-block: replay
-                    # sequentially from the committed state; the regime
-                    # never re-enters once convergence begins to localize
-                    fuse_on = False
-                else:
-                    vertices, frontier, frontier_size, done, still_all = block
-                    step += done
-                    prev_changed_all = still_all
-                    fuse_on = fuse_on and still_all
-                    # fused-path frontiers join the same stale-release
-                    # rotation as sequential ones (unpersist is a no-op on
-                    # the shared all-receivers frame, which is
-                    # localCheckpointed, not cache-managed)
-                    while len(stale) > 1:
-                        stale.pop(0).unpersist()
-                    stale.append(frontier)
-                    if prev_state is not None:
-                        self._release_cut(prev_state)
-                    prev_state = vertices
-                    if (
-                        self.checkpoint_dir
-                        and self.checkpoint_every
-                        and (step // self.checkpoint_every)
-                        > ((step - done) // self.checkpoint_every)
-                    ):
-                        self.write_checkpoint(
-                            program.name, step, vertices, frontier, metrics
-                        )
-                    continue
             t0 = time.monotonic()
-            if spec_pack is not None:
-                applied, applied_obs, obs = spec_pack  # prebuilt last step
-                spec_pack = None
-            else:
-                if spec_plan is not None:
-                    a, spec_plan = spec_plan, None  # prebuilt plan only
-                else:
-                    a = superstep_fn(program, vertices, frontier, frontier_size)
-                applied, applied_obs, obs = _cut_observe(a)
+            if spec is None:
+                spec = superstep_fn(rs, vertices, frontier, frontier_size)
+            if isinstance(spec, DataFrame):
+                spec = self._cut_observe(rs, spec)
+            (applied, applied_obs, obs), spec = spec, None
             # Ping-pong buffer swap + lineage cut (the reference's
             # reset_gather/double-buffer analogue, csr_problem.cuh:180-183).
             # The superstep plan embeds the previous state/frontier several
@@ -977,17 +924,17 @@ class GASEngine:
             # grows exponentially across supersteps (measured: 4 supersteps
             # -> 60s of pure planning). The checkpoint is LAZY in both
             # regimes: a background thread runs the ONE materializing job
-            # while the DRIVER builds the next superstep's pack
-            # (plan -> lazy cut -> observe) speculatively — per-step plan
-            # construction is ~85-110 ms of pure py4j/Catalyst work
-            # (21% of a converged sf0.1 PageRank wall, measured this
-            # round) that was previously SERIAL with the ~110-200 ms
-            # execution. Exactness is untouched: the pack is consumed only
-            # when the actual observation / frontier count confirms
-            # sequential execution would have built the identical plan,
-            # else it is discarded unexecuted. Two job shapes by regime:
+            # while the DRIVER builds the next superstep speculatively —
+            # per-step plan construction is ~85-110 ms of pure
+            # py4j/Catalyst work (21% of a converged sf0.1 PageRank wall,
+            # measured this round) that was previously SERIAL with the
+            # ~110-200 ms execution. Exactness is untouched: the
+            # speculative build is consumed only when the actual
+            # observation / frontier count confirms sequential execution
+            # would have built the identical plan, else it is discarded
+            # unexecuted. Two job shapes by regime:
             vertices = applied.drop("_changed", "_msg_cnt")
-            mat_err: list[BaseException] = []
+            more = step + 1 < max_iter
             regime = (
                 "all" if program.mode == "pull" and prev_changed_all else "partial"
             )
@@ -1000,39 +947,23 @@ class GASEngine:
                 # constant all-receivers set), and the speculative pack
                 # assumes the regime holds — the condition the consumer
                 # checks below.
-                def _materialize(df=applied_obs, err=mat_err):
-                    try:
-                        df.count()
-                    except BaseException as e:  # re-raised after join
-                        err.append(e)
-
-                mat = InheritableThread(target=_materialize, daemon=True)
-                mat.start()
-                # join in a finally: a raising speculative build must not
-                # leave the materializing job running behind the caller
-                try:
-                    dkey = self._dir_key(program)
-                    all_recv = self._all_receivers(dkey)
-                    cand = None
-                    if step + 1 < max_iter:
-                        cand = _cut_observe(
-                            superstep_fn(
-                                program, vertices, all_recv,
-                                self._all_recv_count[dkey],
-                            )
+                def _build_all():
+                    recv = self._all_receivers(rs.dkey)
+                    n_recv = self._endpoint_counts(rs.dkey)[1]
+                    nxt = None
+                    if more:
+                        nxt = self._cut_observe(
+                            rs, superstep_fn(rs, vertices, recv, n_recv)
                         )
-                finally:
-                    mat.join()
-                if mat_err:
-                    raise mat_err[0]
-                row = self._read_observation(obs, applied)
-                if self._all_changed(row):
-                    frontier = all_recv
-                    frontier_size = self._all_recv_count[dkey]
-                    spec_pack = cand
+                    return recv, n_recv, nxt
+
+                _, (recv, n_recv, nxt) = self._overlap(applied_obs.count, _build_all)
+                row = self._read_observation(rs, obs, applied)
+                if self._all_changed(rs, row):
+                    frontier, frontier_size, spec = recv, n_recv, nxt
                 else:
                     frontier = self._next_frontier(
-                        program, applied, frontier_size
+                        rs, applied, frontier_size
                     ).persist(StorageLevel.MEMORY_AND_DISK)
                     frontier_size = frontier.count()  # convergence readback
             else:
@@ -1043,65 +974,50 @@ class GASEngine:
                 # AND the metrics (the frontier plan reads every applied
                 # row anyway for the _changed filter) — halves the
                 # per-superstep job count where the all-changed fast path
-                # can't engage. The speculative pack is built with the
+                # can't engage. The speculative plan is built with the
                 # PRE-step size as the estimate: the plan depends on the
                 # still-unknown next frontier size only through two
                 # discrete predicates (all-frontier? broadcast-size?), so
                 # it is consumed iff those predicates agree with the actual
                 # count (a threshold-crossing step rebuilds sequentially).
                 frontier = self._next_frontier(
-                    program, applied_obs, frontier_size
+                    rs, applied_obs, frontier_size
                 ).persist(StorageLevel.MEMORY_AND_DISK)
                 est_fs = frontier_size
-                cnt_out: list[int] = []
-
-                def _count_frontier(df=frontier, out=cnt_out, err=mat_err):
-                    try:
-                        out.append(df.count())
-                    except BaseException as e:  # re-raised after join
-                        err.append(e)
-
-                mat = InheritableThread(target=_count_frontier, daemon=True)
-                mat.start()
-                try:
-                    cand = None
-                    if step + 1 < max_iter:
-                        cand = superstep_fn(program, vertices, frontier, est_fs)
-                finally:
-                    mat.join()
-                if mat_err:
-                    raise mat_err[0]
-                frontier_size = cnt_out[0]  # one job: state+frontier
-                row = self._read_observation(obs, applied)
-                if cand is not None and self._plan_preds(
-                    est_fs
-                ) == self._plan_preds(frontier_size):
-                    spec_plan = cand
+                frontier_size, nxt = self._overlap(
+                    frontier.count,
+                    lambda: (
+                        superstep_fn(rs, vertices, frontier, est_fs) if more else None
+                    ),
+                )
+                row = self._read_observation(rs, obs, applied)
+                if more and self._plan_preds(
+                    rs, est_fs
+                ) == self._plan_preds(rs, frontier_size):
+                    spec = nxt
             changed_n = int(row["ch"] or 0)
             traversed = int(row["tr"] or 0)
-            prev_changed_all = self._all_changed(row)
+            prev_changed_all = self._all_changed(rs, row)
             step += 1
-            wall_ms = (time.monotonic() - t0) * 1000.0
-            metrics.append(
-                SuperstepMetrics(
-                    step, frontier_size, traversed, changed_n, wall_ms, regime
-                )
+            m = SuperstepMetrics(
+                step, frontier_size, traversed, changed_n,
+                (time.monotonic() - t0) * 1000.0, regime,
             )
-            if os.environ.get("MOMG_GAS_DEBUG"):
-                print(
-                    f"[gas:{program.name}] step={step} regime={regime} "
-                    f"frontier={frontier_size} traversed={traversed} "
-                    f"changed={changed_n} ms={wall_ms:.0f}",
-                    flush=True,
-                )
+            metrics.append(m)
+            log.debug(
+                "[gas:%s] step=%d regime=%s frontier=%d traversed=%d "
+                "changed=%d ms=%.0f",
+                program.name, step, regime, frontier_size, traversed,
+                changed_n, m.wall_ms,
+                extra={"gas_step": {"program": program.name, **m.as_dict()}},
+            )
             # release frontier frames two generations back
             while len(stale) > 1:
                 stale.pop(0).unpersist()
             stale.append(frontier)
             # the pre-superstep state is now superseded (the new state and
             # frontier are materialized above); free its checkpoint blocks
-            if prev_state is not None:
-                self._release_cut(prev_state)
+            self._release_cut(prev_state)
             prev_state = applied
             if (
                 self.checkpoint_dir
@@ -1109,8 +1025,12 @@ class GASEngine:
                 and step % self.checkpoint_every == 0
             ):
                 self.write_checkpoint(program.name, step, vertices, frontier, metrics)
+                on_disk = step
 
-        if self.checkpoint_dir and self.checkpoint_every:
+        # publish the final step unless it is already the one on disk (a
+        # second overwrite-mode write of the same step could leave the
+        # manifest pointing at a half-rewritten directory)
+        if self.checkpoint_dir and self.checkpoint_every and on_disk != step:
             self.write_checkpoint(program.name, step, vertices, frontier, metrics)
         return GASResult(
             vertices=vertices,
@@ -1119,89 +1039,9 @@ class GASEngine:
             converged=frontier_size == 0,
         )
 
-    def _run_fused_block(
-        self,
-        program: GASProgram,
-        vertices: DataFrame,
-        frontier: DataFrame,
-        frontier_size: int,
-        k: int,
-        metrics: list[SuperstepMetrics],
-        step0: int,
-    ) -> tuple[DataFrame, DataFrame, int, int, bool] | None:
-        """Run k pull-mode supersteps as ONE chained plan + materialization.
-
-        Valid only while the all-changed regime holds: step i+1's frontier
-        is assumed to be the constant all-receivers set, which sequential
-        execution would use iff step i reported changed == |V|. Per-step
-        Observations ride the single materialization and are checked after
-        the fact:
-        - every step all-changed -> commit all k (next frontier =
-          all-receivers, fusion continues);
-        - only the LAST step partial -> the state is still exact (a step's
-          own changed count only affects the frontier AFTER it), so commit
-          all k and compute the next frontier from the final _changed
-          flags (fusion stops);
-        - an EARLIER step partial -> the block diverged; discard it and
-          let the caller replay sequentially from the committed state (at
-          most one discarded block per run, bounded waste).
-
-        Returns (vertices, frontier, frontier_size, steps_done,
-        still_all_changed) or None when discarded.
-        """
-        t0 = time.monotonic()
-        dkey = self._dir_key(program)
-        all_recv = self._all_receivers(dkey)
-        all_recv_n = self._all_recv_count[dkey]
-        cur, f, fs = vertices, frontier, frontier_size
-        observations: list[Observation] = []
-        for i in range(k):
-            applied = self._superstep_pull(program, cur, f, fs)
-            applied, obs = self._observe_applied(applied)
-            observations.append(obs)
-            cur = applied if i == k - 1 else applied.drop("_changed", "_msg_cnt")
-            f, fs = all_recv, all_recv_n
-        final = self._cut(cur)
-        rows = [self._read_observation(o, None) for o in observations]
-        if any(r is None for r in rows):
-            # metrics did not surface; replay sequentially — free the
-            # discarded block's eager checkpoint first
-            self._release_cut(final)
-            return None
-        changed = [int(r["ch"] or 0) for r in rows]
-        changed_all = [self._all_changed(r) for r in rows]
-        if not all(changed_all[:-1]):
-            self._release_cut(final)
-            return None  # diverged mid-block
-        wall_ms = (time.monotonic() - t0) * 1000.0
-        new_vertices = final.drop("_changed", "_msg_cnt")
-        last_all = changed_all[-1]
-        if last_all:
-            next_frontier, next_size = all_recv, all_recv_n
-        else:
-            next_frontier = self._next_frontier(program, final, all_recv_n).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            next_size = next_frontier.count()
-        for i in range(k):
-            fsz = (all_recv_n if last_all else next_size) if i == k - 1 else all_recv_n
-            metrics.append(
-                SuperstepMetrics(
-                    step0 + i + 1, fsz, int(rows[i]["tr"] or 0), changed[i],
-                    wall_ms / k, "all",
-                )
-            )
-        if os.environ.get("MOMG_GAS_DEBUG"):
-            print(
-                f"[gas:{program.name}] fused block steps={step0 + 1}..{step0 + k} "
-                f"regime=all changed={changed} ms={wall_ms:.0f}",
-                flush=True,
-            )
-        return new_vertices, next_frontier, next_size, k, last_all
-
     def _read_observation(
-        self, obs: Observation, applied_ck: DataFrame | None
-    ) -> dict | None:
+        self, rs: RunState, obs: Observation, applied_ck: DataFrame
+    ) -> dict:
         """Read the per-superstep metrics with a bounded wait.
 
         The observation has normally fired by the time the materializing
@@ -1226,9 +1066,7 @@ class GASEngine:
                 pass
         if fut.isCompleted():
             return obs.get
-        if applied_ck is None:
-            return None  # fused-block caller treats missing metrics as invalid
-        return applied_ck.agg(*self._obs_exprs(applied_ck)).collect()[0].asDict()
+        return applied_ck.agg(*self._obs_exprs(rs, applied_ck)).collect()[0].asDict()
 
     # frontier-side hint: broadcast small frontiers (reference two-phase /
     # dynamic strategy switch, enactor_vertex_centric.cuh:2694-2702).
@@ -1237,13 +1075,13 @@ class GASEngine:
             return F.broadcast(frontier)
         return frontier
 
-    def _plan_preds(self, frontier_size: int) -> tuple[bool, bool]:
+    def _plan_preds(self, rs: RunState, frontier_size: int) -> tuple[bool, bool]:
         """The ONLY two facts a superstep/apply plan reads from the
         frontier size: all-frontier? and broadcast-eligible? Two sizes
         with equal predicates produce byte-identical plans — the
         validity test for the speculative builds in _run_loop."""
         return (
-            frontier_size >= self._n_vertices,
+            frontier_size >= rs.n_vertices,
             frontier_size <= self.broadcast_threshold,
         )
 
@@ -1278,7 +1116,7 @@ class GASEngine:
 
     def _apply(
         self,
-        program: GASProgram,
+        rs: RunState,
         vertices: DataFrame,
         gathered: DataFrame,
         frontier: DataFrame,
@@ -1291,8 +1129,9 @@ class GASEngine:
         the same hash — the join is co-partitioned (no exchange). The
         frontier marker join is skipped entirely when frontier == ALL
         (srcVertex ALL programs spend most supersteps there)."""
+        program = rs.program
         joined = vertices.join(gathered, on="id", how="left")
-        if frontier_size >= self._n_vertices:
+        if frontier_size >= rs.n_vertices:
             joined = joined.withColumn("_in_frontier", F.lit(True))
         elif program.mode == "pull":
             # Partial pull regimes gather ONLY the frontier's receivers
@@ -1337,7 +1176,7 @@ class GASEngine:
 
     def _superstep_pull(
         self,
-        program: GASProgram,
+        rs: RunState,
         vertices: DataFrame,
         frontier: DataFrame,
         frontier_size: int,
@@ -1347,7 +1186,7 @@ class GASEngine:
         # passes over one table, partial aggregates combined by the shared
         # groupBy — the reference gathers CSC then CSR and combines with
         # thrust::transform, enactor:1288-1487).
-        dkey = self._dir_key(program)
+        program, dkey = rs.program, rs.dkey
         frames = self._oriented(dkey)
         # GATHER with a three-regime join order — the Spark analogue of the
         # reference's two-phase/dynamic switch (enactor:2694-2702):
@@ -1360,8 +1199,8 @@ class GASEngine:
         #    every message receiver is in by construction): skip the filter
         #    — apply's _in_frontier gate discards the rest, exact same
         #    result for less work.
-        is_all = frontier_size >= self._n_vertices or (
-            self._all_recv is not None and frontier is self._all_recv.get(dkey)
+        is_all = (
+            frontier_size >= rs.n_vertices or frontier is self._all_recv.get(dkey)
         )
         parts = []
         for edges in frames:
@@ -1392,11 +1231,11 @@ class GASEngine:
         gathered = self._aggregate(msgs, program)
 
         # APPLY over the frontier only (APPLY_FRONTIER policy).
-        return self._apply(program, vertices, gathered, frontier, frontier_size)
+        return self._apply(rs, vertices, gathered, frontier, frontier_size)
 
     def _superstep_push(
         self,
-        program: GASProgram,
+        rs: RunState,
         vertices: DataFrame,
         frontier: DataFrame,
         frontier_size: int,
@@ -1405,7 +1244,8 @@ class GASEngine:
         # program's expand direction (expand_edge, sssp.h:315-358); state
         # travels with the frontier. The frontier-state frame is built
         # once and joined into each oriented pass (broadcast when small).
-        frames = self._oriented(self._dir_key(program))
+        program = rs.program
+        frames = self._oriented(rs.dkey)
         frontier_state = self._hint(
             vertices.join(frontier, on="id", how="inner"), frontier_size
         ).withColumnRenamed("id", "src")
@@ -1422,18 +1262,18 @@ class GASEngine:
         # CONTRACT: exact combiner-per-dst replaces the atomic-min culls
         # (contract_atomic/cta.cuh:200-344).
         gathered = self._aggregate(msgs, program)
-        return self._apply(program, vertices, gathered, frontier, frontier_size)
+        return self._apply(rs, vertices, gathered, frontier, frontier_size)
 
     def _next_frontier(
-        self, program: GASProgram, applied: DataFrame, frontier_size: int
+        self, rs: RunState, applied: DataFrame, frontier_size: int
     ) -> DataFrame:
         """SCATTER from the *materialized* applied state (so the expand
         join never recomputes the superstep)."""
-        if program.mode == "pull":
+        if rs.program.mode == "pull":
             # next frontier = vertices whose gather input changed, i.e. the
             # receivers adjacent to changed neighbor-state vertices; exact
             # dedup (the contract culls done exactly: one distinct shuffle).
-            frames = self._oriented(self._dir_key(program))
+            frames = self._oriented(rs.dkey)
             changed_src = applied.filter(F.col("_changed")).select(
                 F.col("id").alias("src")
             )

@@ -137,3 +137,34 @@ def test_labelprop_resume_equivalence(spark, make_edges, make_vertices, tmp_path
     want = {r["id"]: r["label"] for r in straight.vertices.collect()}
     assert got == want
     assert res.metrics[0].superstep == 1  # history preserved across resume
+
+
+def test_each_checkpoint_step_published_once(spark, make_edges, make_vertices, tmp_path):
+    """A step is written to disk once: the loop-exit publish skips the step
+    checkpoint_every just wrote, and a resume that runs no superstep
+    (max_iter equal to the checkpointed step) rewrites nothing."""
+    e = canonicalize(make_edges(SMALL))
+    ckpt = str(tmp_path / "pr_once_ck")
+    written = []
+
+    def recording(eng):
+        write = eng.write_checkpoint
+
+        def record(name, step, *args):
+            written.append(step)
+            return write(name, step, *args)
+
+        eng.write_checkpoint = record
+        return eng
+
+    eng1 = recording(GASEngine(spark, e, checkpoint_dir=ckpt, checkpoint_every=1))
+    first = pagerank(spark, e, vertices=make_vertices(SMALL_N), max_iter=3, engine=eng1)
+    assert first.supersteps == 3
+    eng2 = recording(GASEngine(spark, e, checkpoint_dir=ckpt, checkpoint_every=1))
+    again = pagerank(
+        spark, e, vertices=make_vertices(SMALL_N), max_iter=3, engine=eng2, resume=True
+    )
+    assert again.supersteps == 0
+    assert written == [1, 2, 3]
+    manifest = json.load(open(os.path.join(ckpt, "pagerank", "manifest.json")))
+    assert manifest["superstep"] == 3

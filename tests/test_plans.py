@@ -57,7 +57,7 @@ def test_gas_pull_superstep_plan_shape(spark, make_edges):
     (map-side combine keeps hub skew off the reduce side)."""
     from fixtures import SMALL
     from mirrorofmapgraph_spark.operators.pagerank import pagerank_program
-    from mirrorofmapgraph_spark.plans.gas import GASEngine
+    from mirrorofmapgraph_spark.plans.gas import GASEngine, RunState
     from mirrorofmapgraph_spark.sources.edges import out_degrees, vertex_frame
 
     edges = make_edges(SMALL)
@@ -68,11 +68,9 @@ def test_gas_pull_superstep_plan_shape(spark, make_edges):
         .select("id", F.lit(0.15).alias("rank"),
                 F.coalesce("out_deg", F.lit(0)).cast("long").alias("out_deg"))
     )
-    eng._n_vertices = v0.count()
-    eng._sender_pred = None
-    applied = eng._superstep_pull(
-        pagerank_program(), v0, verts.select("id"), eng._n_vertices
-    )
+    n = v0.count()
+    rs = RunState(pagerank_program(), "fwd", n)
+    applied = eng._superstep_pull(rs, v0, verts.select("id"), n)
     p = plan(applied)
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
     assert "HashAggregate" in p

@@ -199,7 +199,7 @@ def run(argv: Sequence[str] | None = None) -> int:
 
         edges = symmetrize(edges)
 
-    eng_kw = {"collect_metrics": int(params.get("stats", "0")) == 1}
+    eng_kw = {}
     if "threshold" in params:
         eng_kw["broadcast_threshold"] = int(params["threshold"])
     if "salt" in params:
@@ -215,7 +215,7 @@ def run(argv: Sequence[str] | None = None) -> int:
     result = _dispatch(spark, args.algo, edges, params, eng_kw, resume, iter_num,
                        args.sources)
     df, metrics = result
-    if metrics:
+    if metrics and int(params.get("stats", "0")) == 1:
         for mt in metrics:
             print(f"superstep {mt.superstep}: frontier={mt.frontier_size} "
                   f"edges={mt.edges_traversed} wall_ms={mt.wall_ms:.0f}",

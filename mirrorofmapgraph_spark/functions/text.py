@@ -43,18 +43,6 @@ def bpe_ish_token_count(text: Column) -> Column:
     )
 
 
-def char_ngrams(text: Column, n: int = 3) -> Column:
-    """array<string> of character n-grams (shingles) of the lowercased text."""
-    lowered = F.lower(text)
-    length = F.length(lowered)
-    return F.when(length < n, F.array(lowered)).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), length - F.lit(n - 1)),
-            lambda i: lowered.substr(i, F.lit(n)),
-        )
-    )
-
-
 def word_ngrams(text: Column, n: int = 3) -> Column:
     """array<string> of word n-grams joined by single spaces."""
     toks = tokens(F.lower(text))

@@ -24,7 +24,6 @@ def bfs_program() -> GASProgram:
     return GASProgram(
         name="bfs",
         mode="push",
-        uses_in_frontier=False,
         state_cols=("depth",),
         message=lambda df: F.col("depth") + F.lit(1),  # candidate depth
         combiner=F.min,
@@ -62,14 +61,10 @@ def bfs(
     """
     if engine is None:
         engine = GASEngine(spark, edges, **engine_kwargs)
-        # setup frames derive from the engine's one endpoint-stats
-        # aggregation (see GASEngine.vertex_stats) instead of a separate
-        # vertex_frame distinct over the raw lineage
-        edges = engine.edges_partitioned("src")
-        if vertices is None:
-            vertices = engine.vertex_stats("fwd").select("id")
     if vertices is None:
-        vertices = vertex_frame(edges)
+        # the vertex set comes from the engine's one endpoint-stats
+        # aggregation (see GASEngine.vertex_stats)
+        vertices = engine.vertex_stats("fwd").select("id")
     marked = _mark_sources(vertices, source)
     v0 = marked.select(
         "id",

@@ -11,11 +11,13 @@ Reference: Algorithms/CC/cc.h —
 
 Spark-first: push-mode min-combiner supersteps over BOTH directions of
 the ONE raw edge table (GASEngine expand_dir="all" — the reference's
-CSC+CSR dual traversal, enactor_vertex_centric.cuh:574-687, without a
-second device copy). The min combiner is duplicate-insensitive, so no
-symmetrize/dedup build shuffle is needed at all and the edge table is
-persisted exactly once; ``pre_symmetrized=True`` keeps the legacy path
-for callers that already hold a symmetric table.
+CSC+CSR dual traversal, enactor_vertex_centric.cuh:574-687). The engine
+derives the layout from the direction: "all" persists a src- and a
+dst-partitioned copy (the second built cache-to-cache), so both passes'
+state joins are exchange-free. The min combiner is duplicate-insensitive,
+so no symmetrize/dedup build shuffle is needed at all;
+``pre_symmetrized=True`` keeps the legacy path for callers that already
+hold a symmetric table.
 """
 
 from __future__ import annotations
@@ -30,7 +32,6 @@ def cc_program(expand_dir: str = "all") -> GASProgram:
     return GASProgram(
         name="cc",
         mode="push",
-        uses_in_frontier=False,
         expand_dir=expand_dir,
         state_cols=("label",),
         message=lambda df: F.col("label"),  # push my label (cc.h:289-302)
@@ -64,15 +65,6 @@ def connected_components(
     # raw directed tables are traversed in both directions natively.
     expand_dir = "out" if pre_symmetrized else "all"
     if engine is None:
-        if expand_dir == "all":
-            # "all"-direction traversal defaults to the dual CSR+CSC
-            # layout (csr_problem.cuh:154-158): both per-superstep state
-            # joins co-partitioned (no reverse-pass exchange) for 2x the
-            # persisted edge bytes — the second copy is a cheap
-            # cache-to-cache repartition of the first. Measured at sf0.1:
-            # cc_converged 1.68 -> 1.54 s min and far lower variance.
-            # Pass dual_index=False to trade back at memory-bound scale.
-            engine_kwargs.setdefault("dual_index", True)
         engine = GASEngine(spark, edges, **engine_kwargs)
     if vertices is None:
         # the vertex set comes from the engine's one endpoint-stats

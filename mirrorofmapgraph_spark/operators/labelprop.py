@@ -22,10 +22,12 @@ metrics, and durable checkpoint/resume.
 
 Edge layout: the undirected neighborhood is traversed as BOTH directions
 of ONE canonical (src < dst) edge table (gather_dir="all",
-sources/edges.py canonical_undirected) — half the persisted bytes of the
-old symmetrize() path, identical neighbor multisets (each undirected
-edge delivers exactly one message per endpoint). Self-loops are excluded
-from neighbor counts (as in the oracle's src <> dst edge derivation).
+sources/edges.py canonical_undirected) — identical neighbor multisets
+to the old symmetrize() path (each undirected edge delivers exactly one
+message per endpoint) without its build shuffle. The engine persists the
+table src- and dst-partitioned for the "all" direction, so neither pass
+exchanges per superstep. Self-loops are excluded from neighbor counts (as
+in the oracle's src <> dst edge derivation).
 """
 
 from __future__ import annotations
@@ -102,12 +104,6 @@ def label_propagation(
         und = canonical_undirected(edges)
         prog_dir = "all"
     if engine is None:
-        if prog_dir == "all":
-            # dual CSR+CSC layout for "all"-direction traversal (see the
-            # cc.py note): no reverse-pass exchange per superstep, second
-            # copy built cache-to-cache. Measured at sf0.1: labelprop2
-            # 2.73 -> 2.55 s min, far lower variance.
-            engine_kwargs.setdefault("dual_index", True)
         engine = GASEngine(
             spark, und, num_partitions=num_partitions, **engine_kwargs
         )

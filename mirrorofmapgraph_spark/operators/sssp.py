@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.gas import GASEngine, GASProgram, GASResult
-from ..sources.edges import vertex_frame
 
 _INF = float("inf")
 
@@ -26,7 +25,6 @@ def sssp_program() -> GASProgram:
     return GASProgram(
         name="sssp",
         mode="push",
-        uses_in_frontier=False,
         state_cols=("dist",),
         message=lambda df: F.col("dist") + F.col("w"),  # relax (sssp.h:342-358)
         combiner=F.min,
@@ -56,14 +54,10 @@ def sssp(
 
     if engine is None:
         engine = GASEngine(spark, edges, **engine_kwargs)
-        # setup frames derive from the engine's one endpoint-stats
-        # aggregation (see GASEngine.vertex_stats) instead of a separate
-        # vertex_frame distinct over the raw lineage
-        edges = engine.edges_partitioned("src")
-        if vertices is None:
-            vertices = engine.vertex_stats("fwd").select("id")
     if vertices is None:
-        vertices = vertex_frame(edges)
+        # the vertex set comes from the engine's one endpoint-stats
+        # aggregation (see GASEngine.vertex_stats)
+        vertices = engine.vertex_stats("fwd").select("id")
     marked = _mark_sources(vertices, source)
     v0 = marked.select(
         "id",

@@ -126,16 +126,14 @@ class GASProgram:
     #: May be None when ``aggregate_fn`` (below) is provided instead.
     combiner: Callable[[Column], Column] | None
     #: new-state expressions given vertices ⋈ gathered. Input frame has the
-    #: old state cols plus ``_gathered`` (null when no message arrived) and
-    #: ``_in_frontier`` (this vertex is in the apply scope this superstep).
-    #: Returns {state_col: Column}. (apply functor analogue.)
+    #: old state cols plus ``_gathered`` (null when no message arrived)
+    #: and, in pull mode, ``_in_frontier`` (this vertex is in the apply
+    #: scope this superstep). Returns {state_col: Column}. (apply functor
+    #: analogue.)
     apply: Callable[[DataFrame], dict[str, Column]]
     #: changed predicate over old+new state (columns ``<c>`` old and
     #: ``_new_<c>``); drives the next frontier (expand_vertex analogue).
     changed: Callable[[DataFrame], Column]
-    #: push mode: optional emit predicate evaluated on the message frame
-    #: (expand_edge's conditional emit, sssp.h:342-358).
-    message_filter: Callable[[DataFrame], Column] | None = None
     #: pull mode only: which edges a vertex gathers over — "in" (default:
     #: v aggregates its in-neighbors' state, GATHER_IN_EDGES), "out"
     #: (v aggregates its out-neighbors' state, GATHER_OUT_EDGES), or
@@ -169,11 +167,6 @@ class GASProgram:
     #: for exact undirected semantics, or rely on a duplicate-insensitive
     #: combiner (min/max) with raw directed edges.
     expand_dir: str = "out"
-    #: whether ``apply``/``changed`` read the ``_in_frontier`` column. Pull
-    #: mode derives the marker for free (see GASEngine._apply); push-mode
-    #: programs that ignore it (BFS/SSSP/CC key off ``_gathered`` instead)
-    #: set this False to skip the per-superstep frontier-marker join.
-    uses_in_frontier: bool = True
     #: optional replacement for the combiner-based gather aggregation:
     #: (msgs: DataFrame(src, dst, _msg)) -> DataFrame(dst, _gathered,
     #: _msg_cnt). For gathers that are NOT single-column algebraic
@@ -195,6 +188,10 @@ class SuperstepMetrics:
     #: fails) or "partial" (exact expand + distinct). "" in manifests
     #: written before the field existed.
     regime: str = ""
+    #: speculation outcome: "hit" when the step ran on a plan prebuilt
+    #: during the previous step, "miss" when one was built and discarded,
+    #: "" when none was built (a run's first step, older manifests).
+    spec: str = ""
 
     def as_dict(self) -> dict:
         return self.__dict__.copy()
@@ -261,7 +258,6 @@ class GASEngine:
         checkpoint_every: int = 0,
         collect_metrics: bool = True,
         num_partitions: int | None = None,
-        dual_index: bool = False,
     ) -> None:
         self.spark = spark
         self.broadcast_threshold = broadcast_threshold
@@ -273,14 +269,6 @@ class GASEngine:
         #: it from the edge count when the first edge copy is persisted
         #: (see edges_partitioned).
         self.num_partitions = num_partitions
-        #: "both"-direction traversal: False (default) runs the reverse
-        #: pass over the SAME src-partitioned copy (persisted once; the
-        #: reverse join rides the frontier broadcast, or shuffles edges on
-        #: the rare all-frontier supersteps). True builds a second,
-        #: dst-partitioned copy — the reference's CSR+CSC dual device
-        #: layout (csr_problem.cuh:154-158), exchange-free both ways at
-        #: 2x the persisted bytes.
-        self.dual_index = dual_index
         self._edges_raw = edges
         # Per-graph caches, each keyed by direction key and computed once
         # (per-run facts live in RunState instead):
@@ -433,10 +421,11 @@ class GASEngine:
                 df.count()  # materialize from the boot cache before dropping it
                 boot.unpersist()
             else:
-                # A second copy (dual_index) re-partitions the FIRST
-                # persisted copy cache-to-cache — same rows, any
-                # partitioning — instead of re-executing the raw lineage
-                # (entry edge tables are scan+distinct subtrees).
+                # A second copy (the "both" direction's dst-partitioned
+                # one) re-partitions the FIRST persisted copy
+                # cache-to-cache — same rows, any partitioning — instead
+                # of re-executing the raw lineage (entry edge tables are
+                # scan+distinct subtrees).
                 src_df = (
                     next(iter(self._edges_by.values()))
                     if self._edges_by
@@ -477,22 +466,22 @@ class GASEngine:
         - "rev": the dst-partitioned copy reversed (CSC analogue — the
           reversed view is partitioned by its NEW src, so the state join
           stays exchange-free);
-        - "both": forward pass + reverse pass. Default: both passes over
-          the ONE src-partitioned copy (edge table persisted once — at
-          10^12 edges a second copy doubles the biggest table in the
-          system); the reverse-pass state join rides the frontier
-          broadcast hint, or shuffles edge-sized data on all-frontier
-          supersteps. ``dual_index=True`` trades 2x persisted bytes for
-          exchange-free joins both ways.
+        - "both": both of the above — the reference's CSR+CSC dual layout
+          (csr_problem.cuh:154-158): both passes' state joins are
+          exchange-free, for 2x the persisted edge bytes. Against reverse
+          passes over the one src-partitioned copy it measured, at sf0.1,
+          cc_converged 1.68 -> 1.54 s and labelprop2 2.73 -> 2.55 s (min),
+          with far lower variance.
         """
         if dkey == "fwd":
             return [self.edges_partitioned("src")]
         if dkey == "rev":
             return [self._rev(self.edges_partitioned("dst"))]
         if dkey == "both":
-            fwd = self.edges_partitioned("src")
-            rev = self._rev(self.edges_partitioned("dst") if self.dual_index else fwd)
-            return [fwd, rev]
+            return [
+                self.edges_partitioned("src"),
+                self._rev(self.edges_partitioned("dst")),
+            ]
         raise ValueError(f"unknown direction key {dkey!r}")
 
     def unpersist(self) -> None:
@@ -779,7 +768,7 @@ class GASEngine:
                 on_disk = start_step
 
         # Pre-partition the big side once, before entering the loop (both
-        # copies only when the direction needs them AND dual_index opts in).
+        # copies only when the direction needs them).
         self._oriented(self._dir_key(program))
 
         # Loop-scoped physical tuning, restored afterwards:
@@ -891,24 +880,24 @@ class GASEngine:
         # regime predictor for the job shape below (correctness does not
         # depend on it — both shapes are exact): a full entry frontier
         # suggests an all-vertex program whose first steps stay all-changed
-        prev_changed_all = (
-            program.mode == "pull" and frontier_size >= rs.n_vertices
-        )
-        # Speculative next superstep, prebuilt by both regime branches
-        # below while the current step materializes on a background thread
-        # (_overlap). Consumed at the loop top iff the building branch
-        # confirmed — from the actual observation / frontier count — that
-        # sequential execution would have built the identical plan;
-        # discarded unexecuted otherwise.
-        # The all-changed branch prebuilds the FULL (cut, observed,
-        # observation) pack: execution there is long enough to hide the
-        # per-step Catalyst planning and localCheckpoint RDD creation too,
-        # not just the py4j DataFrame construction. The partial branch
-        # prebuilds only the plain plan — its materializing job is short
-        # (small tail frontiers), and an A/B showed pack-building in that
-        # window LENGTHENS cheap steps (cc_converged 1.46 -> 1.68 s) while
-        # the plain spec does not.
+        all_changed = program.mode == "pull" and frontier_size >= rs.n_vertices
+        # Guess and verify: while a background thread runs the step's one
+        # materializing job (_overlap), the driver builds the NEXT step on
+        # a guessed frontier — the constant all-receivers set in the "all"
+        # regime, the exact next frontier (still being counted) at the
+        # pre-step size in "partial". A plan reads the frontier size only
+        # through _plan_preds, so the prebuilt step is consumed iff the
+        # guess became the frontier and the predicates agree; otherwise it
+        # is discarded unexecuted. Two speculation depths: "all" prebuilds
+        # the full (cut, observed, observation) pack, whose long job hides
+        # Catalyst planning and the localCheckpoint RDD creation too;
+        # "partial" prebuilds only the plain plan. Building the pack there
+        # measured 31 instead of 27 gas.run jobs on repo_pipeline: the
+        # pack's lazy localCheckpoint runs the physical plan, which starts
+        # the next push step's frontier-broadcast job while that frontier
+        # is still being counted.
         spec: tuple | DataFrame | None = None
+        spec_outcome = ""  # of the plan the next step runs on (see SuperstepMetrics)
 
         while frontier_size > 0 and step < max_iter:
             t0 = time.monotonic()
@@ -918,96 +907,72 @@ class GASEngine:
                 spec = self._cut_observe(rs, spec)
             (applied, applied_obs, obs), spec = spec, None
             # Ping-pong buffer swap + lineage cut (the reference's
-            # reset_gather/double-buffer analogue, csr_problem.cuh:180-183).
-            # The superstep plan embeds the previous state/frontier several
-            # times each, so WITHOUT a hard truncation the logical plan
-            # grows exponentially across supersteps (measured: 4 supersteps
-            # -> 60s of pure planning). The checkpoint is LAZY in both
-            # regimes: a background thread runs the ONE materializing job
-            # while the DRIVER builds the next superstep speculatively —
-            # per-step plan construction is ~85-110 ms of pure
-            # py4j/Catalyst work (21% of a converged sf0.1 PageRank wall,
-            # measured this round) that was previously SERIAL with the
-            # ~110-200 ms execution. Exactness is untouched: the
-            # speculative build is consumed only when the actual
-            # observation / frontier count confirms sequential execution
-            # would have built the identical plan, else it is discarded
-            # unexecuted. Two job shapes by regime:
+            # double-buffer analogue, csr_problem.cuh:180-183): the step
+            # plan embeds the previous state several times, so without a
+            # hard truncation the plan grows exponentially (measured: 4
+            # supersteps -> 60 s of pure planning). The cut is lazy; its
+            # job overlaps the next step's ~85-110 ms of py4j/Catalyst
+            # construction (21% of a converged sf0.1 PageRank when serial).
             vertices = applied.drop("_changed", "_msg_cnt")
             more = step + 1 < max_iter
             regime = (
-                "all" if program.mode == "pull" and prev_changed_all else "partial"
+                "all" if program.mode == "pull" and all_changed else "partial"
             )
             if regime == "all":
-                # ALL-CHANGED regime: the metrics ride the checkpoint
-                # materialization (one count job over the observed
-                # checkpoint scan — the same observation trigger the
-                # partial branch has always used; zero extra jobs), the
-                # expand shuffle is skipped entirely (next frontier = the
-                # constant all-receivers set), and the speculative pack
-                # assumes the regime holds — the condition the consumer
-                # checks below.
-                def _build_all():
-                    recv = self._all_receivers(rs.dkey)
-                    n_recv = self._endpoint_counts(rs.dkey)[1]
-                    nxt = None
-                    if more:
-                        nxt = self._cut_observe(
-                            rs, superstep_fn(rs, vertices, recv, n_recv)
-                        )
-                    return recv, n_recv, nxt
-
-                _, (recv, n_recv, nxt) = self._overlap(applied_obs.count, _build_all)
-                row = self._read_observation(rs, obs, applied)
-                if self._all_changed(rs, row):
-                    frontier, frontier_size, spec = recv, n_recv, nxt
-                else:
-                    frontier = self._next_frontier(
-                        rs, applied, frontier_size
-                    ).persist(StorageLevel.MEMORY_AND_DISK)
-                    frontier_size = frontier.count()  # convergence readback
+                # the metrics ride one count over the observed checkpoint
+                # scan; the expand shuffle is skipped
+                guess, job = self._all_receivers(rs.dkey), applied_obs.count
             else:
-                # PARTIAL-FRONTIER regime (push programs, converging tails,
-                # graphs with never-changing sink senders): the observation
-                # rides the frontier query over the checkpoint scan, so ONE
-                # job materializes the new state, the exact next frontier,
-                # AND the metrics (the frontier plan reads every applied
-                # row anyway for the _changed filter) — halves the
-                # per-superstep job count where the all-changed fast path
-                # can't engage. The speculative plan is built with the
-                # PRE-step size as the estimate: the plan depends on the
-                # still-unknown next frontier size only through two
-                # discrete predicates (all-frontier? broadcast-size?), so
-                # it is consumed iff those predicates agree with the actual
-                # count (a threshold-crossing step rebuilds sequentially).
-                frontier = self._next_frontier(
+                # ONE job materializes the new state, the exact next
+                # frontier AND the metrics (the frontier plan reads every
+                # applied row anyway for the _changed filter)
+                guess = self._next_frontier(
                     rs, applied_obs, frontier_size
                 ).persist(StorageLevel.MEMORY_AND_DISK)
-                est_fs = frontier_size
-                frontier_size, nxt = self._overlap(
-                    frontier.count,
-                    lambda: (
-                        superstep_fn(rs, vertices, frontier, est_fs) if more else None
-                    ),
+                job = guess.count
+
+            def _build():
+                # the receiver count is read here so that its one readback
+                # job (on a program's first "all" step) overlaps the job
+                est = (
+                    self._endpoint_counts(rs.dkey)[1] if regime == "all"
+                    else frontier_size
                 )
-                row = self._read_observation(rs, obs, applied)
-                if more and self._plan_preds(
-                    rs, est_fs
-                ) == self._plan_preds(rs, frontier_size):
-                    spec = nxt
+                nxt = superstep_fn(rs, vertices, guess, est) if more else None
+                if nxt is not None and regime == "all":
+                    nxt = self._cut_observe(rs, nxt)
+                return est, nxt
+
+            counted, (est, nxt) = self._overlap(job, _build)
+            row = self._read_observation(rs, obs, applied)
+            all_changed = self._all_changed(rs, row)
+            if regime == "partial":
+                frontier, frontier_size = guess, counted
+            elif all_changed:
+                frontier, frontier_size = guess, est
+            else:
+                frontier = self._next_frontier(
+                    rs, applied, frontier_size
+                ).persist(StorageLevel.MEMORY_AND_DISK)
+                frontier_size = frontier.count()  # convergence readback
+            hit = frontier is guess and self._plan_preds(
+                rs, est
+            ) == self._plan_preds(rs, frontier_size)
+            if hit:
+                spec = nxt
             changed_n = int(row["ch"] or 0)
             traversed = int(row["tr"] or 0)
-            prev_changed_all = self._all_changed(rs, row)
             step += 1
             m = SuperstepMetrics(
                 step, frontier_size, traversed, changed_n,
-                (time.monotonic() - t0) * 1000.0, regime,
+                (time.monotonic() - t0) * 1000.0, regime, spec_outcome,
             )
             metrics.append(m)
+            spec_outcome = "" if nxt is None else "hit" if hit else "miss"
             log.debug(
-                "[gas:%s] step=%d regime=%s frontier=%d traversed=%d "
+                "[gas:%s] step=%d regime=%s spec=%s frontier=%d traversed=%d "
                 "changed=%d ms=%.0f",
-                program.name, step, regime, frontier_size, traversed,
+                program.name, step, regime, m.spec, frontier_size, traversed,
                 changed_n, m.wall_ms,
                 extra={"gas_step": {"program": program.name, **m.as_dict()}},
             )
@@ -1119,40 +1084,29 @@ class GASEngine:
         rs: RunState,
         vertices: DataFrame,
         gathered: DataFrame,
-        frontier: DataFrame,
         frontier_size: int,
     ) -> DataFrame:
-        """Join gathered values onto vertex state, mark frontier membership,
-        and evaluate apply/changed. Returns (id, *state, _msg_cnt, _changed).
+        """Join gathered values onto vertex state, mark frontier membership
+        (pull mode), and evaluate apply/changed. Returns (id, *state,
+        _msg_cnt, _changed).
 
         vertices are id-partitioned and gathered is dst-partitioned by
-        the same hash — the join is co-partitioned (no exchange). The
-        frontier marker join is skipped entirely when frontier == ALL
-        (srcVertex ALL programs spend most supersteps there)."""
+        the same hash — the join is co-partitioned (no exchange)."""
         program = rs.program
         joined = vertices.join(gathered, on="id", how="left")
-        if frontier_size >= rs.n_vertices:
-            joined = joined.withColumn("_in_frontier", F.lit(True))
-        elif program.mode == "pull":
-            # Partial pull regimes gather ONLY the frontier's receivers
-            # (the gather is frontier-pruned in regimes 1-2; in the
-            # all-receivers regime the frontier IS the receiver set), and
-            # every frontier member receives >= 1 message — it is the dst
-            # of an oriented edge by construction, and gather runs over ALL
-            # its in-neighbors. So membership == message receipt EXACTLY,
-            # and the frontier-marker join (one broadcast job per
-            # superstep) is replaced by a null test on the gather output.
-            joined = joined.withColumn("_in_frontier", F.col("_msg_cnt").isNotNull())
-        elif program.uses_in_frontier:
-            joined = joined.join(
-                self._hint(frontier.withColumn("_f", F.lit(True)), frontier_size),
-                on="id",
-                how="left",
-            ).withColumn("_in_frontier", F.coalesce(F.col("_f"), F.lit(False)))
-        else:
-            # push program that never reads the marker (declared via
-            # uses_in_frontier=False): skip the join entirely
-            joined = joined.withColumn("_in_frontier", F.lit(False))
+        if program.mode == "pull":
+            # A partial pull frontier gathers ONLY its receivers (the
+            # gather is frontier-pruned; in the all-receivers regime the
+            # frontier IS the receiver set), and every member receives >= 1
+            # message — it is the dst of an oriented edge by construction,
+            # and gather runs over ALL its in-neighbors. So membership ==
+            # message receipt EXACTLY: a null test on the gather output
+            # replaces a frontier-marker join.
+            joined = joined.withColumn(
+                "_in_frontier",
+                F.lit(True) if frontier_size >= rs.n_vertices
+                else F.col("_msg_cnt").isNotNull(),
+            )
         # ONE withColumns + ONE select, and no .columns readbacks: every
         # DataFrame op here re-analyzes the whole superstep subtree via a
         # py4j round trip, and this method runs once per superstep — the
@@ -1231,7 +1185,7 @@ class GASEngine:
         gathered = self._aggregate(msgs, program)
 
         # APPLY over the frontier only (APPLY_FRONTIER policy).
-        return self._apply(rs, vertices, gathered, frontier, frontier_size)
+        return self._apply(rs, vertices, gathered, frontier_size)
 
     def _superstep_push(
         self,
@@ -1252,8 +1206,6 @@ class GASEngine:
         parts = []
         for edges in frames:
             m = edges.join(frontier_state, on="src", how="inner")
-            if program.message_filter is not None:
-                m = m.filter(program.message_filter(m))
             parts.append(
                 m.select("src", "dst", program.message(m).alias("_msg"))
             )
@@ -1262,7 +1214,7 @@ class GASEngine:
         # CONTRACT: exact combiner-per-dst replaces the atomic-min culls
         # (contract_atomic/cta.cuh:200-344).
         gathered = self._aggregate(msgs, program)
-        return self._apply(rs, vertices, gathered, frontier, frontier_size)
+        return self._apply(rs, vertices, gathered, frontier_size)
 
     def _next_frontier(
         self, rs: RunState, applied: DataFrame, frontier_size: int

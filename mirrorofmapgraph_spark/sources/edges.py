@@ -95,14 +95,6 @@ def hub_vertices(edges: DataFrame, min_degree: int = 100_000) -> DataFrame:
     return in_degrees(edges).filter(F.col("in_deg") >= min_degree)
 
 
-def num_vertices(edges: DataFrame) -> int:
-    """Vertex-count readback (assumes dense ids: max id + 1)."""
-    row = edges.select(
-        F.greatest(F.max("src"), F.max("dst")).alias("mx")
-    ).collect()[0]
-    return int(row["mx"]) + 1 if row["mx"] is not None else 0
-
-
 def vertex_frame(edges: DataFrame) -> DataFrame:
     """All distinct vertex ids appearing in the edge table: (id long)."""
     return (

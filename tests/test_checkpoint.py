@@ -74,9 +74,9 @@ def test_pagerank_resume_matches_uninterrupted(spark, make_edges, make_vertices,
 
 
 def test_resume_from_manifest_without_regime(spark, make_edges, make_vertices, tmp_path):
-    """Manifests written before SuperstepMetrics.regime existed carry no
-    such key in their metrics; resume still loads them (regime "") and
-    records the regime of every step it runs itself."""
+    """Manifests written before SuperstepMetrics.regime and .spec existed
+    carry no such keys in their metrics; resume still loads them (both
+    "") and records the regime of every step it runs itself."""
     e = canonicalize(make_edges(SMALL))
     ckpt = str(tmp_path / "pr_old_ck")
     eng1 = GASEngine(spark, e, checkpoint_dir=ckpt, checkpoint_every=1)
@@ -86,6 +86,7 @@ def test_resume_from_manifest_without_regime(spark, make_edges, make_vertices, t
     manifest = json.load(open(mpath))
     for m in manifest["metrics"]:
         del m["regime"]
+        del m["spec"]
     json.dump(manifest, open(mpath, "w"))
 
     eng2 = GASEngine(spark, e, checkpoint_dir=ckpt, checkpoint_every=10)
@@ -93,7 +94,7 @@ def test_resume_from_manifest_without_regime(spark, make_edges, make_vertices, t
         spark, e, vertices=make_vertices(SMALL_N), engine=eng2, resume=True
     )
     assert res.converged
-    assert [m.regime for m in res.metrics[:2]] == ["", ""]
+    assert [(m.regime, m.spec) for m in res.metrics[:2]] == [("", "")] * 2
     assert all(m.regime in ("all", "partial") for m in res.metrics[2:])
     assert len(res.metrics) == 2 + res.supersteps
     expected, _ = pagerank_ref(SMALL_N, SMALL)

@@ -111,7 +111,7 @@ def test_cli_pagerank_mtx_to_text(spark, tmp_path):
     assert ranks[0] == pytest.approx(1.0, abs=1e-4)  # 0.15/(1-0.85)
 
 
-def test_cli_bfs_generator_sources_and_params(spark, tmp_path):
+def test_cli_bfs_generator_sources_and_params(spark, tmp_path, capsys):
     from mirrorofmapgraph_spark.cli import run
 
     out = tmp_path / "depths"
@@ -125,6 +125,7 @@ def test_cli_bfs_generator_sources_and_params(spark, tmp_path):
     got = {r["id"]: r["depth"] for r in spark.read.parquet(str(out)).collect()}
     # source vertex 2 = (x=2,y=0); depth = manhattan distance to it
     assert got == {y * 4 + x: abs(x - 2) + y for x in range(4) for y in range(4)}
+    assert "superstep" not in capsys.readouterr().err  # no stats=1
 
 
 def test_cli_config_file_and_ignored_params(spark, tmp_path, capsys):

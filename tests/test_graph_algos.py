@@ -341,25 +341,6 @@ def test_cc_native_all_matches_symmetrized(spark, make_edges, make_vertices):
     assert a.converged and b.converged
 
 
-def test_cc_dual_index_matches_single_copy(spark, make_edges, make_vertices):
-    """dual_index=True (CSR+CSC second partitioned copy) is a pure
-    physical layout choice — identical results."""
-    from mirrorofmapgraph_spark.plans.gas import GASEngine
-    from mirrorofmapgraph_spark.sources.edges import canonicalize
-
-    n = 150
-    edges = random_graph(n=n, m=400, seed=22)
-    e = canonicalize(make_edges(edges))
-    a = connected_components(spark, e, vertices=make_vertices(n))
-    b = connected_components(
-        spark, e, vertices=make_vertices(n),
-        engine=GASEngine(spark, e, dual_index=True),
-    )
-    ga = {r["id"]: r["label"] for r in a.vertices.collect()}
-    gb = {r["id"]: r["label"] for r in b.vertices.collect()}
-    assert ga == gb
-
-
 def test_labelprop_canonical_matches_symmetrized(spark, make_edges):
     """gather_dir='all' over the canonical (src<dst) table must reproduce
     the symmetrized path exactly per superstep (neighbor label MULTISETS

@@ -173,7 +173,8 @@ def test_rerun_on_one_engine_matches(spark, make_edges):
 
 def test_one_debug_record_per_superstep(spark, make_edges, caplog):
     """Each superstep emits one DEBUG record through ``logging`` carrying
-    the program name and every SuperstepMetrics field, regime included."""
+    the program name and every SuperstepMetrics field, regime and
+    speculation outcome included."""
     caplog.set_level(logging.DEBUG, logger="mirrorofmapgraph_spark.plans.gas")
     res = pagerank(spark, make_edges(TRIVIAL), damping=0.5, collect_metrics=False)
     recs = [r.gas_step for r in caplog.records if hasattr(r, "gas_step")]
@@ -181,6 +182,8 @@ def test_one_debug_record_per_superstep(spark, make_edges, caplog):
     assert len(recs) == res.supersteps
     assert recs == [{"program": "pagerank", **m.as_dict()} for m in res.metrics]
     assert all(r["regime"] in ("all", "partial") for r in recs)
+    assert recs[0]["spec"] == ""  # nothing was prebuilt for step 1
+    assert all(r["spec"] in ("hit", "miss") for r in recs[1:])
 
 
 def test_all_changed_regime_counts_senders_only(spark, make_edges):
@@ -200,38 +203,49 @@ def test_all_changed_regime_counts_senders_only(spark, make_edges):
         assert math.isclose(got[i], want[i], rel_tol=0, abs_tol=1e-6)
 
 
-def test_speculative_pack_equivalence_across_plan_regimes(spark, make_edges):
+@pytest.mark.parametrize("algo", ["pagerank", "cc"])
+def test_speculative_pack_equivalence_across_plan_regimes(spark, make_edges, algo):
     """The loop prebuilds the next superstep speculatively while the
     current one materializes (plans/gas.py _run_loop). The speculative
     plan's only dependence on the not-yet-known frontier size is the pair
     of predicates (all-frontier?, broadcast-eligible?) — so forcing each
-    broadcast regime must produce identical converged ranks and identical
-    superstep counts: every speculation hit/miss path (all-changed hits,
-    the regime-break discard, tail-step pred hits, the threshold-crossing
-    miss) replays the same math.
+    broadcast regime must produce identical answers and superstep counts:
+    every speculation hit/miss path (all-changed hits, the regime-break
+    discard, tail-step pred hits, the threshold-crossing miss) replays the
+    same math.
     """
+    from mirrorofmapgraph_spark.operators.cc import connected_components
     from mirrorofmapgraph_spark.plans.gas import GASEngine
 
-    edges_spec = MULTI
-    out = {}
-    for bc in (1_000_000, 0):  # always-broadcast-eligible vs never
-        e = make_edges(edges_spec)
-        res = pagerank(
-            spark, e, tol=1e-8, max_iter=80, damping=0.6,
-            engine=GASEngine(
-                spark, e, broadcast_threshold=bc, collect_metrics=False
-            ),
-        )
-        out[bc] = (
-            res.supersteps,
-            res.converged,
-            {r["id"]: r["rank"] for r in res.vertices.collect()},
-        )
-    assert out[0][0] == out[1_000_000][0]
-    assert out[0][1] == out[1_000_000][1]
-    assert set(out[0][2]) == set(out[1_000_000][2])
-    for i, v in out[0][2].items():
-        assert v == out[1_000_000][2][i], (i, v, out[1_000_000][2][i])
+    def run(bc):
+        e = make_edges(MULTI)
+        eng = GASEngine(spark, e, broadcast_threshold=bc, collect_metrics=False)
+        if algo == "pagerank":
+            res = pagerank(spark, e, tol=1e-8, max_iter=80, damping=0.6, engine=eng)
+        else:
+            res = connected_components(spark, e, engine=eng)
+        col = "rank" if algo == "pagerank" else "label"
+        return res, {r["id"]: r[col] for r in res.vertices.collect()}
+
+    base, want = run(1_000_000)  # every frontier is broadcast-eligible
+    if algo == "pagerank":
+        other, got = run(0)  # no frontier is
+    else:
+        # CC on MULTI: frontiers 9 (all) -> 7 -> 4 -> 1 -> 0. With the
+        # threshold at 4, step 2 (frontier 7) guesses a shuffle plan for
+        # step 3, whose frontier of 4 is broadcast-eligible: the prebuilt
+        # plan is discarded. Step 2 itself always misses (all-frontier ->
+        # partial), and step 4 hits.
+        assert [m.frontier_size for m in base.metrics] == [7, 4, 1, 0]
+        other, got = run(4)
+        assert [m.spec for m in base.metrics] == ["", "miss", "hit", "hit"]
+        assert [m.spec for m in other.metrics] == ["", "miss", "miss", "hit"]
+    assert other.supersteps == base.supersteps
+    assert other.converged == base.converged
+    assert got == want
+    assert [(m.frontier_size, m.edges_traversed, m.changed) for m in other.metrics] == [
+        (m.frontier_size, m.edges_traversed, m.changed) for m in base.metrics
+    ]
 
 
 def frontier_trace(n, edges, tol, damping, max_iter=100):

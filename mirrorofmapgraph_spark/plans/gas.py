@@ -47,10 +47,13 @@ from __future__ import annotations
 import json
 import logging
 import os
+import shutil
 import time
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -242,9 +245,11 @@ class GASEngine:
         dst keys (north-rule skew handling; beyond AQE skew-join, which
         only splits join partitions, not aggregation hot keys).
     checkpoint_every:
-        every k supersteps write a durable parquet checkpoint + manifest
-        (resume point). 0 disables durable checkpoints; lineage is still
-        truncated per superstep via localCheckpoint.
+        every k supersteps, and at the step that ends the loop, publish a
+        durable parquet commit + manifest (resume point; see
+        write_checkpoint). A run that executes no superstep publishes
+        nothing: its state is its input. 0 disables durable checkpoints;
+        lineage is still truncated per superstep via localCheckpoint.
     """
 
     def __init__(
@@ -677,54 +682,77 @@ class GASEngine:
         self,
         program_name: str,
         superstep: int,
-        vertices: DataFrame,
-        frontier: DataFrame,
+        applied: DataFrame,
         metrics: list[SuperstepMetrics],
     ) -> str:
-        """Durable parquet checkpoint + JSON manifest with per-partition
-        lineage (row counts per partition) — the north rule's resume point."""
-        base = os.path.join(self.checkpoint_dir, program_name, f"step={superstep}")
-        vpath = os.path.join(base, "vertices")
-        fpath = os.path.join(base, "frontier")
-        vertices.write.mode("overwrite").parquet(vpath)
-        frontier.write.mode("overwrite").parquet(fpath)
+        """Publish one immutable commit, the resume point of the north rule.
+
+        ``applied`` is the step's applied state: ``id``, the state columns
+        and the ``_changed`` flag. It is written as ONE parquet dataset to
+        ``<program>/step=<superstep>-<uuid>``, a directory no earlier write
+        used, and the JSON manifest naming it is published by an atomic
+        ``os.replace``. Then every other commit directory of the program is
+        deleted: superseded commits and leftovers of crashed writes. The
+        frontier is not stored; load_checkpoint re-derives it from the
+        flag. ``partition_lineage`` (rows per written file, one file per
+        loop partition) is read from the parquet footers on the driver, so
+        a commit runs one Spark job: the write."""
+        pdir = os.path.join(self.checkpoint_dir, program_name)
+        commit = f"step={superstep}-{uuid.uuid4().hex}"
+        path = os.path.join(pdir, commit)
+        applied.write.mode("errorifexists").parquet(path)
         partition_lineage = [
-            {"pid": r["pid"], "rows": r["rows"]}
-            for r in self.spark.read.parquet(vpath)
-            .groupBy(F.spark_partition_id().alias("pid"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
+            {"file": f, "rows": pq.read_metadata(os.path.join(path, f)).num_rows}
+            for f in sorted(os.listdir(path))
+            if f.endswith(".parquet")
         ]
         manifest = {
             "program": program_name,
             "superstep": superstep,
-            "vertices_path": vpath,
-            "frontier_path": fpath,
+            "vertices_path": path,
             "partition_lineage": partition_lineage,
             "metrics": [m.as_dict() for m in metrics],
         }
         mpath = self._manifest_path(program_name)
-        os.makedirs(os.path.dirname(mpath), exist_ok=True)
         tmp = mpath + ".tmp"
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, mpath)  # atomic publish
+        # the commit is durable now; a directory left undeleted here is
+        # swept again by the next publish
+        for d in os.listdir(pdir):
+            if d.startswith("step=") and d != commit:
+                shutil.rmtree(os.path.join(pdir, d), ignore_errors=True)
         return mpath
 
     def load_checkpoint(
-        self, program_name: str
+        self, program: GASProgram
     ) -> tuple[int, DataFrame, DataFrame, list[dict]] | None:
-        """Returns (superstep, vertices, frontier, metrics) or None."""
+        """(superstep, vertices, frontier, metrics) of the program's
+        published commit, or None when there is none.
+
+        The commit holds the applied state (see write_checkpoint), and the
+        frontier is re-derived from its ``_changed`` flag as the loop
+        derives it (_next_frontier; the broadcast hint is the last step's
+        changed count, so no count job runs). This is exact: every frontier
+        the loop produces is either _next_frontier(applied) or the
+        all-receivers set R, and _all_changed picks R only when the two are
+        equal. Manifests of the older two-dataset format (a state without
+        the flag plus a ``frontier_path``) still load."""
         if not self.checkpoint_dir:
             return None
-        mpath = self._manifest_path(program_name)
+        mpath = self._manifest_path(program.name)
         if not os.path.exists(mpath):
             return None
         with open(mpath) as f:
             m = json.load(f)
-        vertices = self.spark.read.parquet(m["vertices_path"])
-        frontier = self.spark.read.parquet(m["frontier_path"])
-        return m["superstep"], vertices, frontier, m["metrics"]
+        state = self.spark.read.parquet(m["vertices_path"])
+        if "frontier_path" in m:  # the two-dataset format
+            frontier = self.spark.read.parquet(m["frontier_path"])
+        else:
+            frontier = self._next_frontier(program, state, m["metrics"][-1]["changed"])
+            state = state.drop("_changed")
+        return m["superstep"], state, frontier, m["metrics"]
 
     # -- the superstep loop ------------------------------------------------
 
@@ -757,19 +785,17 @@ class GASEngine:
           mode, the expand distinct — 1-2 edge-sized shuffles per
           superstep instead of 6.
         """
-        start_step = 0
-        metrics: list[SuperstepMetrics] = []
-        on_disk: int | None = None  # last step this run knows is published
-        if resume and self.checkpoint_dir:
-            ck = self.load_checkpoint(program.name)
-            if ck is not None:
-                start_step, vertices, frontier, old_metrics = ck
-                metrics = [SuperstepMetrics(**m) for m in old_metrics]
-                on_disk = start_step
-
         # Pre-partition the big side once, before entering the loop (both
         # copies only when the direction needs them).
         self._oriented(self._dir_key(program))
+
+        start_step = 0
+        metrics: list[SuperstepMetrics] = []
+        if resume and self.checkpoint_dir:
+            ck = self.load_checkpoint(program)
+            if ck is not None:
+                start_step, vertices, frontier, old_metrics = ck
+                metrics = [SuperstepMetrics(**m) for m in old_metrics]
 
         # Loop-scoped physical tuning, restored afterwards:
         # - AQE off inside the superstep loop: every superstep is a fresh
@@ -807,7 +833,7 @@ class GASEngine:
         try:
             return self._run_loop(
                 program, vertices, frontier, metrics,
-                start_step=start_step, max_iter=max_iter, on_disk=on_disk,
+                start_step=start_step, max_iter=max_iter,
             )
         finally:
             for k, v in prev.items():
@@ -850,19 +876,17 @@ class GASEngine:
         *,
         start_step: int,
         max_iter: int,
-        on_disk: int | None,
     ) -> GASResult:
         # LAZY entry cuts: the two scalar readbacks right below double as
         # the materializing actions, so entry state+frontier cost two jobs
         # instead of four (eager checkpoint + separate count each). They
         # are made here, not in run(), so that nothing outside the loop
-        # holds them: the entry frontier's blocks are freed once the loop
-        # moves on.
+        # holds them; the entry frontier's blocks are freed at loop exit.
         vertices = self._cut(
             vertices.repartition(self.num_partitions, F.col("id")),
             eager=False,
         )
-        frontier = self._cut(frontier, eager=False)
+        frontier = entry_frontier = self._cut(frontier, eager=False)
         frontier_size = frontier.count()
         rs = self._run_state(program, vertices.count())
         superstep_fn = (
@@ -927,7 +951,7 @@ class GASEngine:
                 # frontier AND the metrics (the frontier plan reads every
                 # applied row anyway for the _changed filter)
                 guess = self._next_frontier(
-                    rs, applied_obs, frontier_size
+                    program, applied_obs, frontier_size
                 ).persist(StorageLevel.MEMORY_AND_DISK)
                 job = guess.count
 
@@ -952,7 +976,7 @@ class GASEngine:
                 frontier, frontier_size = guess, est
             else:
                 frontier = self._next_frontier(
-                    rs, applied, frontier_size
+                    program, applied, frontier_size
                 ).persist(StorageLevel.MEMORY_AND_DISK)
                 frontier_size = frontier.count()  # convergence readback
             hit = frontier is guess and self._plan_preds(
@@ -960,6 +984,8 @@ class GASEngine:
             ) == self._plan_preds(rs, frontier_size)
             if hit:
                 spec = nxt
+            elif isinstance(nxt, tuple):
+                self._release_cut(nxt[0])  # the discarded pack's lazy cut
             changed_n = int(row["ch"] or 0)
             traversed = int(row["tr"] or 0)
             step += 1
@@ -984,19 +1010,23 @@ class GASEngine:
             # frontier are materialized above); free its checkpoint blocks
             self._release_cut(prev_state)
             prev_state = applied
-            if (
-                self.checkpoint_dir
-                and self.checkpoint_every
-                and step % self.checkpoint_every == 0
+            if self.checkpoint_dir and self.checkpoint_every and (
+                step % self.checkpoint_every == 0
+                or frontier_size == 0
+                or step >= max_iter
             ):
-                self.write_checkpoint(program.name, step, vertices, frontier, metrics)
-                on_disk = step
+                self.write_checkpoint(
+                    program.name, step, applied.drop("_msg_cnt"), metrics
+                )
 
-        # publish the final step unless it is already the one on disk (a
-        # second overwrite-mode write of the same step could leave the
-        # manifest pointing at a half-rewritten directory)
-        if self.checkpoint_dir and self.checkpoint_every and on_disk != step:
-            self.write_checkpoint(program.name, step, vertices, frontier, metrics)
+        # release what the loop cut or persisted and the result does not
+        # read (the result is the last applied cut; the caller's input is
+        # upstream of the entry cuts)
+        if isinstance(spec, tuple):
+            self._release_cut(spec[0])
+        self._release_cut(entry_frontier)
+        for f in stale:
+            f.unpersist()
         return GASResult(
             vertices=vertices,
             supersteps=step - start_step,
@@ -1217,15 +1247,17 @@ class GASEngine:
         return self._apply(rs, vertices, gathered, frontier_size)
 
     def _next_frontier(
-        self, rs: RunState, applied: DataFrame, frontier_size: int
+        self, program: GASProgram, applied: DataFrame, frontier_size: int
     ) -> DataFrame:
         """SCATTER from the *materialized* applied state (so the expand
-        join never recomputes the superstep)."""
-        if rs.program.mode == "pull":
+        join never recomputes the superstep): the ids the ``_changed`` flag
+        puts in the next frontier. ``frontier_size`` only sizes the
+        broadcast hint of the changed side."""
+        if program.mode == "pull":
             # next frontier = vertices whose gather input changed, i.e. the
             # receivers adjacent to changed neighbor-state vertices; exact
             # dedup (the contract culls done exactly: one distinct shuffle).
-            frames = self._oriented(rs.dkey)
+            frames = self._oriented(self._dir_key(program))
             changed_src = applied.filter(F.col("_changed")).select(
                 F.col("id").alias("src")
             )

@@ -6,13 +6,27 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from fixtures import SMALL, SMALL_N, random_graph
 from oracles import cc_ref, pagerank_ref
 
 from mirrorofmapgraph_spark.operators.cc import connected_components
 from mirrorofmapgraph_spark.operators.pagerank import pagerank
+from mirrorofmapgraph_spark.plans import gas
 from mirrorofmapgraph_spark.plans.gas import GASEngine
 from mirrorofmapgraph_spark.sources.edges import canonicalize, symmetrize
+
+
+def records(res):
+    """The per-step records a resume must reproduce."""
+    return [
+        (m.superstep, m.frontier_size, m.edges_traversed, m.changed)
+        for m in res.metrics
+    ]
+
+
+def commit_dirs(pdir):
+    return {d for d in os.listdir(pdir) if d.startswith("step=")}
 
 
 def test_cc_resume_equivalence(spark, make_edges, make_vertices, tmp_path):
@@ -47,6 +61,12 @@ def test_cc_resume_equivalence(spark, make_edges, make_vertices, tmp_path):
     # resumed run continued from step 2, not from scratch
     assert res.metrics[0].superstep == 1  # full metric history preserved
     assert res.metrics[-1].superstep == 2 + res.supersteps
+    # the frontier re-derived from the stored _changed flag is the one the
+    # interrupted run would have gone on with
+    straight = connected_components(
+        spark, e, vertices=make_vertices(n), pre_symmetrized=True
+    )
+    assert records(res) == records(straight)
 
 
 def test_pagerank_resume_matches_uninterrupted(spark, make_edges, make_vertices, tmp_path):
@@ -70,6 +90,10 @@ def test_pagerank_resume_matches_uninterrupted(spark, make_edges, make_vertices,
     got = {r["id"]: r["rank"] for r in res.vertices.collect()}
     for v in range(n):
         assert abs(got[v] - expected[v]) < 1e-6
+    straight = pagerank(
+        spark, e, vertices=make_vertices(n), tol=1e-6, max_iter=500, damping=0.5
+    )
+    assert records(res) == records(straight)
 
 
 
@@ -138,12 +162,12 @@ def test_labelprop_resume_equivalence(spark, make_edges, make_vertices, tmp_path
     want = {r["id"]: r["label"] for r in straight.vertices.collect()}
     assert got == want
     assert res.metrics[0].superstep == 1  # history preserved across resume
+    assert records(res) == records(straight)
 
 
 def test_each_checkpoint_step_published_once(spark, make_edges, make_vertices, tmp_path):
-    """A step is written to disk once: the loop-exit publish skips the step
-    checkpoint_every just wrote, and a resume that runs no superstep
-    (max_iter equal to the checkpointed step) rewrites nothing."""
+    """A step is written to disk once, and a resume that runs no superstep
+    (max_iter equal to the checkpointed step) writes nothing."""
     e = canonicalize(make_edges(SMALL))
     ckpt = str(tmp_path / "pr_once_ck")
     written = []
@@ -169,3 +193,129 @@ def test_each_checkpoint_step_published_once(spark, make_edges, make_vertices, t
     assert written == [1, 2, 3]
     manifest = json.load(open(os.path.join(ckpt, "pagerank", "manifest.json")))
     assert manifest["superstep"] == 3
+
+
+def test_commits_use_fresh_dirs_and_only_the_published_one_survives(
+    spark, make_edges, make_vertices, tmp_path, monkeypatch
+):
+    """Every commit goes to a directory no earlier write used, and after a
+    publish the directory the manifest names is the only commit left."""
+    from pyspark.sql import DataFrameWriter
+
+    e = canonicalize(make_edges(SMALL))
+    ckpt = str(tmp_path / "pr_gc_ck")
+    pdir = os.path.join(ckpt, "pagerank")
+    mpath = os.path.join(pdir, "manifest.json")
+
+    eng1 = GASEngine(spark, e, checkpoint_dir=ckpt, checkpoint_every=1)
+    pagerank(spark, e, vertices=make_vertices(SMALL_N), max_iter=3, engine=eng1)
+    manifest = json.load(open(mpath))
+    assert manifest["superstep"] == 3
+    assert [os.path.join(pdir, d) for d in commit_dirs(pdir)] == [
+        manifest["vertices_path"]
+    ]
+
+    before = commit_dirs(pdir)
+    written = []
+    write = DataFrameWriter.parquet
+
+    def record(self, path, *args, **kwargs):
+        written.append(os.path.relpath(path, pdir).split(os.sep)[0])
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", record)
+    eng2 = GASEngine(spark, e, checkpoint_dir=ckpt, checkpoint_every=1)
+    pagerank(spark, e, vertices=make_vertices(SMALL_N), max_iter=3, engine=eng2)
+    assert len(written) == len(set(written)) == 3
+    assert not set(written) & before
+    manifest = json.load(open(mpath))
+    assert [os.path.join(pdir, d) for d in commit_dirs(pdir)] == [
+        manifest["vertices_path"]
+    ]
+    assert sum(p["rows"] for p in manifest["partition_lineage"]) == SMALL_N
+
+
+def test_failed_publish_keeps_the_previous_commit(
+    spark, make_edges, make_vertices, tmp_path, monkeypatch
+):
+    """A crash between a commit's data write and its manifest swap leaves
+    the previous manifest and its data in place, and a resume from them
+    reaches the uninterrupted answer."""
+    n = 300
+    edges = random_graph(n=n, m=360, seed=3)
+    e = canonicalize(make_edges(edges))
+    ckpt = str(tmp_path / "cc_crash_ck")
+    pdir = os.path.join(ckpt, "cc")
+    mpath = os.path.join(pdir, "manifest.json")
+    replace = os.replace
+    publishes = []
+
+    def crash_on_second_publish(src, dst):
+        if dst == mpath:
+            publishes.append(src)
+            if len(publishes) == 2:
+                raise OSError("crash before the manifest swap")
+        return replace(src, dst)
+
+    monkeypatch.setattr(gas.os, "replace", crash_on_second_publish)
+    eng1 = GASEngine(spark, e, checkpoint_dir=ckpt, checkpoint_every=1)
+    with pytest.raises(OSError, match="manifest swap"):
+        connected_components(spark, e, vertices=make_vertices(n), engine=eng1)
+    monkeypatch.undo()
+
+    manifest = json.load(open(mpath))
+    assert manifest["superstep"] == 1
+    assert os.path.isdir(manifest["vertices_path"])
+    assert sum(p["rows"] for p in manifest["partition_lineage"]) == n
+
+    eng2 = GASEngine(spark, e, checkpoint_dir=ckpt, checkpoint_every=1)
+    res = connected_components(
+        spark, e, vertices=make_vertices(n), engine=eng2, resume=True
+    )
+    assert res.converged
+    expected = cc_ref(n, edges)
+    assert {r["id"]: r["label"] for r in res.vertices.collect()} == {
+        v: expected[v] for v in range(n)
+    }
+    straight = connected_components(spark, e, vertices=make_vertices(n))
+    assert records(res) == records(straight)
+    # the crashed write's directory was swept by the next publish
+    manifest = json.load(open(mpath))
+    assert [os.path.join(pdir, d) for d in commit_dirs(pdir)] == [
+        manifest["vertices_path"]
+    ]
+
+
+def test_resume_from_two_dataset_manifest(spark, make_edges, make_vertices, tmp_path):
+    """Manifests of the older format, a vertex state without the _changed
+    flag plus a frontier dataset, still resume."""
+    n = 300
+    edges = random_graph(n=n, m=360, seed=3)
+    e = canonicalize(make_edges(edges))
+    ckpt = str(tmp_path / "cc_old_ck")
+    eng1 = GASEngine(spark, e, checkpoint_dir=ckpt, checkpoint_every=1)
+    partial = connected_components(
+        spark, e, vertices=make_vertices(n), max_iter=2, engine=eng1
+    )
+    assert not partial.converged
+
+    mpath = os.path.join(ckpt, "cc", "manifest.json")
+    manifest = json.load(open(mpath))
+    state = spark.read.parquet(manifest["vertices_path"])
+    old = str(tmp_path / "cc_old_layout")
+    vpath, fpath = os.path.join(old, "vertices"), os.path.join(old, "frontier")
+    state.drop("_changed").write.parquet(vpath)
+    state.filter("_changed").select("id").write.parquet(fpath)
+    manifest.update(vertices_path=vpath, frontier_path=fpath)
+    json.dump(manifest, open(mpath, "w"))
+
+    eng2 = GASEngine(spark, e, checkpoint_dir=ckpt, checkpoint_every=5)
+    res = connected_components(
+        spark, e, vertices=make_vertices(n), engine=eng2, resume=True
+    )
+    assert res.converged
+    assert res.metrics[-1].superstep == 2 + res.supersteps
+    expected = cc_ref(n, edges)
+    assert {r["id"]: r["label"] for r in res.vertices.collect()} == {
+        v: expected[v] for v in range(n)
+    }

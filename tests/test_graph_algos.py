@@ -4,19 +4,22 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from fixtures import MULTI, MULTI_N, SMALL, SMALL_N, TRIVIAL, TRIVIAL_N, ches_like, random_graph
 from oracles import bfs_ref, cc_ref, lpa_ref, sssp_ref, triangles_ref
 
 from mirrorofmapgraph_spark.operators.bfs import bfs, pred_extract
 from mirrorofmapgraph_spark.operators.cc import connected_components
 from mirrorofmapgraph_spark.operators.labelprop import label_propagation
+from mirrorofmapgraph_spark.operators.pagerank import pagerank
 from mirrorofmapgraph_spark.operators.sssp import sssp
 from mirrorofmapgraph_spark.operators.triangles import (
     triangle_count,
     triangle_count_per_vertex,
     triangles,
 )
-from mirrorofmapgraph_spark.sources.edges import canonicalize
+from mirrorofmapgraph_spark.plans.gas import GASEngine
+from mirrorofmapgraph_spark.sources.edges import canonical_undirected, canonicalize
 
 
 # ---- connected components (exact; component id = min vertex id) ----------
@@ -378,3 +381,32 @@ def test_bfs_duplicate_dataframe_sources(spark, make_edges, make_vertices):
         reach = [d[v] for d in per_src if d[v] >= 0]
         want = min(reach) if reach else -1
         assert got[v] == want, f"vertex {v}: {got[v]} != {want}"
+
+
+# ---- engine storage --------------------------------------------------------
+
+@pytest.mark.parametrize("algo", ["pagerank", "cc", "labelprop"])
+def test_run_leaves_only_its_result_persisted(spark, make_edges, make_vertices, algo):
+    """After a run and engine.unpersist(), the one RDD the run leaves
+    persisted is its returned state: the discarded speculative cuts, the
+    entry frontier and the last frontiers are released at loop exit."""
+    sc = spark.sparkContext
+
+    def persisted():
+        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
+
+    n = 200
+    e = canonicalize(make_edges(random_graph(n=n, m=600, seed=7)))
+    before = persisted()
+    if algo == "pagerank":
+        engine = GASEngine(spark, e)
+        res = pagerank(spark, e, vertices=make_vertices(n), damping=0.5, engine=engine)
+    elif algo == "cc":
+        engine = GASEngine(spark, e)
+        res = connected_components(spark, e, vertices=make_vertices(n), engine=engine)
+    else:
+        engine = GASEngine(spark, canonical_undirected(e))
+        res = label_propagation(spark, e, vertices=make_vertices(n), engine=engine)
+    engine.unpersist()
+    assert len(persisted() - before) == 1
+    assert res.vertices.count() == n

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.gas import GASEngine, GASProgram, GASResult
+from ..plans.gas import GASEngine, GASProgram, GASResult, operator_engine
 from ..sources.edges import vertex_frame
 
 
@@ -59,19 +59,18 @@ def bfs(
     ``vertices.agg(min(id))``) never forces a driver-side collect inside
     the measured query. Source ids not present in the graph are ignored.
     """
-    if engine is None:
-        engine = GASEngine(spark, edges, **engine_kwargs)
-    if vertices is None:
-        # the vertex set comes from the engine's one endpoint-stats
-        # aggregation (see GASEngine.vertex_stats)
-        vertices = engine.vertex_stats("fwd").select("id")
-    marked = _mark_sources(vertices, source)
-    v0 = marked.select(
-        "id",
-        F.when(F.col("_is_src"), F.lit(0)).otherwise(F.lit(-1)).cast("long").alias("depth"),
-    )
-    frontier0 = marked.filter(F.col("_is_src")).select("id")
-    return engine.run(bfs_program(), v0, frontier0, max_iter=max_iter)
+    with operator_engine(spark, edges, engine, **engine_kwargs) as eng:
+        if vertices is None:
+            # the vertex set comes from the engine's one endpoint-stats
+            # aggregation (see GASEngine.vertex_stats)
+            vertices = eng.vertex_stats("fwd").select("id")
+        marked = _mark_sources(vertices, source)
+        v0 = marked.select(
+            "id",
+            F.when(F.col("_is_src"), F.lit(0)).otherwise(F.lit(-1)).cast("long").alias("depth"),
+        )
+        frontier0 = marked.filter(F.col("_is_src")).select("id")
+        return eng.run(bfs_program(), v0, frontier0, max_iter=max_iter)
 
 
 def _mark_sources(

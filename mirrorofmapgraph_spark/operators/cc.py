@@ -10,14 +10,13 @@ Reference: Algorithms/CC/cc.h —
   (cc.cu:111-130).
 
 Spark-first: push-mode min-combiner supersteps over BOTH directions of
-the ONE raw edge table (GASEngine expand_dir="all" — the reference's
-CSC+CSR dual traversal, enactor_vertex_centric.cuh:574-687). The engine
-derives the layout from the direction: "all" persists a src- and a
-dst-partitioned copy (the second built cache-to-cache), so both passes'
-state joins are exchange-free. The min combiner is duplicate-insensitive,
-so no symmetrize/dedup build shuffle is needed at all;
-``pre_symmetrized=True`` keeps the legacy path for callers that already
-hold a symmetric table.
+the ONE edge table it is given (GASEngine expand_dir="all" — the
+reference's CSC+CSR dual traversal, enactor_vertex_centric.cuh:574-687).
+The engine derives the layout from the direction: "all" persists a src-
+and a dst-partitioned copy (the second built cache-to-cache), so both
+passes' state joins are exchange-free. The min combiner is
+duplicate-insensitive, so no symmetrize/dedup build shuffle is needed,
+and a table that already holds both directions gives the same labels.
 """
 
 from __future__ import annotations
@@ -25,14 +24,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.gas import GASEngine, GASProgram, GASResult
+from ..plans.gas import GASEngine, GASProgram, GASResult, operator_engine
 
 
-def cc_program(expand_dir: str = "all") -> GASProgram:
+def cc_program() -> GASProgram:
     return GASProgram(
         name="cc",
         mode="push",
-        expand_dir=expand_dir,
+        expand_dir="all",
         state_cols=("label",),
         message=lambda df: F.col("label"),  # push my label (cc.h:289-302)
         combiner=F.min,  # contract atomicMin (cc.h:328-342)
@@ -49,7 +48,6 @@ def connected_components(
     *,
     vertices: DataFrame | None = None,
     max_iter: int = 200,
-    pre_symmetrized: bool = False,
     engine: GASEngine | None = None,
     resume: bool = False,
     **engine_kwargs,
@@ -61,20 +59,12 @@ def connected_components(
     reference, where every vertex 0..n-1 exists; cc.cu:184-192 counts
     components as distinct labels).
     """
-    # pre_symmetrized tables already hold both directions -> expand "out";
-    # raw directed tables are traversed in both directions natively.
-    expand_dir = "out" if pre_symmetrized else "all"
-    if engine is None:
-        engine = GASEngine(spark, edges, **engine_kwargs)
-    if vertices is None:
-        # the vertex set comes from the engine's one endpoint-stats
-        # aggregation (see GASEngine.vertex_stats) instead of a separate
-        # vertex_frame distinct over the raw lineage
-        vertices = engine.vertex_stats(
-            "fwd" if pre_symmetrized else "both"
-        ).select("id")
-    v0 = vertices.select("id", F.col("id").alias("label"))
-    frontier0 = vertices.select("id")  # srcVertex() == ALL (cc.h:68-71)
-    return engine.run(
-        cc_program(expand_dir), v0, frontier0, max_iter=max_iter, resume=resume
-    )
+    with operator_engine(spark, edges, engine, **engine_kwargs) as eng:
+        if vertices is None:
+            # the vertex set comes from the engine's one endpoint-stats
+            # aggregation (see GASEngine.vertex_stats) instead of a separate
+            # vertex_frame distinct over the raw lineage
+            vertices = eng.vertex_stats("both").select("id")
+        v0 = vertices.select("id", F.col("id").alias("label"))
+        frontier0 = vertices.select("id")  # srcVertex() == ALL (cc.h:68-71)
+        return eng.run(cc_program(), v0, frontier0, max_iter=max_iter, resume=resume)

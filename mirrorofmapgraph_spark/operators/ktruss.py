@@ -39,13 +39,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.gas import release_local_checkpoint
-from .triangles import canonical_undirected, triangles
+from .triangles import pair_triangles, sorted3, undirected_pairs
 
 
 def _edge_support(und: DataFrame) -> DataFrame:
     """(a, b, support) for every canonical edge of ``und`` with >= 1
     triangle; edges in no triangle simply don't appear (support 0)."""
-    tri = triangles(und.select(F.col("a").alias("src"), F.col("b").alias("dst")))
+    tri = pair_triangles(und)
     charged = (
         tri.select(F.col("a"), F.col("b"))
         .unionByName(tri.select(F.col("a"), F.col("c").alias("b")))
@@ -73,11 +73,8 @@ def _destroyed_triangles(state: DataFrame, removed: DataFrame) -> DataFrame:
     closed = cand.join(
         nbr.select(F.col("v").alias("b"), F.col("w").alias("c")), ["b", "c"], "left_semi"
     )
-    x = F.least("a", "b", "c")
-    z = F.greatest("a", "b", "c")
-    return closed.select(
-        x.alias("x"), (F.col("a") + F.col("b") + F.col("c") - x - z).alias("y"), z.alias("z")
-    ).distinct()
+    x, y, z = sorted3("a", "b", "c")
+    return closed.select(x.alias("x"), y.alias("y"), z.alias("z")).distinct()
 
 
 def ktruss(
@@ -96,7 +93,7 @@ def ktruss(
     if k < 2:
         raise ValueError("k must be >= 2")
     need = k - 2
-    und = canonical_undirected(edges)
+    und = undirected_pairs(edges)
     state = (
         und.join(_edge_support(und), ["a", "b"], "left")
         .select(

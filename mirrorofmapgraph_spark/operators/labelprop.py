@@ -22,12 +22,12 @@ metrics, and durable checkpoint/resume.
 
 Edge layout: the undirected neighborhood is traversed as BOTH directions
 of ONE canonical (src < dst) edge table (gather_dir="all",
-sources/edges.py canonical_undirected) — identical neighbor multisets
-to the old symmetrize() path (each undirected edge delivers exactly one
-message per endpoint) without its build shuffle. The engine persists the
-table src- and dst-partitioned for the "all" direction, so neither pass
-exchanges per superstep. Self-loops are excluded from neighbor counts (as
-in the oracle's src <> dst edge derivation).
+sources/edges.py canonical_undirected): each undirected edge delivers
+exactly one message per endpoint, so a table that already holds both
+directions canonicalizes to the same neighbor multisets. The engine
+persists the table src- and dst-partitioned for the "all" direction, so
+neither pass exchanges per superstep. Self-loops are excluded from
+neighbor counts (as in the oracle's src <> dst edge derivation).
 """
 
 from __future__ import annotations
@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.gas import GASEngine, GASProgram, GASResult
+from ..plans.gas import GASEngine, GASProgram, GASResult, operator_engine
 from ..sources.edges import canonical_undirected
 
 
@@ -81,41 +81,24 @@ def label_propagation(
     *,
     vertices: DataFrame | None = None,
     max_iter: int = 20,
-    pre_symmetrized: bool = False,
-    num_partitions: int | None = None,
     engine: GASEngine | None = None,
     resume: bool = False,
     **engine_kwargs,
 ) -> GASResult:
     """result.vertices = (id, label). Isolated vertices keep their own id.
 
-    ``pre_symmetrized=True``: ``edges`` already holds both directions of
-    every undirected edge exactly once — traversed forward only (the
-    legacy layout; twice the rows of the canonical table).
-
     When passing ``engine=``, build it over the SAME table this function
-    would use: ``canonical_undirected(edges)`` (default) or the
-    symmetrized table (with ``pre_symmetrized=True``).
+    uses: ``canonical_undirected(edges)``.
     """
-    if pre_symmetrized:
-        und = edges
-        prog_dir = "in"
-    else:
-        und = canonical_undirected(edges)
-        prog_dir = "all"
-    if engine is None:
-        engine = GASEngine(
-            spark, und, num_partitions=num_partitions, **engine_kwargs
+    und = canonical_undirected(edges)
+    with operator_engine(spark, und, engine, **engine_kwargs) as eng:
+        if vertices is None:
+            # the vertex set comes from the engine's one endpoint-stats
+            # aggregation (see GASEngine.vertex_stats) instead of a separate
+            # vertex_frame distinct re-running the canonical-undirected build
+            vertices = eng.vertex_stats("both").select("id")
+        v0 = vertices.select("id", F.col("id").alias("label"))
+        frontier0 = vertices.select("id")
+        return eng.run(
+            labelprop_program(), v0, frontier0, max_iter=max_iter, resume=resume
         )
-    if vertices is None:
-        # the vertex set comes from the engine's one endpoint-stats
-        # aggregation (see GASEngine.vertex_stats) instead of a separate
-        # vertex_frame distinct re-running the canonical-undirected build
-        vertices = engine.vertex_stats(
-            "both" if prog_dir == "all" else "fwd"
-        ).select("id")
-    prog = labelprop_program()
-    prog.gather_dir = prog_dir
-    v0 = vertices.select("id", F.col("id").alias("label"))
-    frontier0 = vertices.select("id")
-    return engine.run(prog, v0, frontier0, max_iter=max_iter, resume=resume)

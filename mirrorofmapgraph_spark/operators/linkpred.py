@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .triangles import canonical_undirected
+from .triangles import undirected_pairs
 
 
 def link_prediction(
@@ -49,7 +49,7 @@ def link_prediction(
     see module docstring). ``min_common``: emit only pairs with at least
     this many (surviving) common neighbors.
     """
-    und = canonical_undirected(edges)
+    und = undirected_pairs(edges)
     sym = und.select(F.col("a").alias("w"), F.col("b").alias("n")).unionByName(
         und.select(F.col("b").alias("w"), F.col("a").alias("n"))
     )

@@ -1,36 +1,43 @@
 """Triangle counting — one-shot dataflow (no superstep loop).
 
 Not in the reference (SURVEY.md §2.5 item 5) but required by the north
-rule. Standard Spark-first formulation: canonicalize to undirected edges
-with src < dst (each triangle {a<b<c} appears exactly once as the edge
-pattern (a,b),(b,c),(a,c)), then two self-joins.
+rule. Each edge is canonicalized to an undirected pair a < b
+(sources/edges.py canonical_undirected), then oriented from its lower- to
+its higher-degree endpoint (ties by id), and every oriented edge
+intersects its endpoints' sorted out-neighbor arrays: each triangle shows
+up exactly once, as the apex of the one oriented edge whose endpoints
+both point at it.
 
-Scale notes: both joins are equi-joins on single keys — shuffle-hash /
-sort-merge with AQE skew splitting. The classic optimization for skew
-(orient edges from lower- to higher-degree endpoint so wedges are counted
-at low-degree centers) is applied when ``degree_oriented=True``: it bounds
-wedge counts by O(m^1.5) instead of sum(deg^2) — the difference between
-feasible and not on a power-law web graph.
+Scale notes: the orientation bounds the wedges at O(m^1.5) instead of
+sum(deg^2) — the difference between feasible and not on a power-law web
+graph — and caps each adjacency array at O(sqrt m); every join is a
+single-key equi-join (shuffle-hash / sort-merge, AQE-splittable).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.edges import canonical_undirected
 
-def canonical_undirected(edges: DataFrame) -> DataFrame:
-    """Distinct undirected edges as (a, b) with a < b; self-loops dropped."""
-    return (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
+
+def undirected_pairs(edges: DataFrame) -> DataFrame:
+    """canonical_undirected(edges) as (a, b) with a < b — the triangle
+    family's input (triangles, ktruss, linkpred)."""
+    return canonical_undirected(edges).select(
+        F.col("src").alias("a"), F.col("dst").alias("b")
     )
 
 
-def _degree_oriented(und: DataFrame) -> DataFrame:
+def sorted3(x, y, z) -> tuple[Column, Column, Column]:
+    """(min, median, max) of three columns from pairwise least/greatest:
+    no arithmetic, so ids near the int64 limit cannot overflow."""
+    lo, hi = F.least(x, y), F.greatest(x, y)
+    return F.least(lo, z), F.greatest(lo, F.least(hi, z)), F.greatest(hi, z)
+
+
+def _orient_by_degree(und: DataFrame) -> DataFrame:
     """Re-orient each undirected edge from lower-degree to higher-degree
     endpoint (ties by id). Wedge enumeration then pivots at the low-degree
     vertex — the standard O(m^1.5) triangle bound."""
@@ -53,8 +60,9 @@ def _degree_oriented(und: DataFrame) -> DataFrame:
     )
 
 
-def _oriented_common_neighbors(edges: DataFrame) -> DataFrame:
-    """(x, y, _common) per degree-oriented edge: the sorted out-neighbor
+def _oriented_common_neighbors(und: DataFrame) -> DataFrame:
+    """(x, y, _common) per degree-oriented edge of the canonical pairs
+    ``und`` (``undirected_pairs``): the sorted out-neighbor
     arrays of both endpoints intersected — ``_common`` lists exactly the
     triangle apexes z with x->z and y->z. Each triangle {x', y', z'} has
     exactly ONE oriented edge whose endpoints both point at the third
@@ -68,8 +76,8 @@ def _oriented_common_neighbors(edges: DataFrame) -> DataFrame:
     array_intersect per edge."""
     from pyspark.storagelevel import StorageLevel
 
-    und = canonical_undirected(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    o = _degree_oriented(und).persist(StorageLevel.MEMORY_AND_DISK)
+    und = und.persist(StorageLevel.MEMORY_AND_DISK)
+    o = _orient_by_degree(und).persist(StorageLevel.MEMORY_AND_DISK)
     adj = o.groupBy("x").agg(F.sort_array(F.collect_list("y")).alias("_nbrs"))
     return (
         o.join(adj, on="x")
@@ -83,48 +91,36 @@ def _oriented_common_neighbors(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangles(edges: DataFrame, degree_oriented: bool = True) -> DataFrame:
+def pair_triangles(und: DataFrame) -> DataFrame:
+    """All triangles of the canonical pairs ``und`` (``undirected_pairs``)
+    as rows (a, b, c) with a < b < c (exactly once each). k-truss calls it
+    on its own pairs, which are canonical already."""
+    tri = _oriented_common_neighbors(und).select(
+        "x", "y", F.explode("_common").alias("z")
+    )
+    a, b, c = sorted3("x", "y", "z")
+    return tri.select(a.alias("a"), b.alias("b"), c.alias("c"))
+
+
+def triangles(edges: DataFrame) -> DataFrame:
     """All triangles as rows (a, b, c) with a < b < c (exactly once each)."""
-    from pyspark.storagelevel import StorageLevel
-
-    if degree_oriented:
-        tri = _oriented_common_neighbors(edges).select(
-            "x", "y", F.explode("_common").alias("z")
-        )
-        # median of three from pairwise least/greatest: no arithmetic, so
-        # ids near the int64 limit cannot overflow
-        xy_lo, xy_hi = F.least("x", "y"), F.greatest("x", "y")
-        return tri.select(
-            F.least(xy_lo, "z").alias("a"),
-            F.greatest(xy_lo, F.least(xy_hi, "z")).alias("b"),
-            F.greatest(xy_hi, "z").alias("c"),
-        )
-    # plain a<b<c join chain
-    und = canonical_undirected(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    e1 = und.select(F.col("a"), F.col("b"))
-    e2 = und.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    wedges = e1.join(e2, on="b")
-    return wedges.join(
-        und.select(F.col("a"), F.col("b").alias("c")), on=["a", "c"], how="inner"
-    ).select("a", "b", "c")
+    return pair_triangles(undirected_pairs(edges))
 
 
-def triangle_count(edges: DataFrame, degree_oriented: bool = True) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Single-row DataFrame (n_triangles long)."""
-    if degree_oriented:
-        # same enumeration as triangles(); the count only needs the
-        # intersection SIZES, so skip the row explosion entirely
-        return _oriented_common_neighbors(edges).agg(
-            F.coalesce(
-                F.sum(F.size("_common").cast("long")), F.lit(0).cast("long")
-            ).alias("n_triangles")
-        )
-    return triangles(edges, degree_oriented).agg(F.count("*").alias("n_triangles"))
+    # same enumeration as triangles(); the count only needs the
+    # intersection SIZES, so skip the row explosion entirely
+    return _oriented_common_neighbors(undirected_pairs(edges)).agg(
+        F.coalesce(
+            F.sum(F.size("_common").cast("long")), F.lit(0).cast("long")
+        ).alias("n_triangles")
+    )
 
 
-def triangle_count_per_vertex(edges: DataFrame, degree_oriented: bool = True) -> DataFrame:
+def triangle_count_per_vertex(edges: DataFrame) -> DataFrame:
     """(id, n_triangles) — triangles incident to each vertex."""
-    tri = triangles(edges, degree_oriented)
+    tri = triangles(edges)
     stacked = (
         tri.select(F.col("a").alias("id"))
         .unionByName(tri.select(F.col("b").alias("id")))

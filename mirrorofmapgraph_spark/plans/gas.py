@@ -50,7 +50,8 @@ import os
 import shutil
 import time
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 import pyarrow.parquet as pq
@@ -61,6 +62,10 @@ from pyspark.storagelevel import StorageLevel
 from pyspark.util import InheritableThread
 
 _RDD_WARN_QUIETED = False
+
+#: seconds GASEngine._read_observation waits for a superstep's observation
+#: before it aggregates the applied frame itself
+OBSERVATION_WAIT_S = 30
 
 #: one DEBUG record per superstep; its ``gas_step`` attribute holds the
 #: program name and the step's SuperstepMetrics fields
@@ -490,9 +495,16 @@ class GASEngine:
         raise ValueError(f"unknown direction key {dkey!r}")
 
     def unpersist(self) -> None:
+        """Release the persisted edge copies and what was derived from them."""
         for df in self._edges_by.values():
             df.unpersist()
         self._edges_by.clear()
+        self.release_derived()
+
+    def release_derived(self) -> None:
+        """Release what the engine derived from its edge copies (the
+        ``vertex_stats`` cuts and the readbacks cached with them) and keep
+        the copies persisted."""
         for df in self._vstats.values():
             self._release_cut(df)
         self._vstats.clear()
@@ -1046,8 +1058,8 @@ class GASEngine:
         on the pinned Spark 4.1.2). ``obs.get`` itself blocks with no
         timeout — if a future Spark stopped surfacing the job to
         listeners, every superstep would hang silently. Defensive
-        contract: wait on the JVM future for up to 30 s on this thread,
-        then fall back to one explicit aggregate over the
+        contract: wait on the JVM future for up to OBSERVATION_WAIT_S on
+        this thread, then fall back to one explicit aggregate over the
         already-checkpointed frame (cheap: the RDD is materialized; same
         values)."""
         fut = obs._jo.future()  # noqa: SLF001
@@ -1055,7 +1067,10 @@ class GASEngine:
             jvm = self.spark._jvm
             try:
                 jvm.scala.concurrent.Await.ready(
-                    fut, jvm.scala.concurrent.duration.Duration.apply(30, "s")
+                    fut,
+                    jvm.scala.concurrent.duration.Duration.apply(
+                        int(OBSERVATION_WAIT_S * 1000), "ms"
+                    ),
                 )
             except Py4JJavaError:  # TimeoutException: it never fired
                 pass
@@ -1269,3 +1284,36 @@ class GASEngine:
             out = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
             return out.distinct()
         return applied.filter(F.col("_changed")).select("id")
+
+
+@contextmanager
+def operator_engine(
+    spark: SparkSession,
+    edges: DataFrame,
+    engine: GASEngine | None,
+    **engine_kwargs,
+) -> Iterator[GASEngine]:
+    """The engine a GAS operator runs on: the caller's ``engine``, left as
+    it is, or a new one over ``edges`` whose derived frames are released
+    (``release_derived``) when the block exits. The operator returns its
+    result from inside the block: the result is a materialized local
+    checkpoint (the last applied cut, or the counted entry cut when no
+    superstep runs), so it reads no ``vertex_stats`` frame or frontier the
+    release frees.
+
+    The new engine's persisted edge copies stay in Spark's cache, so
+    repeated calls over the same edges grow the cache by their results
+    only: Spark's cache manager hands a later engine over an equal plan
+    the same copies instead of a re-read and re-shuffle of the raw edges
+    (measured at sf0.1 in local[4]: a fresh build added 0.4-1.2 s to
+    pagerank3's 1.6-2.0 s).
+    The caller releases them with ``engine.unpersist()`` on an engine it
+    passes, or ``spark.catalog.clearCache()``."""
+    if engine is not None:
+        yield engine
+        return
+    own = GASEngine(spark, edges, **engine_kwargs)
+    try:
+        yield own
+    finally:
+        own.release_derived()

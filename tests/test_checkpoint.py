@@ -38,7 +38,7 @@ def test_cc_resume_equivalence(spark, make_edges, make_vertices, tmp_path):
     # phase 1: run only 2 supersteps ("interrupted"), durable checkpoint each
     eng1 = GASEngine(spark, e, checkpoint_dir=ckpt, checkpoint_every=1)
     partial = connected_components(
-        spark, e, vertices=make_vertices(n), max_iter=2, pre_symmetrized=True, engine=eng1
+        spark, e, vertices=make_vertices(n), max_iter=2, engine=eng1
     )
     assert not partial.converged
 
@@ -52,7 +52,7 @@ def test_cc_resume_equivalence(spark, make_edges, make_vertices, tmp_path):
     # phase 2: fresh engine resumes from the manifest and converges
     eng2 = GASEngine(spark, e, checkpoint_dir=ckpt, checkpoint_every=5)
     res = connected_components(
-        spark, e, vertices=make_vertices(n), pre_symmetrized=True, engine=eng2, resume=True
+        spark, e, vertices=make_vertices(n), engine=eng2, resume=True
     )
     assert res.converged
     got = {r["id"]: r["label"] for r in res.vertices.collect()}
@@ -63,9 +63,7 @@ def test_cc_resume_equivalence(spark, make_edges, make_vertices, tmp_path):
     assert res.metrics[-1].superstep == 2 + res.supersteps
     # the frontier re-derived from the stored _changed flag is the one the
     # interrupted run would have gone on with
-    straight = connected_components(
-        spark, e, vertices=make_vertices(n), pre_symmetrized=True
-    )
+    straight = connected_components(spark, e, vertices=make_vertices(n))
     assert records(res) == records(straight)
 
 

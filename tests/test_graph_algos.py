@@ -131,8 +131,6 @@ def check_triangles(spark, make_edges, edges, n):
     expected = triangles_ref(n, edges)
     got = {(r["a"], r["b"], r["c"]) for r in triangles(e).collect()}
     assert got == expected
-    got_plain = {(r["a"], r["b"], r["c"]) for r in triangles(e, degree_oriented=False).collect()}
-    assert got_plain == expected
     cnt = triangle_count(e).collect()[0]["n_triangles"]
     assert cnt == len(expected)
     per_v = {r["id"]: r["n_triangles"] for r in triangle_count_per_vertex(e).collect()}
@@ -327,28 +325,28 @@ def test_gather_out_direction_matches_reversed_graph(spark, make_edges, make_ver
 
 def test_cc_native_all_matches_symmetrized(spark, make_edges, make_vertices):
     """expand_dir='all' over the RAW directed table (edge table persisted
-    once, no symmetrize build shuffle) must equal the legacy symmetrized
-    path exactly — round-2 verdict missing #1."""
+    once, no symmetrize build shuffle) gives the same labels as over the
+    symmetrized table: the min combiner ignores the duplicate messages."""
     from mirrorofmapgraph_spark.sources.edges import canonicalize, symmetrize
 
     n = 200
     edges = random_graph(n=n, m=500, seed=21)
     e = canonicalize(make_edges(edges))
     a = connected_components(spark, e, vertices=make_vertices(n))
-    b = connected_components(
-        spark, symmetrize(e), vertices=make_vertices(n), pre_symmetrized=True
-    )
+    b = connected_components(spark, symmetrize(e), vertices=make_vertices(n))
     ga = {r["id"]: r["label"] for r in a.vertices.collect()}
     gb = {r["id"]: r["label"] for r in b.vertices.collect()}
-    assert ga == gb
+    expected = cc_ref(n, edges)
+    assert ga == gb == {v: expected[v] for v in range(n)}
     assert a.converged and b.converged
 
 
-def test_labelprop_canonical_matches_symmetrized(spark, make_edges):
-    """gather_dir='all' over the canonical (src<dst) table must reproduce
-    the symmetrized path exactly per superstep (neighbor label MULTISETS
-    matter for the mode combiner, not just connectivity) — including on a
-    graph with reciprocal directed pairs."""
+def test_labelprop_canonical_matches_symmetrized(spark, make_edges, make_vertices):
+    """gather_dir='all' over the canonical (src<dst) table reproduces the
+    oracle per superstep (neighbor label MULTISETS matter for the mode
+    combiner, not just connectivity) — including on a graph with
+    reciprocal directed pairs — and a symmetrized input canonicalizes to
+    the same labels."""
     from mirrorofmapgraph_spark.operators.labelprop import label_propagation
     from mirrorofmapgraph_spark.sources.edges import canonicalize, symmetrize
 
@@ -359,11 +357,13 @@ def test_labelprop_canonical_matches_symmetrized(spark, make_edges):
     edges = edges + [(d, s, w) for s, d, w in edges[:40]]
     e = canonicalize(make_edges(edges))
     for k in (1, 2, 5):
-        a = label_propagation(spark, e, max_iter=k)
-        b = label_propagation(spark, symmetrize(e), max_iter=k, pre_symmetrized=True)
+        a = label_propagation(spark, e, vertices=make_vertices(n), max_iter=k)
+        b = label_propagation(spark, symmetrize(e), vertices=make_vertices(n), max_iter=k)
         ga = {r["id"]: r["label"] for r in a.vertices.collect()}
         gb = {r["id"]: r["label"] for r in b.vertices.collect()}
-        assert ga == gb, f"diverged at max_iter={k}"
+        expected = lpa_ref(n, edges, max_iter=k)
+        assert ga == {v: expected[v] for v in range(n)}, f"diverged at max_iter={k}"
+        assert gb == ga, f"symmetrized input diverged at max_iter={k}"
 
 
 def test_bfs_duplicate_dataframe_sources(spark, make_edges, make_vertices):
@@ -410,3 +410,59 @@ def test_run_leaves_only_its_result_persisted(spark, make_edges, make_vertices, 
     engine.unpersist()
     assert len(persisted() - before) == 1
     assert res.vertices.count() == n
+
+
+def test_repeated_operator_calls_persist_only_their_results(
+    spark, make_edges, make_vertices
+):
+    """A GAS operator called without ``engine=`` releases the derived
+    frames of the engine it builds once the result is cut, and leaves the
+    persisted edge copies in Spark's cache for the next call over the same
+    edges: a repeated call adds exactly its returned state to the
+    persistent RDDs, clearing the cache leaves exactly the two returned
+    states, and those still read."""
+    from mirrorofmapgraph_spark.operators.pagerank import (
+        personalized_pagerank,
+        weighted_pagerank,
+    )
+
+    sc = spark.sparkContext
+
+    def persisted():
+        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
+
+    def state_rdd(df):
+        """Id of the checkpointed RDD a result frame reads."""
+        plan = df._jdf.queryExecution().analyzed()
+        while not plan.getClass().getName().endswith(".LogicalRDD"):
+            plan = plan.children().apply(0)
+        return int(plan.rdd().id())
+
+    n = 120
+    e = canonicalize(make_edges(random_graph(n=n, m=400, seed=5)))
+    v = make_vertices(n)
+    calls = {
+        "pagerank": lambda: pagerank(spark, e, vertices=v, damping=0.5, max_iter=4),
+        "personalized_pagerank": lambda: personalized_pagerank(
+            spark, e, [0, 1], vertices=v, damping=0.5, max_iter=4
+        ),
+        "weighted_pagerank": lambda: weighted_pagerank(
+            spark, e, vertices=v, damping=0.5, max_iter=4
+        ),
+        "cc": lambda: connected_components(spark, e, vertices=v),
+        "labelprop": lambda: label_propagation(spark, e, vertices=v, max_iter=3),
+        "bfs": lambda: bfs(spark, e, 0, vertices=v),
+        "sssp": lambda: sssp(spark, e, 0, vertices=v),
+    }
+    for name, call in calls.items():
+        spark.catalog.clearCache()
+        before = persisted()
+        first = call()
+        mid = persisted()
+        second = call()
+        assert persisted() - mid == {state_rdd(second.vertices)}, name
+        spark.catalog.clearCache()
+        new = persisted() - before
+        assert new == {state_rdd(r.vertices) for r in (first, second)}, name
+        assert len(new) == 2, name
+        assert [r.vertices.count() for r in (first, second)] == [n, n], name

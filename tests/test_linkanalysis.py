@@ -208,6 +208,18 @@ def test_ktruss_random(spark, make_edges):
         check_ktruss(spark, make_edges, edges, k)
 
 
+def test_ktruss_ids_near_int64_limit(spark, make_edges):
+    """Ids near 2^62, whose three-way sum overflows int64: a K4 plus a
+    triangle hanging off one of its vertices peels to the K4's six edges
+    at support 2 for k=4 (the destroyed triangle's middle vertex is the
+    median of three, not a sum)."""
+    b = 2**62
+    k4 = [(b + i, b + j, 1.0) for i in range(4) for j in range(i + 1, 4)]
+    edges = k4 + [(b + 3, b + 4, 1.0), (b + 4, b + 5, 1.0), (b + 5, b + 3, 1.0)]
+    check_ktruss(spark, make_edges, edges, 4)
+    assert ktruss_ref(edges, 4) == {(s, d): 2 for s, d, _w in k4}
+
+
 def test_ktruss_empty_result(spark, make_edges):
     from mirrorofmapgraph_spark.operators.ktruss import ktruss
 

@@ -358,3 +358,32 @@ def test_failing_speculative_build_joins_materializer(spark, make_edges, algo):
         if isinstance(t, InheritableThread) and t.is_alive()
     ]
     assert not alive, alive
+
+
+def test_observation_that_never_fires_falls_back_to_aggregate(
+    spark, make_edges, monkeypatch
+):
+    """_read_observation waits OBSERVATION_WAIT_S for an observation, then
+    aggregates the applied frame itself: an observation attached to a
+    frame that no action runs returns the same ch/tr values."""
+    import time
+
+    from pyspark.sql import Observation
+
+    from mirrorofmapgraph_spark.operators.cc import cc_program
+    from mirrorofmapgraph_spark.plans import gas
+
+    monkeypatch.setattr(gas, "OBSERVATION_WAIT_S", 0.1)
+    engine = gas.GASEngine(spark, canonicalize(make_edges(SMALL)))
+    rs = gas.RunState(cc_program(), "both", 4)
+    applied = spark.createDataFrame(
+        [(0, 0, True, 2), (1, 0, True, 3), (2, 2, False, 1), (3, 3, False, 0)],
+        "id long, label long, _changed boolean, _msg_cnt long",
+    )
+    obs = Observation()
+    applied.observe(obs, *engine._obs_exprs(rs, applied))  # never run
+    t0 = time.monotonic()
+    got = engine._read_observation(rs, obs, applied)
+    assert time.monotonic() - t0 < 10
+    want = applied.agg(*engine._obs_exprs(rs, applied)).collect()[0].asDict()
+    assert got == want == {"ch": 2, "tr": 6}

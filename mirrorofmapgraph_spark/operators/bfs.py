@@ -59,18 +59,19 @@ def bfs(
     ``vertices.agg(min(id))``) never forces a driver-side collect inside
     the measured query. Source ids not present in the graph are ignored.
     """
+    program = bfs_program()
     with operator_engine(spark, edges, engine, **engine_kwargs) as eng:
         if vertices is None:
             # the vertex set comes from the engine's one endpoint-stats
             # aggregation (see GASEngine.vertex_stats)
-            vertices = eng.vertex_stats("fwd").select("id")
+            vertices = eng.vertex_stats(program.direction).select("id")
         marked = _mark_sources(vertices, source)
         v0 = marked.select(
             "id",
             F.when(F.col("_is_src"), F.lit(0)).otherwise(F.lit(-1)).cast("long").alias("depth"),
         )
         frontier0 = marked.filter(F.col("_is_src")).select("id")
-        return eng.run(bfs_program(), v0, frontier0, max_iter=max_iter)
+        return eng.run(program, v0, frontier0, max_iter=max_iter)
 
 
 def _mark_sources(

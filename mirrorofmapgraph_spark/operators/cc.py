@@ -10,11 +10,11 @@ Reference: Algorithms/CC/cc.h —
   (cc.cu:111-130).
 
 Spark-first: push-mode min-combiner supersteps over BOTH directions of
-the ONE edge table it is given (GASEngine expand_dir="all" — the
+the ONE edge table it is given (GASProgram direction="both" — the
 reference's CSC+CSR dual traversal, enactor_vertex_centric.cuh:574-687).
-The engine derives the layout from the direction: "all" persists a src-
-and a dst-partitioned copy (the second built cache-to-cache), so both
-passes' state joins are exchange-free. The min combiner is
+The direction is the engine's layout key: "both" persists a src- and a
+dst-partitioned copy (the second built cache-to-cache), so both passes'
+state joins are exchange-free. The min combiner is
 duplicate-insensitive, so no symmetrize/dedup build shuffle is needed,
 and a table that already holds both directions gives the same labels.
 """
@@ -31,7 +31,7 @@ def cc_program() -> GASProgram:
     return GASProgram(
         name="cc",
         mode="push",
-        expand_dir="all",
+        direction="both",
         state_cols=("label",),
         message=lambda df: F.col("label"),  # push my label (cc.h:289-302)
         combiner=F.min,  # contract atomicMin (cc.h:328-342)
@@ -59,12 +59,13 @@ def connected_components(
     reference, where every vertex 0..n-1 exists; cc.cu:184-192 counts
     components as distinct labels).
     """
+    program = cc_program()
     with operator_engine(spark, edges, engine, **engine_kwargs) as eng:
         if vertices is None:
             # the vertex set comes from the engine's one endpoint-stats
             # aggregation (see GASEngine.vertex_stats) instead of a separate
             # vertex_frame distinct over the raw lineage
-            vertices = eng.vertex_stats("both").select("id")
+            vertices = eng.vertex_stats(program.direction).select("id")
         v0 = vertices.select("id", F.col("id").alias("label"))
         frontier0 = vertices.select("id")  # srcVertex() == ALL (cc.h:68-71)
-        return eng.run(cc_program(), v0, frontier0, max_iter=max_iter, resume=resume)
+        return eng.run(program, v0, frontier0, max_iter=max_iter, resume=resume)

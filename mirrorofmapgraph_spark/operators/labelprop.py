@@ -21,11 +21,11 @@ enactor), gaining the stats-cut lineage hygiene, free observation
 metrics, and durable checkpoint/resume.
 
 Edge layout: the undirected neighborhood is traversed as BOTH directions
-of ONE canonical (src < dst) edge table (gather_dir="all",
+of ONE canonical (src < dst) edge table (direction="both",
 sources/edges.py canonical_undirected): each undirected edge delivers
 exactly one message per endpoint, so a table that already holds both
 directions canonicalizes to the same neighbor multisets. The engine
-persists the table src- and dst-partitioned for the "all" direction, so
+persists the table src- and dst-partitioned for the "both" direction, so
 neither pass exchanges per superstep. Self-loops are excluded from
 neighbor counts (as in the oracle's src <> dst edge derivation).
 """
@@ -58,7 +58,7 @@ def labelprop_program() -> GASProgram:
     return GASProgram(
         name="labelprop",
         mode="pull",
-        gather_dir="all",
+        direction="both",
         state_cols=("label",),
         message=lambda df: F.col("label"),  # neighbor's current label
         combiner=None,
@@ -90,15 +90,14 @@ def label_propagation(
     When passing ``engine=``, build it over the SAME table this function
     uses: ``canonical_undirected(edges)``.
     """
+    program = labelprop_program()
     und = canonical_undirected(edges)
     with operator_engine(spark, und, engine, **engine_kwargs) as eng:
         if vertices is None:
             # the vertex set comes from the engine's one endpoint-stats
             # aggregation (see GASEngine.vertex_stats) instead of a separate
             # vertex_frame distinct re-running the canonical-undirected build
-            vertices = eng.vertex_stats("both").select("id")
+            vertices = eng.vertex_stats(program.direction).select("id")
         v0 = vertices.select("id", F.col("id").alias("label"))
         frontier0 = vertices.select("id")
-        return eng.run(
-            labelprop_program(), v0, frontier0, max_iter=max_iter, resume=resume
-        )
+        return eng.run(program, v0, frontier0, max_iter=max_iter, resume=resume)

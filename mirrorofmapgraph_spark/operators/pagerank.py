@@ -93,14 +93,14 @@ def _run_rank(
     frontier (srcVertex() == ALL, PageRank.h:192-195).
 
     The stats come from the engine's ONE materialized endpoint-stats
-    aggregation over the forward table (vertex set and out-degrees in a
+    aggregation over the program's direction (vertex set and out-degrees in a
     single shuffle, shared with the engine's all-receivers/sender counts)
     instead of separate vertex_frame/out_degrees shuffles over the raw
     lineage — measured ~8 s of pre-loop jobs at sf0.1. A caller's
     ``vertices`` frame is left-joined onto the stats, so its vertices
     without edges get zero counts."""
     with operator_engine(spark, edges, engine, **engine_kwargs) as eng:
-        stats = eng.vertex_stats("fwd")
+        stats = eng.vertex_stats(program.direction)
         if vertices is not None:
             stats = vertices.select("id").join(stats, on="id", how="left").select(
                 "id",

@@ -94,6 +94,12 @@ def simhash_buckets(
     )
 
 
+#: most queries brute_force_topk collects: its closure matrix stays at
+#: 1024 x dim float64 (0.5 MiB at dim 64, 6 MiB at dim 768) and a 10k-row
+#: Arrow batch's score matrix at 80 MiB
+MAX_TOPK_QUERIES = 1024
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -105,8 +111,9 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k: (query_id, vec_id, score, rank).
 
-    The query batch is the small side by definition (a kNN request); it is
-    read once and shipped to every task as a numpy matrix — the same
+    The query batch is the small side by definition (a kNN request; more
+    than ``MAX_TOPK_QUERIES`` rows raise ``ValueError``); it is read once
+    and shipped to every task as a numpy matrix — the same
     collect-to-closure shape as the LSH plane matrix in
     ``simhash_buckets``, and the guide's broadcast-the-plan pattern. The
     corpus then streams ONCE through an Arrow batch kernel that scores a
@@ -121,7 +128,12 @@ def brute_force_topk(
     expression formulation (multiplication and addition sequences match
     IEEE op for IEEE op; no BLAS reassociation).
     """
-    q_rows = queries.select(query_id_col, vec_col).collect()
+    q_rows = queries.select(query_id_col, vec_col).limit(MAX_TOPK_QUERIES + 1).collect()
+    if len(q_rows) > MAX_TOPK_QUERIES:
+        raise ValueError(
+            f"brute_force_topk takes at most MAX_TOPK_QUERIES={MAX_TOPK_QUERIES} "
+            "queries; split the query set or use lsh_topk"
+        )
     qids = np.array([r[0] for r in q_rows], dtype=np.int64)
     Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
     nq = len(qids)

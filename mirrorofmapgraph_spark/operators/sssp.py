@@ -52,15 +52,16 @@ def sssp(
     see bfs.bfs for the semantics."""
     from .bfs import _mark_sources
 
+    program = sssp_program()
     with operator_engine(spark, edges, engine, **engine_kwargs) as eng:
         if vertices is None:
             # the vertex set comes from the engine's one endpoint-stats
             # aggregation (see GASEngine.vertex_stats)
-            vertices = eng.vertex_stats("fwd").select("id")
+            vertices = eng.vertex_stats(program.direction).select("id")
         marked = _mark_sources(vertices, source)
         v0 = marked.select(
             "id",
             F.when(F.col("_is_src"), F.lit(0.0)).otherwise(F.lit(_INF)).alias("dist"),
         )
         frontier0 = marked.filter(F.col("_is_src")).select("id")
-        return eng.run(sssp_program(), v0, frontier0, max_iter=max_iter)
+        return eng.run(program, v0, frontier0, max_iter=max_iter)

@@ -12,6 +12,12 @@ Scale notes: the orientation bounds the wedges at O(m^1.5) instead of
 sum(deg^2) — the difference between feasible and not on a power-law web
 graph — and caps each adjacency array at O(sqrt m); every join is a
 single-key equi-join (shuffle-hash / sort-merge, AQE-splittable).
+
+The canonical pairs and their orientation stay persisted, shared by plan
+with later calls over the same edges until ``spark.catalog.clearCache()``
+(the GAS edge copies' contract): dropping both persists slowed
+triangle_count from 1.26 to 2.21 s (sf0.01 link graph) and from 1.04 to
+1.21 s (R-MAT scale 11), medians of 5 alternated reps on ``local[4]``.
 """
 
 from __future__ import annotations

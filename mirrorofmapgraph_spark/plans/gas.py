@@ -142,14 +142,14 @@ class GASProgram:
     #: changed predicate over old+new state (columns ``<c>`` old and
     #: ``_new_<c>``); drives the next frontier (expand_vertex analogue).
     changed: Callable[[DataFrame], Column]
-    #: pull mode only: which edges a vertex gathers over — "in" (default:
-    #: v aggregates its in-neighbors' state, GATHER_IN_EDGES), "out"
-    #: (v aggregates its out-neighbors' state, GATHER_OUT_EDGES), or
-    #: "all" (both directions of the one table, GATHER_ALL_EDGES — see
-    #: GASEngine._oriented; for exact undirected multiset semantics feed
-    #: a canonical_undirected table). The reference's gatherOverEdges
-    #: policy selector (csr_problem.cuh:68-91).
-    gather_dir: str = "in"
+    #: which way messages flow over the edge table, also the engine's
+    #: layout key (gatherOverEdges/expandOverEdges, csr_problem.cuh:68-91): "fwd"
+    #: = src -> dst of the table (pull gathers in-edges, push expands
+    #: out-edges); "both" = every row both ways (GATHER/EXPAND_ALL_EDGES,
+    #: see GASEngine._oriented), so reciprocal pairs deliver twice — pass
+    #: a ``canonical_undirected`` table or use a min/max combiner. To
+    #: traverse the other way, pass the reversed table.
+    direction: str = "fwd"
     #: pull mode, optional: predicate over the applied frame marking
     #: vertices that HAVE outgoing edges along the gather direction (e.g.
     #: PageRank's out_deg > 0). When set, the all-changed regime test (the
@@ -166,15 +166,6 @@ class GASProgram:
     #: in-edges) stop changing after step 1; without either, every vertex
     #: would have to change, and dangling vertices never do.
     has_out_edges: Callable[[DataFrame], Column] | None = None
-    #: push mode: which edges frontier vertices expand over — "out"
-    #: (default), "in" (reversed), or "all" (BOTH directions of the one
-    #: edge table; see GASEngine._oriented). The reference's
-    #: expandOverEdges policy (csr_problem.cuh:68-91). With "all", each
-    #: edge row is traversed in both directions, so reciprocal directed
-    #: pairs deliver twice — pass a ``canonical_undirected`` edge table
-    #: for exact undirected semantics, or rely on a duplicate-insensitive
-    #: combiner (min/max) with raw directed edges.
-    expand_dir: str = "out"
     #: optional replacement for the combiner-based gather aggregation:
     #: (msgs: DataFrame(src, dst, _msg)) -> DataFrame(dst, _gathered,
     #: _msg_cnt). For gathers that are NOT single-column algebraic
@@ -221,8 +212,6 @@ class RunState:
     caches and one engine can run programs one after another."""
 
     program: GASProgram
-    #: traversal direction key (see GASEngine._dir_key)
-    dkey: str
     #: rows of the entry vertex frame
     n_vertices: int
     #: program.has_out_edges for pull programs, else None
@@ -280,7 +269,7 @@ class GASEngine:
         #: (see edges_partitioned).
         self.num_partitions = num_partitions
         self._edges_raw = edges
-        # Per-graph caches, each keyed by direction key and computed once
+        # Per-graph caches, each keyed by direction and computed once
         # (per-run facts live in RunState instead):
         self._edges_by: dict[str, DataFrame] = {}
         #: endpoint statistics (see vertex_stats)
@@ -385,63 +374,49 @@ class GASEngine:
         (checkpoint blocks are row-serialized) — measured +26% median
         superstep wall at sf0.1 (264 -> 333 ms). The columnar cache wins."""
         if key not in self._edges_by:
-            if self.num_partitions is None:
+            if key == "dst":
+                # the "both" layout's second copy re-partitions the src copy
+                # cache-to-cache — same rows, any partitioning — instead of
+                # re-executing the raw lineage (entry edge tables are
+                # scan+distinct subtrees)
+                df = self.edges_partitioned("src").repartition(
+                    self.num_partitions, F.col(key)
+                ).persist(StorageLevel.MEMORY_AND_DISK)
+            elif self.num_partitions is None:
                 # Auto-size the loop's partition count: ~500k edges per
-                # partition, clamped to [4, spark.sql.shuffle.partitions].
-                # A 76-superstep loop at 32 partitions on a 0.6M-edge graph
-                # spends more wall on task scheduling than on data
-                # (measured 71.5s -> 55.6s at 8 partitions, sf0.1; floor
-                # 8 -> 4 re-measured as a further 13.99 -> 13.17 s
-                # interleaved min — the floor only binds graphs under 2M
-                # edges, where per-step task count IS the wall; at cluster
-                # scale the size-derived term and the configured
-                # shuffle-partition ceiling govern).
-                # Bootstrap: the auto-sizer needs the edge count, but
-                # counting the RAW frame re-executes its whole lineage
-                # (entry edge tables are scan+distinct subtrees — measured
-                # 3.9 s cold at sf0.1) only for the persist materialization
-                # to execute it AGAIN. Boot at a NO-JOB Catalyst size
-                # estimate of the partition count (divisor 2 bytes/row —
-                # deliberately over-partitioning-biased, so a large graph
-                # never boots with too few partitions; the [4, cap] clamp
-                # absorbs small-graph noise), materialize + count in ONE
-                # pass, and align with a cache-to-cache repartition ONLY
-                # when the exact count lands on a different clamp value.
-                # At the measured SFs the estimate and the count agree on
-                # the floor, so the former second materialization
-                # (~0.3-0.4 s warm per GAS query) disappears; a mismatch
-                # costs exactly the old two-pass bootstrap.
+                # partition, clamped to [4, spark.sql.shuffle.partitions];
+                # under 2M edges the per-step task count IS the wall (sf0.1:
+                # 32 -> 8 partitions took 71.5 -> 55.6 s, and the floor
+                # 8 -> 4 a further 13.99 -> 13.17 s). The count comes from
+                # the persisting pass itself: boot at a no-job Catalyst row
+                # estimate (biased to over-partition, see
+                # _estimate_edge_rows), materialize + count once, and
+                # re-partition cache-to-cache only when the exact count
+                # lands on another clamp value. Counting the raw lineage
+                # first ran it twice (3.9 s cold at sf0.1).
                 cap = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
                 est = self._estimate_edge_rows()
                 p_boot = (
                     cap if est is None
                     else max(4, min(cap, -(-est // 500_000)))
                 )
-                boot = self._edges_raw.repartition(p_boot, F.col(key)).persist(
+                df = self._edges_raw.repartition(p_boot, F.col(key)).persist(
                     StorageLevel.MEMORY_AND_DISK
                 )
-                m = boot.count()
+                m = df.count()
                 self.num_partitions = max(4, min(cap, -(-m // 500_000)))
-                if self.num_partitions == p_boot:
-                    self._edges_by[key] = boot
-                    return boot
-                df = boot.repartition(
-                    self.num_partitions, F.col(key)
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                df.count()  # materialize from the boot cache before dropping it
-                boot.unpersist()
+                setup = {"row_estimate": est, "edges": m, "p_boot": p_boot,
+                         "num_partitions": self.num_partitions}
+                log.debug("[gas:setup] %s", setup, extra={"gas_setup": setup})
+                if self.num_partitions != p_boot:
+                    boot = df
+                    df = boot.repartition(
+                        self.num_partitions, F.col(key)
+                    ).persist(StorageLevel.MEMORY_AND_DISK)
+                    df.count()  # materialize from the boot cache before dropping it
+                    boot.unpersist()
             else:
-                # A second copy (the "both" direction's dst-partitioned
-                # one) re-partitions the FIRST persisted copy
-                # cache-to-cache — same rows, any partitioning — instead
-                # of re-executing the raw lineage (entry edge tables are
-                # scan+distinct subtrees).
-                src_df = (
-                    next(iter(self._edges_by.values()))
-                    if self._edges_by
-                    else self._edges_raw
-                )
-                df = src_df.repartition(
+                df = self._edges_raw.repartition(
                     self.num_partitions, F.col(key)
                 ).persist(StorageLevel.MEMORY_AND_DISK)
             self._edges_by[key] = df
@@ -449,50 +424,36 @@ class GASEngine:
 
     # -- traversal orientation ---------------------------------------------
 
-    @staticmethod
-    def _rev(edges: DataFrame) -> DataFrame:
-        """Reverse view of an edge frame — a PROJECTION of the same
-        persisted data (src/dst swapped), not a second materialization."""
-        cols = [F.col("dst").alias("src"), F.col("src").alias("dst")]
-        if "w" in edges.columns:
-            cols.append(F.col("w"))
-        return edges.select(*cols)
+    def _oriented(self, direction: str) -> list[DataFrame]:
+        """Edge frames in traversal orientation (messages flow src -> dst
+        of each): "fwd" is the src-partitioned copy (CSR analogue);
+        "both" adds the dst-partitioned copy read reversed, a projection
+        partitioned by its NEW src (CSC analogue). That is the reference's
+        CSR+CSC dual layout (csr_problem.cuh:154-158; dual traversal
+        enactor_vertex_centric.cuh:574-687, :1288-1487): both passes'
+        state joins are exchange-free, for 2x the persisted edge bytes.
+        Against reverse passes over the one src-partitioned copy it
+        measured, at sf0.1, cc_converged 1.68 -> 1.54 s and labelprop2
+        2.73 -> 2.55 s (min), with far lower variance."""
+        if direction not in ("fwd", "both"):
+            raise ValueError(f"unknown direction {direction!r}: use 'fwd' or 'both'")
+        fwd = [self.edges_partitioned("src")]
+        if direction == "fwd":
+            return fwd
+        dst = self.edges_partitioned("dst")
+        w = ["w"] if "w" in dst.columns else []
+        return fwd + [
+            dst.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *w)
+        ]
 
-    @staticmethod
-    def _dir_key(program: GASProgram) -> str:
-        """Traversal direction key: messages always flow src -> dst of the
-        ORIENTED frames. "fwd" = table orientation, "rev" = reversed,
-        "both" = two passes (the reference's CSR+CSC dual traversal,
-        enactor_vertex_centric.cuh:574-687 expand, :1288-1487 gather,
-        partial aggregates combined by the shared groupBy)."""
-        if program.mode == "pull":
-            return {"in": "fwd", "out": "rev", "all": "both"}[program.gather_dir]
-        return {"out": "fwd", "in": "rev", "all": "both"}[program.expand_dir]
-
-    def _oriented(self, dkey: str) -> list[DataFrame]:
-        """Edge frames in traversal orientation for a direction key.
-
-        - "fwd": the src-partitioned copy (CSR analogue);
-        - "rev": the dst-partitioned copy reversed (CSC analogue — the
-          reversed view is partitioned by its NEW src, so the state join
-          stays exchange-free);
-        - "both": both of the above — the reference's CSR+CSC dual layout
-          (csr_problem.cuh:154-158): both passes' state joins are
-          exchange-free, for 2x the persisted edge bytes. Against reverse
-          passes over the one src-partitioned copy it measured, at sf0.1,
-          cc_converged 1.68 -> 1.54 s and labelprop2 2.73 -> 2.55 s (min),
-          with far lower variance.
-        """
-        if dkey == "fwd":
-            return [self.edges_partitioned("src")]
-        if dkey == "rev":
-            return [self._rev(self.edges_partitioned("dst"))]
-        if dkey == "both":
-            return [
-                self.edges_partitioned("src"),
-                self._rev(self.edges_partitioned("dst")),
-            ]
-        raise ValueError(f"unknown direction key {dkey!r}")
+    def _passes(
+        self, direction: str, per_pass: Callable[[DataFrame], DataFrame]
+    ) -> DataFrame:
+        """``per_pass`` over each oriented frame of ``direction``, unioned
+        by name: the "both" passes meet in the consumer's one aggregation
+        (as the reference combines its CSC and CSR gathers)."""
+        parts = [per_pass(e) for e in self._oriented(direction)]
+        return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
     def unpersist(self) -> None:
         """Release the persisted edge copies and what was derived from them."""
@@ -512,11 +473,11 @@ class GASEngine:
         self._endpoint_counts_cache.clear()
         self._relays_cover_cache.clear()
 
-    def vertex_stats(self, dkey: str = "fwd") -> DataFrame:
-        """(id, n_src, n_dst[, w_src]) over the oriented frames of ``dkey``,
-        materialized once: n_src = rows with this id as src (the
-        out-degree of the oriented table), n_dst likewise, w_src = sum of
-        outgoing w when the table carries weights.
+    def vertex_stats(self, direction: str = "fwd") -> DataFrame:
+        """(id, n_src, n_dst[, w_src]) over the oriented frames of
+        ``direction``, materialized once: n_src = rows with this id as src
+        (the out-degree of the oriented table), n_dst likewise, w_src = sum
+        of outgoing w when the table carries weights.
 
         ONE aggregation replaces the separate vertex_frame distinct,
         out_degrees groupBy, all-receivers distinct and sender-count
@@ -524,20 +485,16 @@ class GASEngine:
         same table (measured ~8 s of pre-loop jobs on the sf0.1 converged
         PageRank). Derived views: vertex set = select(id); receivers =
         filter(n_dst > 0); senders count = filter(n_src > 0).count()."""
-        if dkey not in self._vstats:
-            frames = self._oriented(dkey)
-            has_w = "w" in frames[0].columns
-            parts = []
-            for fr in frames:
-                parts.append(
-                    fr.select(
-                        F.col("src").alias("id"),
-                        F.lit(1).alias("_s"),
-                        F.lit(0).alias("_d"),
-                        *([F.col("w").alias("_w")] if has_w else []),
-                    )
-                )
-                parts.append(
+        if direction not in self._vstats:
+            has_w = "w" in self._edges_raw.columns
+
+            def ends(fr: DataFrame) -> DataFrame:
+                return fr.select(
+                    F.col("src").alias("id"),
+                    F.lit(1).alias("_s"),
+                    F.lit(0).alias("_d"),
+                    *([F.col("w").alias("_w")] if has_w else []),
+                ).unionByName(
                     fr.select(
                         F.col("dst").alias("id"),
                         F.lit(0).alias("_s"),
@@ -545,9 +502,7 @@ class GASEngine:
                         *([F.lit(0.0).alias("_w")] if has_w else []),
                     )
                 )
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
+
             aggs = [
                 F.sum("_s").cast("long").alias("n_src"),
                 F.sum("_d").cast("long").alias("n_dst"),
@@ -559,18 +514,21 @@ class GASEngine:
             # materializes the checkpoint as part of its own job — one
             # fewer standalone setup job per GAS run; later consumers
             # (endpoint counts, v0) read the materialized blocks.
-            self._vstats[dkey] = self._cut(df.groupBy("id").agg(*aggs), eager=False)
-        return self._vstats[dkey]
+            self._vstats[direction] = self._cut(
+                self._passes(direction, ends).groupBy("id").agg(*aggs),
+                eager=False,
+            )
+        return self._vstats[direction]
 
-    def _endpoint_counts(self, dkey: str) -> tuple[int, int, int]:
+    def _endpoint_counts(self, direction: str) -> tuple[int, int, int]:
         """(n_senders, n_receivers, n_relays) of the oriented direction —
         one aggregation job over the materialized vertex_stats instead of
         separate filtered counts (each scalar readback is a full job; the
         loop setup pays them serially). Relays are the vertices that both
         send and receive (the set K of _all_changed)."""
-        if dkey not in self._endpoint_counts_cache:
+        if direction not in self._endpoint_counts_cache:
             r = (
-                self.vertex_stats(dkey)
+                self.vertex_stats(direction)
                 .agg(
                     F.count_if(F.col("n_src") > 0).alias("s"),
                     F.count_if(F.col("n_dst") > 0).alias("r"),
@@ -580,31 +538,32 @@ class GASEngine:
                 )
                 .first()
             )
-            self._endpoint_counts_cache[dkey] = (
+            self._endpoint_counts_cache[direction] = (
                 int(r["s"]), int(r["r"]), int(r["k"])
             )
-        return self._endpoint_counts_cache[dkey]
+        return self._endpoint_counts_cache[direction]
 
-    def _relays_cover(self, dkey: str) -> bool:
-        """Whether out(K) == R on the oriented frames of ``dkey``: the
+    def _relays_cover(self, direction: str) -> bool:
+        """Whether out(K) == R on the oriented frames of ``direction``: the
         distinct destinations of the relays' edges are every receiver
         (out(K) ⊆ R always, so comparing counts suffices). A static fact
-        about the graph — one join + distinct job per direction key."""
-        if dkey not in self._relays_cover_cache:
-            _, n_receivers, n_relays = self._endpoint_counts(dkey)
+        about the graph — one join + distinct job per direction."""
+        if direction not in self._relays_cover_cache:
+            _, n_receivers, n_relays = self._endpoint_counts(direction)
             relays = self._hint(
-                self.vertex_stats(dkey)
+                self.vertex_stats(direction)
                 .filter((F.col("n_src") > 0) & (F.col("n_dst") > 0))
                 .select(F.col("id").alias("src")),
                 n_relays,
             )
-            parts = [
-                e.join(relays, on="src", how="left_semi").select("dst")
-                for e in self._oriented(dkey)
-            ]
-            out = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-            self._relays_cover_cache[dkey] = out.distinct().count() == n_receivers
-        return self._relays_cover_cache[dkey]
+            out = self._passes(
+                direction,
+                lambda e: e.join(relays, on="src", how="left_semi").select("dst"),
+            )
+            self._relays_cover_cache[direction] = (
+                out.distinct().count() == n_receivers
+            )
+        return self._relays_cover_cache[direction]
 
     def _run_state(self, program: GASProgram, n_vertices: int) -> RunState:
         """The run's fixed facts. For pull programs with has_out_edges,
@@ -612,13 +571,12 @@ class GASEngine:
         n_senders, so "every sender changed" may never hold), the relay
         count — only if out(K) == R, checked once per graph and
         direction."""
-        dkey = self._dir_key(program)
         if program.mode != "pull" or program.has_out_edges is None:
-            return RunState(program, dkey, n_vertices)
-        n_senders, _, n_relays = self._endpoint_counts(dkey)
-        covers = 0 < n_relays < n_senders and self._relays_cover(dkey)
+            return RunState(program, n_vertices)
+        n_senders, _, n_relays = self._endpoint_counts(program.direction)
+        covers = 0 < n_relays < n_senders and self._relays_cover(program.direction)
         return RunState(
-            program, dkey, n_vertices, program.has_out_edges, n_senders,
+            program, n_vertices, program.has_out_edges, n_senders,
             n_relays if covers else None,
         )
 
@@ -673,17 +631,17 @@ class GASEngine:
             return rs.n_relays is not None and int(row["chk"] or 0) >= rs.n_relays
         return int(row["ch"] or 0) >= rs.n_vertices
 
-    def _all_receivers(self, dkey: str) -> DataFrame:
+    def _all_receivers(self, direction: str) -> DataFrame:
         """Constant frontier 'every vertex that can receive a gather
         message' = ids with n_dst > 0 — a cheap filtered view of the one
         materialized vertex_stats aggregation (no extra distinct shuffle);
-        its size is ``_endpoint_counts(dkey)[1]``. Stored once so the
+        its size is ``_endpoint_counts(direction)[1]``. Stored once so the
         regime test's identity check keeps working."""
-        if dkey not in self._all_recv:
-            self._all_recv[dkey] = (
-                self.vertex_stats(dkey).filter(F.col("n_dst") > 0).select("id")
+        if direction not in self._all_recv:
+            self._all_recv[direction] = (
+                self.vertex_stats(direction).filter(F.col("n_dst") > 0).select("id")
             )
-        return self._all_recv[dkey]
+        return self._all_recv[direction]
 
     # -- checkpoint/resume -------------------------------------------------
 
@@ -749,8 +707,10 @@ class GASEngine:
         changed count, so no count job runs). This is exact: every frontier
         the loop produces is either _next_frontier(applied) or the
         all-receivers set R, and _all_changed picks R only when the two are
-        equal. Manifests of the older two-dataset format (a state without
-        the flag plus a ``frontier_path``) still load."""
+        equal. A pull frontier is a subset of R, so one as large as R is R,
+        taken with no expand (the loop's first "all" step reads |R| anyway).
+        Manifests of the older two-dataset format (a state without the flag
+        plus a ``frontier_path``) still load."""
         if not self.checkpoint_dir:
             return None
         mpath = self._manifest_path(program.name)
@@ -762,7 +722,13 @@ class GASEngine:
         if "frontier_path" in m:  # the two-dataset format
             frontier = self.spark.read.parquet(m["frontier_path"])
         else:
-            frontier = self._next_frontier(program, state, m["metrics"][-1]["changed"])
+            last = m["metrics"][-1]
+            if program.mode == "pull" and (
+                last["frontier_size"] == self._endpoint_counts(program.direction)[1]
+            ):
+                frontier = self._all_receivers(program.direction)
+            else:
+                frontier = self._next_frontier(program, state, last["changed"])
             state = state.drop("_changed")
         return m["superstep"], state, frontier, m["metrics"]
 
@@ -799,15 +765,7 @@ class GASEngine:
         """
         # Pre-partition the big side once, before entering the loop (both
         # copies only when the direction needs them).
-        self._oriented(self._dir_key(program))
-
-        start_step = 0
-        metrics: list[SuperstepMetrics] = []
-        if resume and self.checkpoint_dir:
-            ck = self.load_checkpoint(program)
-            if ck is not None:
-                start_step, vertices, frontier, old_metrics = ck
-                metrics = [SuperstepMetrics(**m) for m in old_metrics]
+        self._oriented(program.direction)
 
         # Loop-scoped physical tuning, restored afterwards:
         # - AQE off inside the superstep loop: every superstep is a fresh
@@ -843,6 +801,13 @@ class GASEngine:
         for k, v in loop_confs.items():
             self.spark.conf.set(k, v)
         try:
+            # loaded under the loop confs, so a resume's receiver count is
+            # the same one-job readback the loop's first "all" step runs
+            start_step, metrics = 0, []
+            ck = self.load_checkpoint(program) if resume else None
+            if ck is not None:
+                start_step, vertices, frontier, old_metrics = ck
+                metrics = [SuperstepMetrics(**m) for m in old_metrics]
             return self._run_loop(
                 program, vertices, frontier, metrics,
                 start_step=start_step, max_iter=max_iter,
@@ -957,7 +922,7 @@ class GASEngine:
             if regime == "all":
                 # the metrics ride one count over the observed checkpoint
                 # scan; the expand shuffle is skipped
-                guess, job = self._all_receivers(rs.dkey), applied_obs.count
+                guess, job = self._all_receivers(program.direction), applied_obs.count
             else:
                 # ONE job materializes the new state, the exact next
                 # frontier AND the metrics (the frontier plan reads every
@@ -971,7 +936,7 @@ class GASEngine:
                 # the receiver count is read here so that its one readback
                 # job (on a program's first "all" step) overlaps the job
                 est = (
-                    self._endpoint_counts(rs.dkey)[1] if regime == "all"
+                    self._endpoint_counts(program.direction)[1] if regime == "all"
                     else frontier_size
                 )
                 nxt = superstep_fn(rs, vertices, guess, est) if more else None
@@ -1180,15 +1145,11 @@ class GASEngine:
         frontier: DataFrame,
         frontier_size: int,
     ) -> DataFrame:
-        # Oriented frames: messages always flow src -> dst (gather_dir
-        # "in" = forward table, "out" = reversed view, "all" = both
-        # passes over one table, partial aggregates combined by the shared
-        # groupBy — the reference gathers CSC then CSR and combines with
-        # thrust::transform, enactor:1288-1487).
-        program, dkey = rs.program, rs.dkey
-        frames = self._oriented(dkey)
-        # GATHER with a three-regime join order — the Spark analogue of the
-        # reference's two-phase/dynamic switch (enactor:2694-2702):
+        # GATHER over each oriented pass (see _passes; "both" gathers both
+        # directions of one table, the reference's CSC-then-CSR gather,
+        # enactor:1288-1487) with a three-regime join order — the Spark
+        # analogue of the reference's two-phase/dynamic switch
+        # (enactor:2694-2702):
         # 1. small frontier: prune edges by a BROADCAST of the frontier
         #    first (touches only the frontier's gathered edges), then fetch
         #    neighbor state;
@@ -1198,18 +1159,20 @@ class GASEngine:
         #    every message receiver is in by construction): skip the filter
         #    — apply's _in_frontier gate discards the rest, exact same
         #    result for less work.
+        program = rs.program
         is_all = (
-            frontier_size >= rs.n_vertices or frontier is self._all_recv.get(dkey)
+            frontier_size >= rs.n_vertices
+            or frontier is self._all_recv.get(program.direction)
         )
-        parts = []
-        for edges in frames:
+
+        def gather(edges: DataFrame) -> DataFrame:
             if not is_all and frontier_size <= self.broadcast_threshold:
                 touched = edges.join(
                     F.broadcast(frontier.withColumnRenamed("id", "dst")),
                     on="dst",
                     how="inner",
                 )
-                # no .drop("id"): the parts select below projects only
+                # no .drop("id"): the select below projects only
                 # (src, dst, _msg), and every DataFrame op re-analyzes the
                 # whole superstep subtree driver-side (see _apply note)
                 m = touched.join(
@@ -1223,10 +1186,9 @@ class GASEngine:
                     m = m.join(
                         frontier.withColumnRenamed("id", "dst"), on="dst", how="inner"
                     )
-            parts.append(
-                m.select("src", "dst", program.message(m).alias("_msg"))
-            )
-        msgs = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+            return m.select("src", "dst", program.message(m).alias("_msg"))
+
+        msgs = self._passes(program.direction, gather)
         gathered = self._aggregate(msgs, program)
 
         # APPLY over the frontier only (APPLY_FRONTIER policy).
@@ -1240,21 +1202,19 @@ class GASEngine:
         frontier_size: int,
     ) -> DataFrame:
         # EXPAND: frontier vertices push along their edges in the
-        # program's expand direction (expand_edge, sssp.h:315-358); state
-        # travels with the frontier. The frontier-state frame is built
-        # once and joined into each oriented pass (broadcast when small).
+        # program's direction (expand_edge, sssp.h:315-358); state travels
+        # with the frontier. The frontier-state frame is built once and
+        # joined into each oriented pass (broadcast when small).
         program = rs.program
-        frames = self._oriented(rs.dkey)
         frontier_state = self._hint(
             vertices.join(frontier, on="id", how="inner"), frontier_size
         ).withColumnRenamed("id", "src")
-        parts = []
-        for edges in frames:
+
+        def expand(edges: DataFrame) -> DataFrame:
             m = edges.join(frontier_state, on="src", how="inner")
-            parts.append(
-                m.select("src", "dst", program.message(m).alias("_msg"))
-            )
-        msgs = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+            return m.select("src", "dst", program.message(m).alias("_msg"))
+
+        msgs = self._passes(program.direction, expand)
 
         # CONTRACT: exact combiner-per-dst replaces the atomic-min culls
         # (contract_atomic/cta.cuh:200-344).
@@ -1272,16 +1232,16 @@ class GASEngine:
             # next frontier = vertices whose gather input changed, i.e. the
             # receivers adjacent to changed neighbor-state vertices; exact
             # dedup (the contract culls done exactly: one distinct shuffle).
-            frames = self._oriented(self._dir_key(program))
-            changed_src = applied.filter(F.col("_changed")).select(
-                F.col("id").alias("src")
+            hinted = self._hint(
+                applied.filter(F.col("_changed")).select(F.col("id").alias("src")),
+                frontier_size,
             )
-            hinted = self._hint(changed_src, frontier_size)
-            parts = [
-                e.join(hinted, on="src", how="inner").select(F.col("dst").alias("id"))
-                for e in frames
-            ]
-            out = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+            out = self._passes(
+                program.direction,
+                lambda e: e.join(hinted, on="src", how="inner").select(
+                    F.col("dst").alias("id")
+                ),
+            )
             return out.distinct()
         return applied.filter(F.col("_changed")).select("id")
 

@@ -126,9 +126,12 @@ def test_resume_from_manifest_without_regime(spark, make_edges, make_vertices, t
 
 def test_labelprop_resume_equivalence(spark, make_edges, make_vertices, tmp_path):
     """LPA now runs through the engine (round-2 verdict missing #5):
-    interrupt after 1 superstep, resume from the manifest, and match an
-    uninterrupted run exactly."""
-    from mirrorofmapgraph_spark.operators.labelprop import label_propagation
+    interrupt after 1 superstep, resume from the manifest without
+    re-deriving the frontier, and match an uninterrupted run exactly."""
+    from mirrorofmapgraph_spark.operators.labelprop import (
+        label_propagation,
+        labelprop_program,
+    )
 
     n = 120
     edges = random_graph(n=n, m=300, seed=11)
@@ -150,6 +153,12 @@ def test_labelprop_resume_equivalence(spark, make_edges, make_vertices, tmp_path
     assert sum(p["rows"] for p in manifest["partition_lineage"]) == n
 
     eng2 = GASEngine(spark, und, checkpoint_dir=ckpt, checkpoint_every=5)
+    # step 1 changed every non-isolated vertex, so the stored frontier is
+    # the all-receivers set R: loading takes R's frame and expands nothing
+    eng2._next_frontier = None  # fails the load if it is called
+    loaded = eng2.load_checkpoint(labelprop_program())
+    del eng2._next_frontier
+    assert loaded[2] is eng2._all_receivers("both")
     res = label_propagation(
         spark, e, vertices=make_vertices(n), max_iter=20, engine=eng2, resume=True
     )

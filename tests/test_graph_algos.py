@@ -278,53 +278,30 @@ def test_salted_gather_correct_on_hub(spark):
     assert diff == 0
 
 
-def test_gather_out_direction_matches_reversed_graph(spark, make_edges, make_vertices):
-    """Native GATHER_OUT_EDGES (csr_problem.cuh:68-91): pagerank with
-    gather_dir='out' over E must equal the in-gather pagerank over
-    reversed(E), per vertex at 1e-6."""
+def test_unknown_direction_raises(spark, make_edges):
+    """A program's direction is one of the engine's two layout keys; any
+    other value (the old gather/expand selectors "all" and "in" included)
+    raises before a job runs, naming both."""
     import dataclasses
 
     from pyspark.sql import functions as F
 
-    from mirrorofmapgraph_spark.operators.pagerank import pagerank, pagerank_program
-    from mirrorofmapgraph_spark.plans.gas import GASEngine
-    from mirrorofmapgraph_spark.sources.edges import in_degrees, vertex_frame
+    from mirrorofmapgraph_spark.operators.pagerank import pagerank_program
 
-    edges = random_graph(n=40, m=160, seed=21)
-    e = canonicalize(make_edges(edges))
-    erev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    want = {
-        r["id"]: r["rank"]
-        for r in pagerank(spark, erev, tol=1e-6, max_iter=100, damping=0.5,
-                          vertices=make_vertices(40)).vertices.collect()
-    }
-    # out-gather over E: the message source is the dst endpoint, whose
-    # divisor is its out-degree in reversed(E) = its in-degree in E
-    prog = dataclasses.replace(pagerank_program(damping=0.5, tol=1e-6),
-                               gather_dir="out")
-    verts = make_vertices(40)
-    ind = in_degrees(e)
-    v0 = (
-        verts.join(ind, on="id", how="left")
-        .select(
-            "id",
-            F.lit(0.15).alias("rank"),
-            F.coalesce("in_deg", F.lit(0)).cast("long").alias("out_deg"),
-        )
-    )
+    e = make_edges(SMALL)
     engine = GASEngine(spark, e)
-    res = engine.run(prog, v0, verts.select("id"), max_iter=100)
-    got = {r["id"]: r["rank"] for r in res.vertices.collect()}
-    assert res.converged
-    for v in range(40):
-        assert math.isclose(got[v], want[v], rel_tol=0, abs_tol=1e-6), (
-            f"vertex {v}: out-gather {got[v]} != reversed in-gather {want[v]}"
-        )
-    engine.unpersist()
+    v = e.select(F.col("src").alias("id"))
+    for direction in ("all", "in"):
+        prog = dataclasses.replace(pagerank_program(), direction=direction)
+        with pytest.raises(ValueError, match="'fwd' or 'both'"):
+            engine.run(prog, v, v)
+        with pytest.raises(ValueError, match="'fwd' or 'both'"):
+            engine.vertex_stats(direction)
+    assert not engine._edges_by  # nothing was persisted
 
 
 def test_cc_native_all_matches_symmetrized(spark, make_edges, make_vertices):
-    """expand_dir='all' over the RAW directed table (edge table persisted
+    """direction='both' over the RAW directed table (edge table persisted
     once, no symmetrize build shuffle) gives the same labels as over the
     symmetrized table: the min combiner ignores the duplicate messages."""
     from mirrorofmapgraph_spark.sources.edges import canonicalize, symmetrize
@@ -342,7 +319,7 @@ def test_cc_native_all_matches_symmetrized(spark, make_edges, make_vertices):
 
 
 def test_labelprop_canonical_matches_symmetrized(spark, make_edges, make_vertices):
-    """gather_dir='all' over the canonical (src<dst) table reproduces the
+    """direction='both' over the canonical (src<dst) table reproduces the
     oracle per superstep (neighbor label MULTISETS matter for the mode
     combiner, not just connectivity) — including on a graph with
     reciprocal directed pairs — and a symmetrized input canonicalizes to
@@ -466,3 +443,39 @@ def test_repeated_operator_calls_persist_only_their_results(
         assert new == {state_rdd(r.vertices) for r in (first, second)}, name
         assert len(new) == 2, name
         assert [r.vertices.count() for r in (first, second)] == [n, n], name
+
+
+def test_triangle_family_persists_shared_by_plan(spark, make_edges):
+    """The triangle family keeps its two edge-sized persists (the
+    canonical pairs and their degree orientation) for the caller's
+    ``clearCache``, like the GAS edge copies: the first triangle_count
+    adds exactly those two persistent RDDs, a repeated call adds none,
+    each ktruss call over the same edges reuses them and adds only its
+    returned result, and clearing the cache leaves only the ktruss
+    results."""
+    from mirrorofmapgraph_spark.operators.ktruss import ktruss
+
+    sc = spark.sparkContext
+
+    def persisted():
+        return {int(k) for k in sc._jsc.getPersistentRDDs().keySet()}
+
+    edges = random_graph(n=60, m=240, seed=13)
+    e = canonicalize(make_edges(edges))
+    want = len(triangles_ref(60, edges))
+    spark.catalog.clearCache()
+    before = persisted()
+    assert triangle_count(e).first()["n_triangles"] == want
+    shared = persisted() - before
+    assert len(shared) == 2
+    assert triangle_count(e).first()["n_triangles"] == want
+    assert persisted() - before == shared
+    results = []
+    for _ in range(2):
+        mid = persisted()
+        t = ktruss(spark, e, 3)
+        assert t.count() > 0
+        (added,) = persisted() - mid  # the returned result only
+        results.append(added)
+    spark.catalog.clearCache()
+    assert persisted() - before == set(results)

@@ -174,9 +174,14 @@ def test_rerun_on_one_engine_matches(spark, make_edges):
 def test_one_debug_record_per_superstep(spark, make_edges, caplog):
     """Each superstep emits one DEBUG record through ``logging`` carrying
     the program name and every SuperstepMetrics field, regime and
-    speculation outcome included."""
+    speculation outcome included. The auto-sizing edge bootstrap emits
+    one setup record that sets the Catalyst row estimate beside the exact
+    edge count, the boot partition count and the chosen one."""
     caplog.set_level(logging.DEBUG, logger="mirrorofmapgraph_spark.plans.gas")
     res = pagerank(spark, make_edges(TRIVIAL), damping=0.5, collect_metrics=False)
+    (setup,) = [r.gas_setup for r in caplog.records if hasattr(r, "gas_setup")]
+    assert set(setup) == {"row_estimate", "edges", "p_boot", "num_partitions"}
+    assert setup["edges"] == len(TRIVIAL)
     recs = [r.gas_step for r in caplog.records if hasattr(r, "gas_step")]
     assert res.supersteps > 1
     assert len(recs) == res.supersteps
@@ -375,7 +380,7 @@ def test_observation_that_never_fires_falls_back_to_aggregate(
 
     monkeypatch.setattr(gas, "OBSERVATION_WAIT_S", 0.1)
     engine = gas.GASEngine(spark, canonicalize(make_edges(SMALL)))
-    rs = gas.RunState(cc_program(), "both", 4)
+    rs = gas.RunState(cc_program(), 4)
     applied = spark.createDataFrame(
         [(0, 0, True, 2), (1, 0, True, 3), (2, 2, False, 1), (3, 3, False, 0)],
         "id long, label long, _changed boolean, _msg_cnt long",

@@ -331,6 +331,22 @@ def test_brute_force_topk_matches_numpy(spark, emb):
             assert abs(score - scores[ids.index(vid)]) < 1e-4
 
 
+def test_brute_force_topk_caps_the_query_collect(spark, emb, monkeypatch):
+    """The query side is collected to the driver and shipped to every
+    task, so more than MAX_TOPK_QUERIES queries raise instead of
+    collecting them; the cap itself still scores."""
+    from mirrorofmapgraph_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "MAX_TOPK_QUERIES", 3)
+    queries = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    with pytest.raises(ValueError, match="MAX_TOPK_QUERIES=3"):
+        brute_force_topk(emb, queries, k=5)
+    three = brute_force_topk(emb, queries.filter(F.col("query_id") < 3), k=5)
+    assert {r["query_id"] for r in three.collect()} == {0, 1, 2}
+
+
 def test_lsh_topk_recall(spark, emb):
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"

@@ -69,7 +69,7 @@ def test_gas_pull_superstep_plan_shape(spark, make_edges):
                 F.coalesce("out_deg", F.lit(0)).cast("long").alias("out_deg"))
     )
     n = v0.count()
-    rs = RunState(pagerank_program(), "fwd", n)
+    rs = RunState(pagerank_program(), n)
     applied = eng._superstep_pull(rs, v0, verts.select("id"), n)
     p = plan(applied)
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p

@@ -16,8 +16,10 @@ Scale notes (100 TB): the edge table is hash-partitioned ONCE per gather
 direction and persisted; every iteration reuses the same co-partitioned
 join (no re-shuffle of the big side). The normalizer is a 1-row aggregate
 broadcast back via crossJoin — never a driver-side collect inside the
-dataflow. Per-iteration ``localCheckpoint`` truncates the lineage so plan
-size stays O(1) in the iteration count.
+dataflow. A per-iteration lineage cut (plans/gas.cut) keeps the plan size
+O(1) in the iteration count; a raw ``localCheckpoint`` would also square
+the size estimate every iteration (15 iterations on a 50-vertex graph ran
+out of a 1 GiB driver heap).
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.gas import cut
 from ..sources.edges import vertex_frame
 
 
@@ -51,9 +54,10 @@ def hits(
         # re-evaluated once per union branch otherwise
         vertices = vertex_frame(e_by_src)
 
-    state = vertices.select(
-        "id", F.lit(1.0).alias("hub"), F.lit(0.0).alias("auth")
-    ).localCheckpoint(eager=False)
+    state = cut(
+        vertices.select("id", F.lit(1.0).alias("hub"), F.lit(0.0).alias("auth")),
+        eager=False,
+    )
 
     try:
         for _ in range(iters):
@@ -79,11 +83,11 @@ def hits(
                 .agg(F.sum("auth").alias("_raw"))
             )
             hub = _l1_normalized(h_raw, "hub")
-            state = (
+            state = cut(
                 state.select("id", "auth")
                 .join(hub, "id", "left")
-                .select("id", F.coalesce("hub", F.lit(0.0)).alias("hub"), "auth")
-                .localCheckpoint(eager=False)
+                .select("id", F.coalesce("hub", F.lit(0.0)).alias("hub"), "auth"),
+                eager=False,
             )
         return state.select(
             "id", F.round("hub", 6).alias("hub"), F.round("auth", 6).alias("auth")

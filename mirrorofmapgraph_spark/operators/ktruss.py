@@ -5,9 +5,10 @@ at least (k-2) triangles *within the subgraph* — the edge-analog of the
 k-core (operators/kcore.py) and a much stronger cohesion filter for
 community structure on link graphs. Same monotone peel-to-fixpoint shape
 as the reference's HashMin CC loop (Algorithms/CC/cc.h), so it reuses
-the identical Spark strategy: per-round dataflow + eager
-``localCheckpoint`` to cut lineage, one driver-side scalar count as the
-fixpoint gate.
+the identical Spark strategy: per-round dataflow + an eager lineage cut
+(plans/gas.cut), one driver-side scalar count as the fixpoint gate. A raw
+``localCheckpoint`` would square the size estimate every round (a
+22-round peel of 320 edges failed inside it at a 1 GiB driver heap).
 
 Support is computed ONCE over the full graph (degree-oriented O(m^1.5)
 wedge enumeration, operators/triangles.py) and then maintained
@@ -28,9 +29,8 @@ fixpoint EXACTLY (integer supports, no float risk).
 Scale notes (100 TB): the peel only shrinks the edge table; the per-round
 work is keyed equi-joins sized by the removed frontier's neighborhoods
 (AQE-splittable); superseded state checkpoints are released each round
-(plans/gas.release_local_checkpoint) so a deep peel doesn't accumulate
-generations in the block manager; no step widens rows or collects data
-to the driver.
+(plans/gas.release) so a deep peel doesn't accumulate generations in the
+block manager; no step widens rows or collects data to the driver.
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.gas import release_local_checkpoint
+from ..plans.gas import cut, release
 from .triangles import pair_triangles, sorted3, undirected_pairs
 
 
@@ -94,14 +94,13 @@ def ktruss(
         raise ValueError("k must be >= 2")
     need = k - 2
     und = undirected_pairs(edges)
-    state = (
-        und.join(_edge_support(und), ["a", "b"], "left")
-        .select(
+    state = cut(
+        und.join(_edge_support(und), ["a", "b"], "left").select(
             "a",
             "b",
             F.coalesce("support", F.lit(0)).cast("long").alias("support"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     if need <= 0:
         # nothing can be peeled; report support over the full simple graph
@@ -112,7 +111,7 @@ def ktruss(
             return state
         # materialize the destroyed-triangle set once per round (it is read
         # three times by the unpivot below), then release it with the round
-        tri = _destroyed_triangles(state, removed).localCheckpoint(eager=True)
+        tri = cut(_destroyed_triangles(state, removed), eager=True)
         dec = (
             tri.select(F.col("x").alias("a"), F.col("y").alias("b"))
             .unionByName(tri.select(F.col("x").alias("a"), F.col("z").alias("b")))
@@ -120,18 +119,18 @@ def ktruss(
             .groupBy("a", "b")
             .agg(F.count("*").alias("dec"))
         )
-        survivors = (
+        survivors = cut(
             state.filter(F.col("support") >= need)
             .join(dec, ["a", "b"], "left")
             .select(
                 "a",
                 "b",
                 (F.col("support") - F.coalesce("dec", F.lit(0))).alias("support"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
-        release_local_checkpoint(spark, tri)
-        release_local_checkpoint(spark, state)
+        release(tri)
+        release(state)
         state = survivors
     raise RuntimeError(
         f"ktruss(k={k}) did not converge in {max_rounds} rounds; raise max_rounds"

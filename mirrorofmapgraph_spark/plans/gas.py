@@ -72,14 +72,61 @@ OBSERVATION_WAIT_S = 30
 log = logging.getLogger(__name__)
 
 
-def release_local_checkpoint(spark: SparkSession, df: DataFrame) -> None:
-    """Free the executor storage behind a ``localCheckpoint``/``_cut`` frame
-    that will never be read again (a superseded loop generation): unpersist
-    the underlying checkpointed RDD's blocks. ``DataFrame.unpersist()`` is a
-    no-op here — localCheckpoint is not registered with the cache manager —
-    so without this, every generation of a long fixpoint loop (GAS
-    supersteps, k-core/k-truss peels) accumulates in the block manager.
-    Best-effort: a plan-shape change just leaves the blocks to LRU eviction.
+def cut(df: DataFrame, *, eager: bool) -> DataFrame:
+    """Materialize, truncate lineage, AND reset inherited plan statistics:
+    the buffer swap of every loop whose next generation joins its last.
+
+    ``localCheckpoint`` alone truncates lineage but copies the optimized
+    plan's statistics into the resulting ``LogicalRDD`` (``originStats``).
+    A loop's next plan embeds the previous generation, and Catalyst's
+    ``SizeInBytesOnlyStatsPlanVisitor.visitJoin`` multiplies children's
+    ``sizeInBytes``, so the inherited estimate roughly *squares*
+    generation-over-generation. After ~20 supersteps the estimate is a
+    BigInteger with millions of digits and the driver spends minutes per
+    superstep inside ``BigInteger.multiplyToomCook3`` — measured 0.8 s ->
+    80 s/step by step 21 on a 5-vertex graph.
+
+    Fix: rebuild the checkpointed ``LogicalRDD`` via its case-class
+    ``copy`` with ``originStats = None``, which resets the estimate to
+    ``spark.sql.defaultSizeInBytes`` every generation while keeping the
+    SAME checkpointed RDD, output partitioning, and ordering — zero extra
+    jobs, co-partitioned joins stay exchange-free. Falls back to the
+    plain checkpoint if the internal plan shape ever changes (correctness
+    unaffected, only planning speed).
+    """
+    ck = df.localCheckpoint(eager=eager)
+    try:
+        jlr = ck._jdf.queryExecution().analyzed()
+        if not jlr.getClass().getName().endswith(".LogicalRDD"):
+            return ck
+        spark = df.sparkSession
+        dflt = lambda i: getattr(jlr, f"copy$default${i}")()  # noqa: E731
+        jvm = spark._jvm
+        none = jvm.scala.Option.empty()
+        stripped = jlr.copy(
+            dflt(1), dflt(2), dflt(3), dflt(4), dflt(5), dflt(6),
+            spark._jsparkSession, none, none,
+        )
+        jds = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, stripped
+        )
+        out = DataFrame(jds, spark)
+        # remember the checkpointed JVM RDD so release is ONE py4j call
+        # instead of an analyzed-plan lookup
+        out._momg_ck_rdd = jlr.rdd()  # noqa: SLF001
+        return out
+    except Exception:
+        return ck
+
+
+def release(df: DataFrame) -> None:
+    """Free the executor storage behind a ``cut``/``localCheckpoint``
+    frame that will never be read again (a superseded loop generation):
+    unpersist the RDD ``cut`` remembered, or else the ``LogicalRDD`` that
+    ``df``'s analyzed plan is. ``DataFrame.unpersist()`` is a no-op here —
+    localCheckpoint is not registered with the cache manager — so without
+    this, every generation of a long fixpoint loop accumulates in the
+    block manager. Best-effort: any other plan is left to LRU eviction.
 
     Releasing a locally-checkpointed RDD makes Spark log a WARN that its
     truncated lineage "cannot be recomputed" — intentional here (the state
@@ -90,7 +137,7 @@ def release_local_checkpoint(spark: SparkSession, df: DataFrame) -> None:
     if not _RDD_WARN_QUIETED:
         _RDD_WARN_QUIETED = True
         try:
-            jvm = spark._jvm
+            jvm = df.sparkSession._jvm
             jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
                 "org.apache.spark.rdd.MapPartitionsRDD",
                 jvm.org.apache.logging.log4j.Level.ERROR,
@@ -98,17 +145,13 @@ def release_local_checkpoint(spark: SparkSession, df: DataFrame) -> None:
         except Exception:
             pass
     try:
-        jplan = df._jdf.queryExecution().analyzed()
-        # walk through unary nodes (e.g. the Project from .drop()) to the
-        # checkpointed LogicalRDD
-        for _ in range(4):
-            if jplan.getClass().getName().endswith(".LogicalRDD"):
-                jplan.rdd().unpersist(False)
+        rdd = getattr(df, "_momg_ck_rdd", None)
+        if rdd is None:
+            jplan = df._jdf.queryExecution().analyzed()
+            if not jplan.getClass().getName().endswith(".LogicalRDD"):
                 return
-            ch = jplan.children()
-            if ch.size() != 1:
-                return
-            jplan = ch.apply(0)
+            rdd = jplan.rdd()
+        rdd.unpersist(False)
     except Exception:
         pass
 
@@ -281,79 +324,21 @@ class GASEngine:
         #: out(K) == R (see _relays_cover)
         self._relays_cover_cache: dict[str, bool] = {}
 
-    # -- lineage + statistics cut (the ping-pong buffer swap) ---------------
-
-    def _cut(self, df: DataFrame, *, eager: bool = True) -> DataFrame:
-        """Materialize, truncate lineage, AND reset inherited plan statistics.
-
-        ``localCheckpoint`` alone truncates lineage but copies the optimized
-        plan's statistics into the resulting ``LogicalRDD`` (``originStats``).
-        Each superstep's plan embeds the previous state several times, and
-        Catalyst's ``SizeInBytesOnlyStatsPlanVisitor.visitJoin`` multiplies
-        children's ``sizeInBytes``, so the inherited estimate roughly
-        *squares* superstep-over-superstep. After ~20 supersteps the estimate
-        is a BigInteger with millions of digits and the driver spends minutes
-        per superstep inside ``BigInteger.multiplyToomCook3`` — measured
-        0.8 s -> 80 s/step by step 21 on a 5-vertex graph (round-1 verdict).
-
-        Fix: rebuild the checkpointed ``LogicalRDD`` via its case-class
-        ``copy`` with ``originStats = None``, which resets the estimate to
-        ``spark.sql.defaultSizeInBytes`` every superstep while keeping the
-        SAME checkpointed RDD, output partitioning, and ordering — zero extra
-        jobs, co-partitioned joins stay exchange-free. Falls back to the
-        plain checkpoint if the internal plan shape ever changes (correctness
-        unaffected, only planning speed).
-        """
-        ck = df.localCheckpoint(eager=eager)
-        try:
-            jlr = ck._jdf.queryExecution().analyzed()
-            if not jlr.getClass().getName().endswith(".LogicalRDD"):
-                return ck
-            dflt = lambda i: getattr(jlr, f"copy$default${i}")()  # noqa: E731
-            jvm = self.spark._jvm
-            none = jvm.scala.Option.empty()
-            stripped = jlr.copy(
-                dflt(1), dflt(2), dflt(3), dflt(4), dflt(5), dflt(6),
-                self.spark._jsparkSession, none, none,
-            )
-            jds = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-                self.spark._jsparkSession, stripped
-            )
-            out = DataFrame(jds, self.spark)
-            # remember the checkpointed JVM RDD so _release_cut is ONE
-            # py4j call instead of a per-superstep analyzed-plan walk
-            out._momg_ck_rdd = jlr.rdd()  # noqa: SLF001
-            return out
-        except Exception:
-            return ck
-
-    def _release_cut(self, df: DataFrame) -> None:
-        rdd = getattr(df, "_momg_ck_rdd", None)
-        if rdd is not None:
-            global _RDD_WARN_QUIETED
-            if not _RDD_WARN_QUIETED:
-                release_local_checkpoint(self.spark, df)  # quiets the logger
-                return
-            try:
-                rdd.unpersist(False)
-                return
-            except Exception:
-                pass
-        release_local_checkpoint(self.spark, df)
-
     def _estimate_edge_rows(self) -> int | None:
         """Row-count estimate for the raw edge frame from Catalyst's
-        size-only statistics — NO job, just one driver-side analysis of
-        the lineage. The size estimate of a parquet scan+project subtree
-        is compressed on-disk bytes of the projected columns; dividing by
-        2 bytes/row deliberately OVER-estimates rows (edge pairs compress
-        to well above 2 bytes), so the derived partition count errs
-        toward more partitions — the safe direction at scale, and the
-        [4, cap] clamp absorbs it on small graphs. Used only to pick the
-        bootstrap partition count in edges_partitioned; the exact count
-        from the persisted copy remains the authority."""
+        statistics — NO job, just one driver-side analysis of the lineage:
+        the exact ``rowCount`` a materialized cached frame reports, else
+        the size estimate over 2 bytes/row. A parquet scan+project's size
+        is compressed on-disk bytes, so this deliberately OVER-estimates
+        rows and the derived partition count errs toward more partitions
+        — the safe direction at scale; the [4, cap] clamp absorbs it on
+        small graphs. Used only to pick the bootstrap partition count in
+        edges_partitioned; the persisted copy's exact count rules."""
         try:
             stats = self._edges_raw._jdf.queryExecution().optimizedPlan().stats()
+            rows = stats.rowCount()
+            if rows.isDefined():
+                return int(str(rows.get()))
             b = int(str(stats.sizeInBytes()))
             if b <= 0:
                 return None
@@ -467,7 +452,7 @@ class GASEngine:
         ``vertex_stats`` cuts and the readbacks cached with them) and keep
         the copies persisted."""
         for df in self._vstats.values():
-            self._release_cut(df)
+            release(df)
         self._vstats.clear()
         self._all_recv.clear()
         self._endpoint_counts_cache.clear()
@@ -514,7 +499,7 @@ class GASEngine:
             # materializes the checkpoint as part of its own job — one
             # fewer standalone setup job per GAS run; later consumers
             # (endpoint counts, v0) read the materialized blocks.
-            self._vstats[direction] = self._cut(
+            self._vstats[direction] = cut(
                 self._passes(direction, ends).groupBy("id").agg(*aggs),
                 eager=False,
             )
@@ -607,9 +592,9 @@ class GASEngine:
         metric observation attached (see _obs_exprs): (cut, observed cut,
         observation). The observed frame's first action materializes the
         cut and fires the observation."""
-        cut = self._cut(applied, eager=False)
+        ck = cut(applied, eager=False)
         obs = Observation()
-        return cut, cut.observe(obs, *self._obs_exprs(rs, cut)), obs
+        return ck, ck.observe(obs, *self._obs_exprs(rs, ck)), obs
 
     def _all_changed(self, rs: RunState, row: dict) -> bool:
         """All-changed regime: the next frontier provably equals the
@@ -859,11 +844,11 @@ class GASEngine:
         # instead of four (eager checkpoint + separate count each). They
         # are made here, not in run(), so that nothing outside the loop
         # holds them; the entry frontier's blocks are freed at loop exit.
-        vertices = self._cut(
+        vertices = cut(
             vertices.repartition(self.num_partitions, F.col("id")),
             eager=False,
         )
-        frontier = entry_frontier = self._cut(frontier, eager=False)
+        frontier = entry_frontier = cut(frontier, eager=False)
         frontier_size = frontier.count()
         rs = self._run_state(program, vertices.count())
         superstep_fn = (
@@ -962,7 +947,7 @@ class GASEngine:
             if hit:
                 spec = nxt
             elif isinstance(nxt, tuple):
-                self._release_cut(nxt[0])  # the discarded pack's lazy cut
+                release(nxt[0])  # the discarded pack's lazy cut
             changed_n = int(row["ch"] or 0)
             traversed = int(row["tr"] or 0)
             step += 1
@@ -985,7 +970,7 @@ class GASEngine:
             stale.append(frontier)
             # the pre-superstep state is now superseded (the new state and
             # frontier are materialized above); free its checkpoint blocks
-            self._release_cut(prev_state)
+            release(prev_state)
             prev_state = applied
             if self.checkpoint_dir and self.checkpoint_every and (
                 step % self.checkpoint_every == 0
@@ -1000,8 +985,8 @@ class GASEngine:
         # read (the result is the last applied cut; the caller's input is
         # upstream of the entry cuts)
         if isinstance(spec, tuple):
-            self._release_cut(spec[0])
-        self._release_cut(entry_frontier)
+            release(spec[0])
+        release(entry_frontier)
         for f in stale:
             f.unpersist()
         return GASResult(

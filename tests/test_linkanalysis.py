@@ -10,6 +10,7 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
+import pytest
 from fixtures import MULTI, MULTI_N, SMALL, SMALL_N, random_graph
 
 from mirrorofmapgraph_spark.operators.hits import hits
@@ -404,32 +405,77 @@ def test_random_walks_same_start_diverge(spark, make_edges):
     assert len(distinct) > 1
 
 
+def cylinder(rings):
+    """Triangulated cylinder of ``rings`` 5-vertex rings: vertex 5r+j,
+    edges (r,j)-(r,j+1 mod 5), (r,j)-(r+1,j) and (r,j)-(r+1,j+1 mod 5).
+    Its 4-truss is empty and the k=4 peel drops one ring per round."""
+    edges = []
+    for r in range(rings):
+        for j in range(5):
+            v = 5 * r + j
+            edges.append((v, 5 * r + (j + 1) % 5, 1.0))
+            if r + 1 < rings:
+                edges.append((v, 5 * (r + 1) + j, 1.0))
+                edges.append((v, 5 * (r + 1) + (j + 1) % 5, 1.0))
+    return edges
+
+
 def test_deep_peel_releases_superseded_checkpoints(spark, make_edges):
     """A >=20-round k-core peel must not accumulate one checkpointed
     generation per round in the block manager (DataFrame.unpersist is a
     no-op on localCheckpoint frames — the loops must release the
-    superseded RDD blocks explicitly, plans/gas.release_local_checkpoint).
-    Only O(1) generations may remain stored after the peel returns."""
-    from mirrorofmapgraph_spark.operators.kcore import kcore
+    superseded RDD blocks explicitly through plans/gas.release). Only O(1)
+    generations may remain stored after the peel returns; a 10-round
+    k-truss peel leaves as many as a 2-round one."""
+    from mirrorofmapgraph_spark.operators.ktruss import ktruss
 
-    before = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+    def stored():
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    before = stored()
     # k=2 on a 52-vertex path peels two endpoints per round -> ~26 rounds
     edges = [(i, i + 1, 1.0) for i in range(51)]
     res = kcore(spark, make_edges(edges), 2, max_rounds=60)
     assert res.count() == 0  # a path has no 2-core
-    after = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+    after = stored()
     assert after - before <= 2, f"peel leaked {after - before} stored RDDs"
+
+    left = []
+    for rings in (2, 10):
+        before = stored()
+        assert ktruss(spark, make_edges(cylinder(rings)), 4).count() == 0
+        left.append(stored() - before)
+    assert left[1] == left[0], f"k-truss peel leaked: {left} stored RDDs"
+
+
+@pytest.mark.parametrize("algo", ["ktruss", "hits"])
+def test_loop_estimate_stays_bounded(spark, make_edges, algo):
+    """A loop whose next generation joins its previous one cuts through
+    plans/gas.cut: a raw localCheckpoint carries the plan's size estimate
+    into the next generation, where Catalyst multiplies it by itself, so
+    the estimate squares every round until the driver runs out of heap.
+    After 10 k-truss rounds or 8 HITS iterations the result's estimate
+    must still fit in a long."""
+    from mirrorofmapgraph_spark.operators.ktruss import ktruss
+
+    edges = make_edges(cylinder(10))
+    if algo == "ktruss":
+        res = ktruss(spark, edges, 4)
+        assert res.count() == 0
+    else:
+        res = hits(spark, edges, iters=8)
+        assert res.count() == 50
+    size = int(str(res._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    assert 0 < size < 2**63, f"size estimate has {len(str(size))} digits"
 
 
 def test_kcore_raises_when_rounds_exhausted(spark, make_edges):
     """A truncated peel is NOT the k-core: its deg values were counted
     against the pre-peel alive set. Refuse to return it silently."""
-    import pytest as _pytest
-
     from mirrorofmapgraph_spark.operators.kcore import kcore
 
     edges = [(i, i + 1, 1.0) for i in range(51)]
-    with _pytest.raises(RuntimeError, match="did not converge"):
+    with pytest.raises(RuntimeError, match="did not converge"):
         kcore(spark, make_edges(edges), 2, max_rounds=3)
 
 

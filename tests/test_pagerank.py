@@ -109,8 +109,8 @@ def test_superstep_wall_flat(spark, make_edges, make_vertices):
     multiply children's sizeInBytes, so the estimate squared every superstep
     and by ~step 20 the driver burned minutes per step in BigInteger
     arithmetic (0.8s -> 80s/step on this exact 5-vertex fixture). With the
-    stats cut (GASEngine._cut) per-step wall must stay flat through ~30
-    partial-frontier supersteps.
+    stats-resetting cut (plans/gas.cut, lazy at every engine site) per-step
+    wall must stay flat through ~30 partial-frontier supersteps.
     """
     res, _ = run_and_compare(
         spark, make_edges, make_vertices, TRIVIAL, TRIVIAL_N, max_iter=200, damping=0.6
@@ -176,8 +176,16 @@ def test_one_debug_record_per_superstep(spark, make_edges, caplog):
     the program name and every SuperstepMetrics field, regime and
     speculation outcome included. The auto-sizing edge bootstrap emits
     one setup record that sets the Catalyst row estimate beside the exact
-    edge count, the boot partition count and the chosen one."""
+    edge count, the boot partition count and the chosen one; the estimate
+    of a persisted, counted edge frame is its exact row count."""
     caplog.set_level(logging.DEBUG, logger="mirrorofmapgraph_spark.plans.gas")
+    cached = make_edges(SMALL).persist()
+    cached.count()
+    pagerank(spark, cached, damping=0.5, collect_metrics=False)
+    cached.unpersist()
+    (setup,) = [r.gas_setup for r in caplog.records if hasattr(r, "gas_setup")]
+    assert setup["row_estimate"] == setup["edges"] == len(SMALL)
+    caplog.clear()
     res = pagerank(spark, make_edges(TRIVIAL), damping=0.5, collect_metrics=False)
     (setup,) = [r.gas_setup for r in caplog.records if hasattr(r, "gas_setup")]
     assert set(setup) == {"row_estimate", "edges", "p_boot", "num_partitions"}

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.gas import GASEngine, GASProgram, GASResult, operator_engine
+from ..plans.gas import GASEngine, GASProgram, GASResult, run_program
 from ..sources.edges import vertex_frame
 
 
@@ -50,35 +50,37 @@ def bfs(
     """result.vertices = (id, depth); depth = -1 for unreached (bfs.h:69).
 
     ``source`` may be a single vertex id (reference semantics,
-    bfs.h:128-131), a list of ids — multi-source BFS: depth = distance
+    bfs.h:128-131), a list or tuple of ids — multi-source BFS: depth = distance
     to the NEAREST source (all sources start at depth 0 in the initial
     frontier; the reference's multi-source harness instead runs 100 random
     single sources sequentially, bfs.cu:340-397 — that harness is
     random_sources() + a loop, exercised in tests/test_graph_algos.py) —
     or a one-column DataFrame of source ids, so a computed source (e.g.
     ``vertices.agg(min(id))``) never forces a driver-side collect inside
-    the measured query. Source ids not present in the graph are ignored.
+    the measured query. Source ids not present in the graph are ignored;
+    ids go through ``int()``, so numpy integers work too.
     """
-    program = bfs_program()
-    with operator_engine(spark, edges, engine, **engine_kwargs) as eng:
-        if vertices is None:
-            # the vertex set comes from the engine's one endpoint-stats
-            # aggregation (see GASEngine.vertex_stats)
-            vertices = eng.vertex_stats(program.direction).select("id")
-        marked = _mark_sources(vertices, source)
+
+    def start(stats: DataFrame) -> tuple[DataFrame, DataFrame]:
+        # depth 0 at the sources, which are the first frontier (bfs.h:69-78)
+        marked = _mark_sources(stats, source)
         v0 = marked.select(
             "id",
             F.when(F.col("_is_src"), F.lit(0)).otherwise(F.lit(-1)).cast("long").alias("depth"),
         )
-        frontier0 = marked.filter(F.col("_is_src")).select("id")
-        return eng.run(program, v0, frontier0, max_iter=max_iter)
+        return v0, marked.filter(F.col("_is_src")).select("id")
+
+    return run_program(
+        spark, edges, bfs_program(), start,
+        vertices=vertices, engine=engine, max_iter=max_iter, **engine_kwargs,
+    )
 
 
-def _mark_sources(
-    vertices: DataFrame, source: int | list[int] | DataFrame
-) -> DataFrame:
-    """vertices + boolean `_is_src`. A DataFrame source is broadcast-joined
-    (no driver action); scalars/lists become an isin predicate."""
+def _mark_sources(vertices: DataFrame, source) -> DataFrame:
+    """``vertices`` plus a boolean ``_is_src``: the source marker of bfs,
+    sssp and personalized PageRank. ``source`` is a one-column DataFrame of
+    ids (broadcast-joined, no driver action), a list or tuple of ids, or
+    one id; ids go through ``int()`` into an ``isin`` predicate."""
     if isinstance(source, DataFrame):
         # dropDuplicates: a repeated source id would fan out the left join
         # and duplicate vertex rows, corrupting the one-row-per-vertex
@@ -88,9 +90,11 @@ def _mark_sources(
         ).dropDuplicates()
         return vertices.join(
             F.broadcast(src_df.withColumn("_s", F.lit(True))), on="id", how="left"
-        ).select("id", F.coalesce(F.col("_s"), F.lit(False)).alias("_is_src"))
-    ids = [int(source)] if isinstance(source, int) else [int(s) for s in source]
-    return vertices.select("id", F.col("id").isin(ids).alias("_is_src"))
+        ).select(
+            *vertices.columns, F.coalesce(F.col("_s"), F.lit(False)).alias("_is_src")
+        )
+    ids = list(source) if isinstance(source, (list, tuple)) else [source]
+    return vertices.withColumn("_is_src", F.col("id").isin([int(i) for i in ids]))
 
 
 def random_sources(

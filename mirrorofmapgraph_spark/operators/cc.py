@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.gas import GASEngine, GASProgram, GASResult, operator_engine
+from ..plans.gas import GASEngine, GASProgram, GASResult, run_program
 
 
 def cc_program() -> GASProgram:
@@ -59,13 +59,14 @@ def connected_components(
     reference, where every vertex 0..n-1 exists; cc.cu:184-192 counts
     components as distinct labels).
     """
-    program = cc_program()
-    with operator_engine(spark, edges, engine, **engine_kwargs) as eng:
-        if vertices is None:
-            # the vertex set comes from the engine's one endpoint-stats
-            # aggregation (see GASEngine.vertex_stats) instead of a separate
-            # vertex_frame distinct over the raw lineage
-            vertices = eng.vertex_stats(program.direction).select("id")
-        v0 = vertices.select("id", F.col("id").alias("label"))
-        frontier0 = vertices.select("id")  # srcVertex() == ALL (cc.h:68-71)
-        return eng.run(program, v0, frontier0, max_iter=max_iter, resume=resume)
+    return run_program(
+        spark, edges, cc_program(), _own_labels,
+        vertices=vertices, engine=engine, max_iter=max_iter, resume=resume,
+        **engine_kwargs,
+    )
+
+
+def _own_labels(stats: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """label[v] = v (cc.h:118-120) with every vertex in the first frontier
+    (srcVertex() == ALL, cc.h:68-71)."""
+    return stats.select("id", F.col("id").alias("label")), stats.select("id")

@@ -19,7 +19,9 @@ broadcast back via crossJoin — never a driver-side collect inside the
 dataflow. A per-iteration lineage cut (plans/gas.cut) keeps the plan size
 O(1) in the iteration count; a raw ``localCheckpoint`` would also square
 the size estimate every iteration (15 iterations on a 50-vertex graph ran
-out of a 1 GiB driver heap).
+out of a 1 GiB driver heap). The last cut is eager, so the result is
+materialized before the edge copies are unpersisted and every earlier
+generation can be released (plans/gas.release).
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.gas import cut
+from ..plans.gas import cut, release
 from ..sources.edges import vertex_frame
 
 
@@ -58,9 +60,10 @@ def hits(
         vertices.select("id", F.lit(1.0).alias("hub"), F.lit(0.0).alias("auth")),
         eager=False,
     )
+    generations = [state]
 
     try:
-        for _ in range(iters):
+        for i in range(iters):
             # authority half-step: gather hub scores along in-edges.
             # Join key is src, so probe the src-partitioned copy — the
             # dst-partitioned copy would re-shuffle the big side per step.
@@ -87,8 +90,11 @@ def hits(
                 state.select("id", "auth")
                 .join(hub, "id", "left")
                 .select("id", F.coalesce("hub", F.lit(0.0)).alias("hub"), "auth"),
-                eager=False,
+                eager=i == iters - 1,
             )
+            generations.append(state)
+        for g in generations[:-1]:
+            release(g)
         return state.select(
             "id", F.round("hub", 6).alias("hub"), F.round("auth", 6).alias("auth")
         )

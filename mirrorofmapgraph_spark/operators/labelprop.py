@@ -35,8 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.gas import GASEngine, GASProgram, GASResult, operator_engine
+from ..plans.gas import GASEngine, GASProgram, GASResult, run_program
 from ..sources.edges import canonical_undirected
+from .cc import _own_labels
 
 
 def _mode_aggregate(msgs: DataFrame) -> DataFrame:
@@ -90,14 +91,8 @@ def label_propagation(
     When passing ``engine=``, build it over the SAME table this function
     uses: ``canonical_undirected(edges)``.
     """
-    program = labelprop_program()
-    und = canonical_undirected(edges)
-    with operator_engine(spark, und, engine, **engine_kwargs) as eng:
-        if vertices is None:
-            # the vertex set comes from the engine's one endpoint-stats
-            # aggregation (see GASEngine.vertex_stats) instead of a separate
-            # vertex_frame distinct re-running the canonical-undirected build
-            vertices = eng.vertex_stats(program.direction).select("id")
-        v0 = vertices.select("id", F.col("id").alias("label"))
-        frontier0 = vertices.select("id")
-        return eng.run(program, v0, frontier0, max_iter=max_iter, resume=resume)
+    return run_program(
+        spark, canonical_undirected(edges), labelprop_program(), _own_labels,
+        vertices=vertices, engine=engine, max_iter=max_iter, resume=resume,
+        **engine_kwargs,
+    )

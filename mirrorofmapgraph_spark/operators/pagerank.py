@@ -21,7 +21,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.gas import GASEngine, GASProgram, GASResult, operator_engine
+from ..plans.gas import GASEngine, GASProgram, GASResult, run_program
+from .bfs import _mark_sources
 
 
 def _rank_program(
@@ -76,39 +77,12 @@ def pagerank_program(damping: float = 0.85, tol: float = 1e-6) -> GASProgram:
     return _rank_program(damping, tol)
 
 
-def _run_rank(
-    spark: SparkSession,
-    edges: DataFrame,
-    program: GASProgram,
+def _every_vertex(
     init: Callable[[DataFrame], DataFrame],
-    *,
-    vertices: DataFrame | None,
-    max_iter: int,
-    engine: GASEngine | None,
-    resume: bool,
-    engine_kwargs: dict,
-) -> GASResult:
-    """Run a PageRank-family program from ``init(stats)``, the initial
-    state over (id, n_src, n_dst[, w_src]), with every vertex in the first
-    frontier (srcVertex() == ALL, PageRank.h:192-195).
-
-    The stats come from the engine's ONE materialized endpoint-stats
-    aggregation over the program's direction (vertex set and out-degrees in a
-    single shuffle, shared with the engine's all-receivers/sender counts)
-    instead of separate vertex_frame/out_degrees shuffles over the raw
-    lineage — measured ~8 s of pre-loop jobs at sf0.1. A caller's
-    ``vertices`` frame is left-joined onto the stats, so its vertices
-    without edges get zero counts."""
-    with operator_engine(spark, edges, engine, **engine_kwargs) as eng:
-        stats = eng.vertex_stats(program.direction)
-        if vertices is not None:
-            stats = vertices.select("id").join(stats, on="id", how="left").select(
-                "id",
-                *(F.coalesce(F.col(c), F.lit(0)).alias(c) for c in stats.columns[1:]),
-            )
-        return eng.run(
-            program, init(stats), stats.select("id"), max_iter=max_iter, resume=resume
-        )
+) -> Callable[[DataFrame], tuple[DataFrame, DataFrame]]:
+    """A PageRank-family start: the state ``init(stats)`` with every vertex
+    in the first frontier (srcVertex() == ALL, PageRank.h:192-195)."""
+    return lambda stats: (init(stats), stats.select("id"))
 
 
 def pagerank(
@@ -130,15 +104,15 @@ def pagerank(
     base 0.15, as in the reference where every allocated vertex holds
     rank even if degree 0).
     """
-    return _run_rank(
+    return run_program(
         spark, edges, pagerank_program(damping=damping, tol=tol),
-        lambda stats: stats.select(
+        _every_vertex(lambda stats: stats.select(
             "id",
             F.lit(1.0 - damping).alias("rank"),
             F.col("n_src").cast("long").alias("out_deg"),
-        ),
-        vertices=vertices, max_iter=max_iter, engine=engine, resume=resume,
-        engine_kwargs=engine_kwargs,
+        )),
+        vertices=vertices, engine=engine, max_iter=max_iter, resume=resume,
+        **engine_kwargs,
     )
 
 
@@ -160,28 +134,24 @@ def personalized_pagerank(
     r_0(v) = base * 1[v in S];  r_{t+1}(v) = base * 1[v in S]
              + damping * sum_{u->v} r_t(u) / out_deg(u)
 
-    The source set rides as a broadcast-joined indicator column, so the
-    big vertex frame is touched once — no driver-side membership test.
+    The sources are marked like bfs's (bfs._mark_sources): a DataFrame is
+    broadcast-joined, ids become an ``isin`` predicate — no driver-side
+    membership test.
     """
-    if isinstance(sources, DataFrame):
-        src_df = sources.select(F.col(sources.columns[0]).alias("id")).dropDuplicates()
-    else:
-        ids = [sources] if not isinstance(sources, (list, tuple)) else list(sources)
-        src_df = spark.createDataFrame([(int(i),) for i in ids], "id long").dropDuplicates()
     base = 1.0 - damping
-    return _run_rank(
-        spark, edges,
-        _rank_program(damping, tol, personalized=True),
-        lambda stats: stats.join(
-            F.broadcast(src_df.withColumn("_is_src", F.lit(1.0))), "id", "left"
-        ).select(
+
+    def init(stats: DataFrame) -> DataFrame:
+        return _mark_sources(stats, sources).select(
             "id",
-            (F.lit(base) * F.coalesce("_is_src", F.lit(0.0))).alias("rank"),
+            F.when(F.col("_is_src"), F.lit(base)).otherwise(F.lit(0.0)).alias("rank"),
             F.col("n_src").cast("long").alias("out_deg"),
-            F.coalesce("_is_src", F.lit(0.0)).alias("src_w"),
-        ),
-        vertices=vertices, max_iter=max_iter, engine=engine, resume=False,
-        engine_kwargs=engine_kwargs,
+            F.col("_is_src").cast("double").alias("src_w"),
+        )
+
+    return run_program(
+        spark, edges, _rank_program(damping, tol, personalized=True),
+        _every_vertex(init),
+        vertices=vertices, engine=engine, max_iter=max_iter, **engine_kwargs,
     )
 
 
@@ -204,14 +174,13 @@ def weighted_pagerank(
     ``edges`` must carry a double ``w`` column (the repo link graph's
     edge multiplicity / affinity). Zero-total-weight vertices behave like
     dangling vertices (contribute nothing)."""
-    return _run_rank(
-        spark, edges,
-        _rank_program(damping, tol, weighted=True),
-        lambda stats: stats.select(
+    return run_program(
+        spark, edges, _rank_program(damping, tol, weighted=True),
+        _every_vertex(lambda stats: stats.select(
             "id",
             F.lit(1.0 - damping).alias("rank"),
             F.col("w_src").cast("double").alias("wout"),
-        ),
-        vertices=vertices, max_iter=max_iter, engine=engine, resume=resume,
-        engine_kwargs=engine_kwargs,
+        )),
+        vertices=vertices, engine=engine, max_iter=max_iter, resume=resume,
+        **engine_kwargs,
     )

@@ -16,7 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.gas import GASEngine, GASProgram, GASResult, operator_engine
+from ..plans.gas import GASEngine, GASProgram, GASResult, run_program
+from .bfs import _mark_sources
 
 _INF = float("inf")
 
@@ -50,18 +51,17 @@ def sssp(
     ``source`` may be one id, a list (multi-source: dist to the nearest
     source; absent ids are ignored), or a one-column DataFrame of ids —
     see bfs.bfs for the semantics."""
-    from .bfs import _mark_sources
 
-    program = sssp_program()
-    with operator_engine(spark, edges, engine, **engine_kwargs) as eng:
-        if vertices is None:
-            # the vertex set comes from the engine's one endpoint-stats
-            # aggregation (see GASEngine.vertex_stats)
-            vertices = eng.vertex_stats(program.direction).select("id")
-        marked = _mark_sources(vertices, source)
+    def start(stats: DataFrame) -> tuple[DataFrame, DataFrame]:
+        # dist 0 at the sources, which are the first frontier (sssp.h:91-99)
+        marked = _mark_sources(stats, source)
         v0 = marked.select(
             "id",
             F.when(F.col("_is_src"), F.lit(0.0)).otherwise(F.lit(_INF)).alias("dist"),
         )
-        frontier0 = marked.filter(F.col("_is_src")).select("id")
-        return eng.run(program, v0, frontier0, max_iter=max_iter)
+        return v0, marked.filter(F.col("_is_src")).select("id")
+
+    return run_program(
+        spark, edges, sssp_program(), start,
+        vertices=vertices, engine=engine, max_iter=max_iter, **engine_kwargs,
+    )

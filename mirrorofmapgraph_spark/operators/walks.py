@@ -43,6 +43,9 @@ from pyspark.sql.window import Window
 
 from ..functions.hashing import MERSENNE31
 
+#: hops between the walk frontier's lineage cuts (localCheckpoint)
+CHECKPOINT_EVERY = 4
+
 
 def indexed_adjacency(edges: DataFrame) -> DataFrame:
     """Distinct (src, dst) plus rn (0-based rank of dst among src's
@@ -91,8 +94,6 @@ def random_walks(
     edges: DataFrame,
     starts: DataFrame,
     length: int,
-    *,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Walk ``length`` hops from each start; returns (walk_id, step,
     vertex) with step 0 = the start vertex. ``starts`` is a (walk_id,
@@ -121,7 +122,7 @@ def random_walks(
         cur = start0.join(degs.withColumnRenamed("src", "vertex"), "vertex", "inner")
         for t in range(1, length + 1):
             hop = _hop(cur, adj, t)
-            if t % checkpoint_every == 0 and t < length:
+            if t % CHECKPOINT_EVERY == 0 and t < length:
                 hop = hop.localCheckpoint(eager=True)
             cur = hop.filter(F.col("deg").isNotNull())
             outs.append(hop.select("walk_id", F.lit(t).alias("step"), "vertex"))

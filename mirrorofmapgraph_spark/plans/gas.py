@@ -50,8 +50,7 @@ import os
 import shutil
 import time
 import uuid
-from collections.abc import Callable, Iterator
-from contextlib import contextmanager
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 import pyarrow.parquet as pq
@@ -156,6 +155,15 @@ def release(df: DataFrame) -> None:
         pass
 
 
+def _fsync(path: str) -> None:
+    """Flush a file's data, or a directory's entries, to disk."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
 @dataclass
 class GASProgram:
     """A vertex program — the analogue of the reference's algorithm struct
@@ -227,13 +235,12 @@ class SuperstepMetrics:
     wall_ms: float
     #: loop branch the step ran in: "all" (gathered over all vertices or
     #: the constant all-receivers set, no per-step expand unless the test
-    #: fails) or "partial" (exact expand + distinct). "" in manifests
-    #: written before the field existed.
-    regime: str = ""
+    #: fails) or "partial" (exact expand + distinct)
+    regime: str
     #: speculation outcome: "hit" when the step ran on a plan prebuilt
     #: during the previous step, "miss" when one was built and discarded,
-    #: "" when none was built (a run's first step, older manifests).
-    spec: str = ""
+    #: "" when none was built (a run's first step)
+    spec: str
 
     def as_dict(self) -> dict:
         return self.__dict__.copy()
@@ -651,16 +658,23 @@ class GASEngine:
         frontier is not stored; load_checkpoint re-derives it from the
         flag. ``partition_lineage`` (rows per written file, one file per
         loop partition) is read from the parquet footers on the driver, so
-        a commit runs one Spark job: the write."""
+        a commit runs one Spark job: the write. The commit, the manifest
+        and then the published rename are fsynced before the sweep, so a
+        power loss cannot leave a manifest naming data that never reached
+        the disk after the commit it replaced is gone."""
         pdir = os.path.join(self.checkpoint_dir, program_name)
         commit = f"step={superstep}-{uuid.uuid4().hex}"
         path = os.path.join(pdir, commit)
         applied.write.mode("errorifexists").parquet(path)
-        partition_lineage = [
-            {"file": f, "rows": pq.read_metadata(os.path.join(path, f)).num_rows}
-            for f in sorted(os.listdir(path))
-            if f.endswith(".parquet")
-        ]
+        partition_lineage = []
+        for f in sorted(os.listdir(path)):
+            if f.endswith(".parquet"):
+                fp = os.path.join(path, f)
+                _fsync(fp)
+                partition_lineage.append(
+                    {"file": f, "rows": pq.read_metadata(fp).num_rows}
+                )
+        _fsync(path)
         manifest = {
             "program": program_name,
             "superstep": superstep,
@@ -672,7 +686,10 @@ class GASEngine:
         tmp = mpath + ".tmp"
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1)
+            f.flush()
+            os.fsync(f.fileno())
         os.replace(tmp, mpath)  # atomic publish
+        _fsync(pdir)
         # the commit is durable now; a directory left undeleted here is
         # swept again by the next publish
         for d in os.listdir(pdir):
@@ -693,9 +710,7 @@ class GASEngine:
         the loop produces is either _next_frontier(applied) or the
         all-receivers set R, and _all_changed picks R only when the two are
         equal. A pull frontier is a subset of R, so one as large as R is R,
-        taken with no expand (the loop's first "all" step reads |R| anyway).
-        Manifests of the older two-dataset format (a state without the flag
-        plus a ``frontier_path``) still load."""
+        taken with no expand (the loop's first "all" step reads |R| anyway)."""
         if not self.checkpoint_dir:
             return None
         mpath = self._manifest_path(program.name)
@@ -704,18 +719,14 @@ class GASEngine:
         with open(mpath) as f:
             m = json.load(f)
         state = self.spark.read.parquet(m["vertices_path"])
-        if "frontier_path" in m:  # the two-dataset format
-            frontier = self.spark.read.parquet(m["frontier_path"])
+        last = m["metrics"][-1]
+        if program.mode == "pull" and (
+            last["frontier_size"] == self._endpoint_counts(program.direction)[1]
+        ):
+            frontier = self._all_receivers(program.direction)
         else:
-            last = m["metrics"][-1]
-            if program.mode == "pull" and (
-                last["frontier_size"] == self._endpoint_counts(program.direction)[1]
-            ):
-                frontier = self._all_receivers(program.direction)
-            else:
-                frontier = self._next_frontier(program, state, last["changed"])
-            state = state.drop("_changed")
-        return m["superstep"], state, frontier, m["metrics"]
+            frontier = self._next_frontier(program, state, last["changed"])
+        return m["superstep"], state.drop("_changed"), frontier, m["metrics"]
 
     # -- the superstep loop ------------------------------------------------
 
@@ -1231,34 +1242,44 @@ class GASEngine:
         return applied.filter(F.col("_changed")).select("id")
 
 
-@contextmanager
-def operator_engine(
+def run_program(
     spark: SparkSession,
     edges: DataFrame,
-    engine: GASEngine | None,
+    program: GASProgram,
+    start: Callable[[DataFrame], tuple[DataFrame, DataFrame]],
+    *,
+    vertices: DataFrame | None = None,
+    engine: GASEngine | None = None,
+    max_iter: int,
+    resume: bool = False,
     **engine_kwargs,
-) -> Iterator[GASEngine]:
-    """The engine a GAS operator runs on: the caller's ``engine``, left as
-    it is, or a new one over ``edges`` whose derived frames are released
-    (``release_derived``) when the block exits. The operator returns its
-    result from inside the block: the result is a materialized local
-    checkpoint (the last applied cut, or the counted entry cut when no
-    superstep runs), so it reads no ``vertex_stats`` frame or frontier the
-    release frees.
+) -> GASResult:
+    """Start a GAS operator and run it: the reference's ``Initialize`` and
+    ``srcVertex()``, then its one enactor loop
+    (enactor_vertex_centric.cuh:2491-2497).
 
-    The new engine's persisted edge copies stay in Spark's cache, so
-    repeated calls over the same edges grow the cache by their results
-    only: Spark's cache manager hands a later engine over an equal plan
-    the same copies instead of a re-read and re-shuffle of the raw edges
-    (measured at sf0.1 in local[4]: a fresh build added 0.4-1.2 s to
-    pagerank3's 1.6-2.0 s).
-    The caller releases them with ``engine.unpersist()`` on an engine it
-    passes, or ``spark.catalog.clearCache()``."""
-    if engine is not None:
-        yield engine
-        return
-    own = GASEngine(spark, edges, **engine_kwargs)
+    ``start(stats)`` returns the entry state and frontier ``(v0, frontier0)``
+    from the engine's endpoint stats over ``program.direction`` (see
+    GASEngine.vertex_stats). A caller's ``vertices`` frame is left-joined
+    onto the stats, so its vertices without edges get zero counts.
+
+    A caller's ``engine`` is left as it is. Otherwise a new engine over
+    ``edges`` runs the program and its derived frames are released
+    (``release_derived``) on return; the result, a materialized local
+    checkpoint, reads none of them. Its persisted edge copies stay in
+    Spark's cache, where a later engine over an equal plan finds them (a
+    fresh build added 0.4-1.2 s to pagerank3's 1.6-2.0 s at sf0.1 in
+    local[4]); ``spark.catalog.clearCache()`` drops them."""
+    eng = engine if engine is not None else GASEngine(spark, edges, **engine_kwargs)
     try:
-        yield own
+        stats = eng.vertex_stats(program.direction)
+        if vertices is not None:
+            stats = vertices.select("id").join(stats, on="id", how="left").select(
+                "id",
+                *(F.coalesce(F.col(c), F.lit(0)).alias(c) for c in stats.columns[1:]),
+            )
+        v0, frontier0 = start(stats)
+        return eng.run(program, v0, frontier0, max_iter=max_iter, resume=resume)
     finally:
-        own.release_derived()
+        if engine is None:
+            eng.release_derived()

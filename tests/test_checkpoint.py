@@ -95,35 +95,6 @@ def test_pagerank_resume_matches_uninterrupted(spark, make_edges, make_vertices,
 
 
 
-def test_resume_from_manifest_without_regime(spark, make_edges, make_vertices, tmp_path):
-    """Manifests written before SuperstepMetrics.regime and .spec existed
-    carry no such keys in their metrics; resume still loads them (both
-    "") and records the regime of every step it runs itself."""
-    e = canonicalize(make_edges(SMALL))
-    ckpt = str(tmp_path / "pr_old_ck")
-    eng1 = GASEngine(spark, e, checkpoint_dir=ckpt, checkpoint_every=1)
-    pagerank(spark, e, vertices=make_vertices(SMALL_N), max_iter=2, engine=eng1)
-
-    mpath = os.path.join(ckpt, "pagerank", "manifest.json")
-    manifest = json.load(open(mpath))
-    for m in manifest["metrics"]:
-        del m["regime"]
-        del m["spec"]
-    json.dump(manifest, open(mpath, "w"))
-
-    eng2 = GASEngine(spark, e, checkpoint_dir=ckpt, checkpoint_every=10)
-    res = pagerank(
-        spark, e, vertices=make_vertices(SMALL_N), engine=eng2, resume=True
-    )
-    assert res.converged
-    assert [(m.regime, m.spec) for m in res.metrics[:2]] == [("", "")] * 2
-    assert all(m.regime in ("all", "partial") for m in res.metrics[2:])
-    assert len(res.metrics) == 2 + res.supersteps
-    expected, _ = pagerank_ref(SMALL_N, SMALL)
-    got = {r["id"]: r["rank"] for r in res.vertices.collect()}
-    for v in range(SMALL_N):
-        assert abs(got[v] - expected[v]) < 1e-6
-
 def test_labelprop_resume_equivalence(spark, make_edges, make_vertices, tmp_path):
     """LPA now runs through the engine (round-2 verdict missing #5):
     interrupt after 1 superstep, resume from the manifest without
@@ -293,36 +264,32 @@ def test_failed_publish_keeps_the_previous_commit(
     ]
 
 
-def test_resume_from_two_dataset_manifest(spark, make_edges, make_vertices, tmp_path):
-    """Manifests of the older format, a vertex state without the _changed
-    flag plus a frontier dataset, still resume."""
-    n = 300
-    edges = random_graph(n=n, m=360, seed=3)
-    e = canonicalize(make_edges(edges))
-    ckpt = str(tmp_path / "cc_old_ck")
-    eng1 = GASEngine(spark, e, checkpoint_dir=ckpt, checkpoint_every=1)
-    partial = connected_components(
-        spark, e, vertices=make_vertices(n), max_iter=2, engine=eng1
-    )
-    assert not partial.converged
+def test_publish_is_fsynced_before_the_swap_and_the_sweep(
+    spark, make_edges, make_vertices, tmp_path, monkeypatch
+):
+    """The manifest swap comes after an fsync (of the commit's data and of
+    the temporary manifest), and the previous commit is deleted only after
+    another fsync makes the swap itself durable."""
+    e = canonicalize(make_edges(SMALL))
+    ckpt = str(tmp_path / "pr_sync_ck")
+    calls = []
 
-    mpath = os.path.join(ckpt, "cc", "manifest.json")
-    manifest = json.load(open(mpath))
-    state = spark.read.parquet(manifest["vertices_path"])
-    old = str(tmp_path / "cc_old_layout")
-    vpath, fpath = os.path.join(old, "vertices"), os.path.join(old, "frontier")
-    state.drop("_changed").write.parquet(vpath)
-    state.filter("_changed").select("id").write.parquet(fpath)
-    manifest.update(vertices_path=vpath, frontier_path=fpath)
-    json.dump(manifest, open(mpath, "w"))
+    def recording(name, fn):
+        def record(*args, **kwargs):
+            calls.append(name)
+            return fn(*args, **kwargs)
 
-    eng2 = GASEngine(spark, e, checkpoint_dir=ckpt, checkpoint_every=5)
-    res = connected_components(
-        spark, e, vertices=make_vertices(n), engine=eng2, resume=True
-    )
-    assert res.converged
-    assert res.metrics[-1].superstep == 2 + res.supersteps
-    expected = cc_ref(n, edges)
-    assert {r["id"]: r["label"] for r in res.vertices.collect()} == {
-        v: expected[v] for v in range(n)
-    }
+        return record
+
+    monkeypatch.setattr(gas.os, "fsync", recording("fsync", os.fsync))
+    monkeypatch.setattr(gas.os, "replace", recording("replace", os.replace))
+    monkeypatch.setattr(gas.shutil, "rmtree", recording("rmtree", gas.shutil.rmtree))
+    eng = GASEngine(spark, e, checkpoint_dir=ckpt, checkpoint_every=1)
+    pagerank(spark, e, vertices=make_vertices(SMALL_N), max_iter=2, engine=eng)
+    monkeypatch.undo()
+
+    assert calls.count("replace") == 2 and "rmtree" in calls
+    first, second = (i for i, c in enumerate(calls) if c == "replace")
+    assert calls[first - 1] == "fsync" and calls[second - 1] == "fsync"
+    sweep = calls.index("rmtree")
+    assert second < sweep and "fsync" in calls[second + 1:sweep]

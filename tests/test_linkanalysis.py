@@ -10,6 +10,7 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
+import numpy as np
 import pytest
 from fixtures import MULTI, MULTI_N, SMALL, SMALL_N, random_graph
 
@@ -131,6 +132,33 @@ def test_ppr_mass_localizes(spark, make_edges, make_vertices):
     got = {r["id"]: r["rank"] for r in res.vertices.collect()}
     assert got[5] == 0.0 and got[6] == 0.0
     assert got[0] > 0 and got[1] > 0 and got[2] > 0
+
+
+def test_source_forms_agree(spark, make_edges, make_vertices):
+    """bfs and personalized PageRank read their sources through one marker:
+    one id, a list, a tuple, a numpy integer and a one-column DataFrame
+    name the same source and give the same answer."""
+    from mirrorofmapgraph_spark.operators.bfs import bfs
+    from mirrorofmapgraph_spark.plans.gas import GASEngine
+
+    e, v = make_edges(SMALL), make_vertices(SMALL_N)
+    eng = GASEngine(spark, e)
+    forms = [0, [0], (0,), np.int64(0), spark.createDataFrame([(0,)], "id long")]
+    ranks = [
+        {r["id"]: r["rank"] for r in personalized_pagerank(
+            spark, e, s, vertices=v, tol=0.0, max_iter=1, engine=eng
+        ).vertices.collect()}
+        for s in forms
+    ]
+    assert ranks[0][0] > 0 and all(r == ranks[0] for r in ranks[1:])
+    depths = [
+        {r["id"]: r["depth"] for r in bfs(
+            spark, e, s, vertices=v, max_iter=2, engine=eng
+        ).vertices.collect()}
+        for s in forms
+    ]
+    assert depths[0][0] == 0 and all(d == depths[0] for d in depths[1:])
+    eng.unpersist()
 
 
 # ---- k-core -----------------------------------------------------------------
@@ -426,26 +454,36 @@ def test_deep_peel_releases_superseded_checkpoints(spark, make_edges):
     no-op on localCheckpoint frames — the loops must release the
     superseded RDD blocks explicitly through plans/gas.release). Only O(1)
     generations may remain stored after the peel returns; a 10-round
-    k-truss peel leaves as many as a 2-round one."""
+    k-truss peel leaves as many as a 2-round one, and 10 HITS iterations
+    as many as 2."""
     from mirrorofmapgraph_spark.operators.ktruss import ktruss
 
     def stored():
-        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+        """Ids of the RDDs with stored blocks: a count could drop when the
+        context cleaner frees an unreferenced RDD of an earlier call."""
+        return {int(i.id()) for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
     before = stored()
     # k=2 on a 52-vertex path peels two endpoints per round -> ~26 rounds
     edges = [(i, i + 1, 1.0) for i in range(51)]
     res = kcore(spark, make_edges(edges), 2, max_rounds=60)
     assert res.count() == 0  # a path has no 2-core
-    after = stored()
-    assert after - before <= 2, f"peel leaked {after - before} stored RDDs"
+    leaked = len(stored() - before)
+    assert leaked <= 2, f"peel leaked {leaked} stored RDDs"
 
     left = []
     for rings in (2, 10):
         before = stored()
         assert ktruss(spark, make_edges(cylinder(rings)), 4).count() == 0
-        left.append(stored() - before)
+        left.append(len(stored() - before))
     assert left[1] == left[0], f"k-truss peel leaked: {left} stored RDDs"
+
+    left = []
+    for iters in (2, 10):
+        before = stored()
+        assert hits(spark, make_edges(SMALL), iters=iters).count() == SMALL_N
+        left.append(len(stored() - before))
+    assert left[1] == left[0], f"HITS leaked: {left} stored RDDs"
 
 
 @pytest.mark.parametrize("algo", ["ktruss", "hits"])

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vectors import cosine, dot, norm  # noqa: F401 (cosine: API)
+from ..plans.gas import release
 
 
 def _lcg_floats(count: int, seed: int) -> list[float]:
@@ -284,9 +285,17 @@ def ivf_centroids(
         .groupBy(id_col)
         .agg(F.count("*").cast("int").alias("cent_id"))
     )
-    cents = seeds.join(F.broadcast(ranks), on=id_col).select(
-        "cent_id", F.col(vec_col).cast("array<double>").alias("cvec")
-    )
+    # centroids are nlist x dim (tiny); materialize each generation once so
+    # the seed-selection corpus pass runs ONCE even though both the corpus
+    # assignment and the query probe reference the frame
+    try:
+        cents = (
+            seeds.join(F.broadcast(ranks), on=id_col)
+            .select("cent_id", F.col(vec_col).cast("array<double>").alias("cvec"))
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        seeds.unpersist()
     for _ in range(lloyd_iters):
         assigned = ivf_assign(corpus, cents, id_col=id_col, vec_col=vec_col)
         pos_means = (
@@ -314,7 +323,7 @@ def ivf_centroids(
         # A centroid whose cell went empty has no pos_means rows; keep its
         # previous vector instead of silently dropping it (nlist must stay
         # stable across Lloyd iterations — it can bound nprobe).
-        cents = (
+        nxt = (
             cents.withColumnRenamed("cvec", "_cvec_old")
             .join(refined, on="cent_id", how="left")
             .select(
@@ -323,10 +332,9 @@ def ivf_centroids(
             )
             .localCheckpoint(eager=True)
         )
-    # centroids are nlist x dim (tiny); materialize so the seed-selection
-    # corpus pass runs ONCE even though both the corpus assignment and the
-    # query probe reference the frame
-    return cents.localCheckpoint(eager=True)
+        release(cents)
+        cents = nxt
+    return cents
 
 
 def ivf_assign(

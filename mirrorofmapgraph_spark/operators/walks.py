@@ -32,7 +32,8 @@ computed frontier-side and participates in the join hash key; the
 alternative — joining on src alone with ``rn == pick % deg`` as a
 post-join residual — scans the full Σ deg(frontier) adjacency per hop
 (a 4M-degree hub costs 4M rows per walk standing on it). State per
-walk is one row; lineage is cut every few hops via localCheckpoint.
+walk is one row; lineage is cut every few hops (plans/gas.cut), and the
+cut generations are released once the result is materialized.
 """
 
 from __future__ import annotations
@@ -42,8 +43,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.hashing import MERSENNE31
+from ..plans.gas import cut, release
 
-#: hops between the walk frontier's lineage cuts (localCheckpoint)
+#: hops between the walk frontier's lineage cuts (plans/gas.cut)
 CHECKPOINT_EVERY = 4
 
 
@@ -112,6 +114,7 @@ def random_walks(
         "dst",
         "left",
     ).persist()
+    cuts = []
     try:
         start0 = starts.select(
             F.col("walk_id").cast("long").alias("walk_id"),
@@ -123,7 +126,8 @@ def random_walks(
         for t in range(1, length + 1):
             hop = _hop(cur, adj, t)
             if t % CHECKPOINT_EVERY == 0 and t < length:
-                hop = hop.localCheckpoint(eager=True)
+                hop = cut(hop, eager=True)
+                cuts.append(hop)
             cur = hop.filter(F.col("deg").isNotNull())
             outs.append(hop.select("walk_id", F.lit(t).alias("step"), "vertex"))
         res = outs[0]
@@ -131,4 +135,7 @@ def random_walks(
             res = res.unionByName(o)
         return res.select("walk_id", "step", "vertex").localCheckpoint(eager=True)
     finally:
+        # the materialized result no longer reads the hop generations
+        for hop in cuts:
+            release(hop)
         adj.unpersist()

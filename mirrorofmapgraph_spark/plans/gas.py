@@ -294,6 +294,9 @@ class GASEngine:
         write_checkpoint). A run that executes no superstep publishes
         nothing: its state is its input. 0 disables durable checkpoints;
         lineage is still truncated per superstep via localCheckpoint.
+    collect_metrics:
+        accepted and ignored; kept so existing callers that pass it do not
+        break. Per-superstep records are always returned in GASResult.
     """
 
     def __init__(
@@ -313,7 +316,6 @@ class GASEngine:
         self.salt_buckets = salt_buckets
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = checkpoint_every
-        self.collect_metrics = collect_metrics
         #: explicit num_partitions pins the loop partitioning; None sizes
         #: it from the edge count when the first edge copy is persisted
         #: (see edges_partitioned).

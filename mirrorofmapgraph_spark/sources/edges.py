@@ -53,7 +53,7 @@ def symmetrize(edges: DataFrame) -> DataFrame:
 def canonical_undirected(edges: DataFrame) -> DataFrame:
     """Undirected edge set as canonical (src < dst) pairs, deduped —
     HALF the rows of ``symmetrize`` for the same semantics when traversed
-    in BOTH directions (GASEngine direction "all"). Each undirected edge
+    in BOTH directions (GASProgram direction "both"). Each undirected edge
     is ONE row, so the dual-pass traversal delivers exactly one message
     per endpoint per undirected edge — identical neighbor multisets to
     the symmetrized table, at half the persisted bytes and the same

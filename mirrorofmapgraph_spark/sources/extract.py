@@ -13,7 +13,9 @@ Parsing convention per language (FIXTURES.md §F1):
 - java:   ``import repoNNNN.modMMM;``
 
 Output: string-keyed link rows (src_key, dst_key) with
-key = 'repoNNNN/modMMM'; encode to dense longs with sources/ids.py.
+key = 'repoNNNN/modMMM'. ``build_link_graph`` encodes them to dense longs
+(each key's rank in sorted key order) with sources/ids.py, every edge
+weighted 1.0.
 """
 
 from __future__ import annotations
@@ -86,5 +88,5 @@ def build_link_graph(source: DataFrame):
 
     source_sha = with_sha256(source)
     raw = extract_edges(source_sha)
-    edges, vertices = encode_edges(raw, "src_key", "dst_key", weight_col=None)
+    edges, vertices = encode_edges(raw)
     return edges, vertices, source_sha

@@ -6,109 +6,53 @@ keys are strings (``repo`` or ``repo/path``); we dictionary-encode them to
 dense longs.
 
 Scale note: the naive ``row_number() OVER (ORDER BY key)`` forces a single
-partition — unusable at 10^12 keys. Instead we range-partition the distinct
-keys, count rows per partition, broadcast the tiny per-partition offset
-table to the driver, and add ``offset + local_index`` via mapInPandas
-(Arrow-vectorized, no per-row Python). One sort shuffle total, fully
-parallel, ids dense and deterministic (= rank in key sort order).
+partition — unusable at 10^12 keys. Instead the distinct keys are sorted
+(one range-partitioned shuffle) and numbered by Spark's built-in
+distributed sequence (``AttachDistributedSequenceExec``, the default index
+of pandas-on-Spark): a ``zipWithIndex`` over the sorted rows, which counts
+each partition once and adds the preceding partitions' counts on the
+executors. Fully parallel, ids dense and deterministic (= rank in key sort
+order) whatever range bounds the sort samples; Spark caches the sorted
+child for the two passes and drops that cache when the query ends.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.internal import InternalFunction
 
 
-def assign_dense_ids(
-    keys: DataFrame, key_col: str = "key", id_col: str = "id", num_partitions: int | None = None
-) -> DataFrame:
-    """Map each distinct ``key_col`` value to a dense long id in
-    [0, n) ordered by key. Returns DataFrame(key_col, id_col).
-    """
-    spark = keys.sparkSession
-    if num_partitions is None:
-        # explicit count so AQE cannot re-plan a different partitioning
-        # between the offsets job and the assignment job
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    distinct = (
-        keys.select(key_col)
+def assign_dense_ids(keys: DataFrame) -> DataFrame:
+    """Map each distinct ``key`` value to a dense long id in [0, n)
+    ordered by key. Returns DataFrame(key, id)."""
+    return (
+        keys.select("key")
         .distinct()
-        .repartitionByRange(num_partitions, key_col)
-        .sortWithinPartitions(key_col)
-        # materialize ONCE: repartitionByRange samples range boundaries per
-        # RDD instantiation, so without pinning, the offsets job and the
-        # mapInPandas job could each sample different boundaries and the
-        # pid->offset map would silently mis-assign ids
-        .localCheckpoint(eager=True)
+        .orderBy("key")
+        .select("key", InternalFunction.distributed_sequence_id().alias("id"))
     )
 
-    # Per-partition row counts -> exclusive prefix offsets (tiny; collected
-    # to the driver — the analogue of the reference's 4-byte frontier-size
-    # readback per superstep, enactor_vertex_centric.cuh:2866-2869).
-    counts = (
-        distinct.select(F.spark_partition_id().alias("pid"))
-        .groupBy("pid")
-        .count()
-        .collect()
-    )
-    sizes = {r["pid"]: r["count"] for r in counts}
-    offsets: dict[int, int] = {}
-    acc = 0
-    for pid in sorted(sizes):
-        offsets[pid] = acc
-        acc += sizes[pid]
 
-    b_offsets = spark.sparkContext.broadcast(offsets)
-    out_schema = f"{key_col} string, {id_col} long"
-
-    def add_ids(pdf_iter):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        base = b_offsets.value.get(pid, 0)
-        seen = 0
-        for pdf in pdf_iter:
-            n = len(pdf)
-            out = pd.DataFrame(
-                {key_col: pdf[key_col], id_col: range(base + seen, base + seen + n)}
-            )
-            seen += n
-            yield out
-
-    return distinct.mapInPandas(add_ids, schema=out_schema)
-
-
-def encode_edges(
-    raw_edges: DataFrame,
-    src_key: str = "src_key",
-    dst_key: str = "dst_key",
-    weight_col: str | None = "w",
-    ids: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Encode a (src_key, dst_key[, w]) string-keyed edge list into
-    (edges(src long, dst long, w double), vertices(id long, key string)).
+def encode_edges(raw_edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Encode a (src_key, dst_key) string-keyed edge list into
+    (edges(src long, dst long, w double), vertices(id long, key string)),
+    every edge with weight 1.0.
 
     Both joins shuffle on the key; when the dictionary is small AQE
-    switches to broadcast at runtime (we don't force it — at 10^12-file
-    scale the dictionary itself is huge and must shuffle-join).
+    replicates it to every task at runtime instead (we don't force that —
+    at 10^12-file scale the dictionary itself is huge and must
+    shuffle-join).
     """
-    if ids is None:
-        all_keys = (
-            raw_edges.select(F.col(src_key).alias("key"))
-            .unionByName(raw_edges.select(F.col(dst_key).alias("key")))
+    ids = assign_dense_ids(
+        raw_edges.select(F.col("src_key").alias("key")).unionByName(
+            raw_edges.select(F.col("dst_key").alias("key"))
         )
-        ids = assign_dense_ids(all_keys, "key", "id")
-    w_expr = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    edges = (
-        raw_edges.withColumn("_w", w_expr)
-        .join(ids.withColumnRenamed("key", src_key), on=src_key)
-        .withColumnRenamed("id", "src")
-        .join(
-            ids.withColumnRenamed("id", "dst").withColumnRenamed("key", dst_key),
-            on=dst_key,
-        )
-        .select("src", "dst", F.col("_w").alias("w"))
     )
-    vertices = ids.select(F.col("id"), F.col("key"))
+    edges = (
+        raw_edges.join(ids.toDF("src_key", "src"), on="src_key")
+        .join(ids.toDF("dst_key", "dst"), on="dst_key")
+        .select("src", "dst", F.lit(1.0).alias("w"))
+    )
+    vertices = ids.select("id", "key")
     return edges, vertices

@@ -42,3 +42,12 @@ def make_edges(spark):
 @pytest.fixture(scope="session")
 def make_vertices(spark):
     return lambda n: vertices_df(spark, n)
+
+
+@pytest.fixture(scope="session")
+def stored_rdds(spark):
+    """Ids of the RDDs with stored blocks. Count growth as new ids: a plain
+    count can drop when the context cleaner frees an unreferenced RDD of an
+    earlier call."""
+    jsc = spark.sparkContext._jsc
+    return lambda: {int(i.id()) for i in jsc.sc().getRDDStorageInfo()}

@@ -59,10 +59,41 @@ def test_dense_ids(spark):
     keys = spark.createDataFrame(
         [(f"k{i:03d}",) for i in (5, 3, 9, 1, 7, 3, 5)], "key string"
     )
-    ids = assign_dense_ids(keys, "key", "id", num_partitions=3)
+    ids = assign_dense_ids(keys)
     rows = sorted((r["key"], r["id"]) for r in ids.collect())
     assert [i for _, i in rows] == [0, 1, 2, 3, 4]  # dense, sorted by key
     assert [k for k, _ in rows] == ["k001", "k003", "k005", "k007", "k009"]
+
+
+def test_dense_ids_are_key_ranks_across_partitions(spark):
+    """5,000 distinct keys, each twice, spread over 7 shuffled input
+    partitions with AQE on: the ids are exactly 0..n-1 in sorted-key order,
+    whatever range bounds the sort samples."""
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        # 7919 is prime, so i * 7919 mod 5000 visits every key once per
+        # 5,000 rows, out of order
+        keys = (
+            spark.range(0, 10_000, numPartitions=7)
+            .select(F.format_string("k%05d", F.col("id") * 7919 % 5000).alias("key"))
+            .repartition(7)
+        )
+        rows = sorted((r["id"], r["key"]) for r in assign_dense_ids(keys).collect())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert [i for i, _ in rows] == list(range(5000))
+    assert [k for _, k in rows] == [f"k{i:05d}" for i in range(5000)]
+
+
+def test_build_link_graph_leaves_nothing_stored(spark, stored_rdds):
+    """Ingest pins nothing of its own: counting an unpersisted edge frame
+    leaves no new stored RDD."""
+    src_tbl = synthesize_repo_table(spark, n_repos=12, files_per_repo=2)
+    before = stored_rdds()
+    edges, _vertices, _ = build_link_graph(src_tbl)
+    assert edges.count() > 0
+    assert stored_rdds() - before == set()
 
 
 def test_build_link_graph_end_to_end(spark):

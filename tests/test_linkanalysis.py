@@ -448,7 +448,7 @@ def cylinder(rings):
     return edges
 
 
-def test_deep_peel_releases_superseded_checkpoints(spark, make_edges):
+def test_deep_peel_releases_superseded_checkpoints(spark, make_edges, stored_rdds):
     """A >=20-round k-core peel must not accumulate one checkpointed
     generation per round in the block manager (DataFrame.unpersist is a
     no-op on localCheckpoint frames — the loops must release the
@@ -458,11 +458,7 @@ def test_deep_peel_releases_superseded_checkpoints(spark, make_edges):
     as many as 2."""
     from mirrorofmapgraph_spark.operators.ktruss import ktruss
 
-    def stored():
-        """Ids of the RDDs with stored blocks: a count could drop when the
-        context cleaner frees an unreferenced RDD of an earlier call."""
-        return {int(i.id()) for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
-
+    stored = stored_rdds
     before = stored()
     # k=2 on a 52-vertex path peels two endpoints per round -> ~26 rounds
     edges = [(i, i + 1, 1.0) for i in range(51)]
@@ -484,6 +480,22 @@ def test_deep_peel_releases_superseded_checkpoints(spark, make_edges):
         assert hits(spark, make_edges(SMALL), iters=iters).count() == SMALL_N
         left.append(len(stored() - before))
     assert left[1] == left[0], f"HITS leaked: {left} stored RDDs"
+
+
+def test_random_walks_release_hop_checkpoints(spark, make_edges, stored_rdds):
+    """random_walks cuts the frontier's lineage every CHECKPOINT_EVERY hops;
+    once the result is materialized those hop generations are released, so
+    a 40-hop walk leaves as many stored RDDs as a 4-hop one (the result)."""
+    from mirrorofmapgraph_spark.operators.walks import random_walks
+
+    edges = make_edges(random_graph(n=50, m=500, seed=41))
+    sdf = spark.createDataFrame([(i, i % 50) for i in range(20)], "walk_id long, vertex long")
+    left = []
+    for length in (4, 40):
+        before = stored_rdds()
+        assert random_walks(spark, edges, sdf, length).count() > 20
+        left.append(len(stored_rdds() - before))
+    assert left[1] == left[0], f"random walks leaked: {left} stored RDDs"
 
 
 @pytest.mark.parametrize("algo", ["ktruss", "hits"])

@@ -777,6 +777,21 @@ def test_ivf_lloyd_keeps_empty_cells(spark):
     assert all(r["cvec"] is not None and len(r["cvec"]) > 0 for r in rows)
 
 
+def test_ivf_lloyd_releases_superseded_generations(spark, stored_rdds):
+    """ivf_centroids unpersists its seeds and releases every Lloyd
+    generation but the one it returns: 3 iterations leave as many stored
+    RDDs as 1."""
+    from mirrorofmapgraph_spark.operators.similarity import ivf_centroids
+
+    emb = _planted_clusters(spark, per_cluster=20)
+    left = []
+    for iters in (1, 3):
+        before = stored_rdds()
+        assert ivf_centroids(emb, nlist=8, lloyd_iters=iters).count() == 8
+        left.append(len(stored_rdds() - before))
+    assert left[1] == left[0], f"Lloyd loop leaked: {left} stored RDDs"
+
+
 # ---- deterministic sampling ---------------------------------------------------
 
 def _affine_ref(key, seed=1):
